@@ -204,21 +204,15 @@ object Bench {
     // column on the executors, then discards the rows — the honest
     // full-plan cost, still with zero driver/disk transfer. (Streaming-
     // only shapes that reject batch writes fall back to count.)
-    // SPARK_GRAFT_ACTION=count keeps the pre-round-9 action measurable
-    // for continuity with the rounds 1-8 series and the 43.6 s anchor.
-    val legacyCount = sys.env.get("SPARK_GRAFT_ACTION").contains("count")
     def runOnce(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame):
         Double = {
       val t0 = System.nanoTime()
       val ok = try {
         val df = fn(spark, sfDir)
-        if (legacyCount) { df.count(); () }
-        else {
-          try df.write.mode("overwrite").format("noop").save()
-          catch { case _: org.apache.spark.sql.AnalysisException =>
-            df.count(); ()
-          }
+        try df.write.mode("overwrite").format("noop").save()
+        catch { case _: org.apache.spark.sql.AnalysisException =>
+          df.count(); ()
         }
         true
       }

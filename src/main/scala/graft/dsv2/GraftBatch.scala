@@ -113,11 +113,12 @@ class GraftBatch(root: String, version: Long, required: StructType,
         // ONLY ITS OWN file's shard executor-side — a per-file hash
         // anti-join whose build side never touches the driver. The
         // default cap is deliberately LOW: the broadcast path pays
-        // the driver collect + Set build PER QUERY (DvDoorScale, 20M
-        // rows/16 files: 50k entries broadcast 2.9 s ≈ distributed
-        // 2.7 s; 500k: 7.1 vs 3.0; 6M: 77 vs 9.4 — distributed
-        // dominates everywhere except trivially small sets, where
-        // the one-time staging job isn't worth its ~1-2 s).
+        // the driver collect + Set build PER QUERY (BENCH_LOG round
+        // 20, 20M rows/16 files: 50k entries broadcast 2.9 s ≈
+        // distributed 2.7 s; 500k: 7.1 vs 3.0; 6M: 77 vs 9.4 —
+        // distributed dominates everywhere except trivially small
+        // sets, where the one-time staging job isn't worth its
+        // ~1-2 s).
         val maxEntries = s.conf
           .get("spark.graft.dsv2.maxDvBroadcastEntries", "131072")
           .toLong

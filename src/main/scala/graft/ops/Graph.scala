@@ -85,10 +85,9 @@ object Graph {
     OpCache.track(tradeGraph(s, d).repartition(col("src")))
 
   /** |N| per corpus snapshot, computed once per JVM (content-keyed
-    * like the artifact it derives from): pagerank needs the exact
-    * count for its teleport term anyway, and the broadcast gate reads
-    * the same scalar — the memo makes the gate free for the OTHER
-    * loops instead of charging each one a distinct-count job. */
+    * like the artifact it derives from): pagerank's teleport term and
+    * uniform start need the exact count, and the memo spares repeat
+    * invocations on the same corpus a distinct-count job. */
   private val nodeCountCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private def nodeCount(s: org.apache.spark.sql.SparkSession, d: String,
@@ -97,53 +96,17 @@ object Graph {
       Snapshot.of(Seq(s"$d/orders.parquet", s"$d/lineitem.parquet")),
       _ => java.lang.Long.valueOf(nodes.count())).longValue()
 
-  /** Round-20 optimization: the per-round STATE side (ranks / dist /
-    * labels — |N| rows against the stationary |E|-row edge table) may
-    * be broadcast when it provably fits, which removes the state-side
-    * exchange AND the join stage barrier from every round — the guide
-    * §3.1 "broadcast the side that fits" choice made adaptively. The
-    * queries gate on the ACTUAL node count (a 1-row scalar they
-    * already compute or whose distinct-build they already pay), not
-    * on an estimate: `auto` broadcasts below
-    * `spark.graft.graphBroadcastMaxNodes` (default 4M rows — ~160 MB
-    * built, comfortably under the 8 GB/512M-row broadcast cap;
-    * `on`/`off` force either side for A/B and deployments). Results
-    * are identical either way because every per-round aggregate here
-    * is order-independent by construction (DECIMAL sums, min, count,
-    * min_by).
-    *
-    * DEFAULT IS OFF — the GraphAb interleaved median-of-5 A/Bs
-    * (sf0.1, local[32], BENCH_LOG round-20-opt) measured a WASH:
-    * first session pagerank off=8.35 on=6.06 (drifting box, pairwise
-    * 4/5 on), calm session off=4.88 on=5.04, BFS 2.78/2.74, and LPA
-    * lost all 5 pairs under broadcast in both sessions (2.84→3.48,
-    * 3.36→3.73 — two aggregations per round amortize the removed
-    * exchange worse than they pay the per-round broadcast build). In
-    * local mode the state exchange is a memcpy; the conf stays for
-    * real clusters, where a per-round |N|-row network shuffle is the
-    * thing `auto` would remove. */
-  private[graft] def stateBroadcast(
-      s: org.apache.spark.sql.SparkSession, n: => Long): Boolean =
-    s.conf.getOption("spark.graft.graphStateBroadcast")
-      .getOrElse("off") match {
-      case "on" => true
-      case "off" => false
-      case _ => n <= s.conf
-        .getOption("spark.graft.graphBroadcastMaxNodes")
-        .map(_.toLong).getOrElse(4000000L)
-    }
-
   /** ONE damped, quantized PageRank iteration: ranks(node, rank) ⋈
     * outEdges on the source key, contributions grouped by destination
     * — a single keyed shuffle, equi joins only (plan-asserted in
-    * PlanSpec on exactly this un-checkpointed plan with the default
-    * non-broadcast state side). */
+    * PlanSpec on exactly this un-checkpointed plan). The |N|-row state
+    * side shuffles every round; broadcasting it measured a wash for
+    * pagerank/BFS and a loss for LPA in local mode (BENCH_LOG
+    * "round 20 — optimization round 1", OPTIMIZATION_r20.md change 2). */
   def iterate(ranks: org.apache.spark.sql.DataFrame,
-      oe: org.apache.spark.sql.DataFrame, teleport: Double,
-      bcastState: Boolean = false)
+      oe: org.apache.spark.sql.DataFrame, teleport: Double)
       : org.apache.spark.sql.DataFrame =
-    oe.join(if (bcastState) broadcast(ranks) else ranks,
-        oe("src") === ranks("node"))
+    oe.join(ranks, oe("src") === ranks("node"))
       .groupBy(col("dst"))
       .agg(round(lit(teleport) + lit(damping) *
         sum(round(col("rank") / col("deg"), 12)
@@ -158,12 +121,9 @@ object Graph {
     * relaxation). Linear in |E|, equi join only (plan-asserted
     * un-checkpointed in PlanSpec). */
   def spIterate(dist: org.apache.spark.sql.DataFrame,
-      oe: org.apache.spark.sql.DataFrame,
-      bcastState: Boolean = false)
+      oe: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val frontier = dist.where(col("dist") < Inf)
-    val cand = oe.join(
-        if (bcastState) broadcast(frontier) else frontier,
+    val cand = oe.join(dist.where(col("dist") < Inf),
         oe("src") === dist("node"))
       .select(oe("dst").as("node"), (col("dist") + 1L).as("dist"))
     dist.union(cand).groupBy("node").agg(min(col("dist")).as("dist"))
@@ -176,11 +136,9 @@ object Graph {
     * partials, no per-group sort/window (plan-asserted un-checkpointed
     * in PlanSpec). */
   def lpIterate(labels: org.apache.spark.sql.DataFrame,
-      oe: org.apache.spark.sql.DataFrame,
-      bcastState: Boolean = false)
+      oe: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
-    oe.join(if (bcastState) broadcast(labels) else labels,
-        oe("src") === labels("node"))
+    oe.join(labels, oe("src") === labels("node"))
       .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("c"))
       .groupBy(col("dst"))
       .agg(min_by(col("label"),
@@ -202,7 +160,6 @@ object Graph {
       // the only driver-side scalar is |N| — one count aggregate, the
       // same class as the dedup-cluster loop's convergence probe
       val n = nodeCount(s, d, nodes)
-      val bc = stateBroadcast(s, n)
       val teleport = 0.15 / n // driver-computed double, same IEEE value
       // as the oracle's CAST(0.15 AS DOUBLE) / n
       var ranks = nodes.select(col("src").as("node"),
@@ -210,14 +167,12 @@ object Graph {
       for (_ <- 1 to iters)
         // localCheckpoint truncates lineage so 5 rounds don't
         // compound into one mega-plan (the dedup-cluster loop's
-        // 61 s→9 s lesson). LAZY by default — the checkpoint computes
-        // inside the next round's first action instead of paying a
-        // separate materialization job per round; round-13 interleaved
-        // median-of-5 A/B (LpaAb, BENCH_LOG) confirmed the round-11
-        // single measurement (lazy wins at sf0.1 and ×10), with the
-        // conf as the deployment override.
-        ranks = iterate(ranks, oe, teleport, bc)
-          .localCheckpoint(eagerCkpt(s))
+        // 61 s→9 s lesson). LAZY — the checkpoint computes inside the
+        // next round's first action instead of paying a separate
+        // materialization job per round; the round-13 interleaved
+        // median-of-5 A/B (BENCH_LOG round 13) confirmed the round-11
+        // single measurement (lazy wins at sf0.1 and ×10).
+        ranks = iterate(ranks, oe, teleport).localCheckpoint(false)
       ranks.orderBy(col("rank").desc, col("node")).limit(20)
     }),
 
@@ -231,20 +186,15 @@ object Graph {
     // nodes (dist ≤ spIters by construction).
     "graph_shortest_path" -> ((s, d) => {
       val oe = partitionedEdges(s, d)
-      val nodes = oe.select(col("src")).distinct()
-      // |N| is the broadcast gate's input — the same 1-row scalar
-      // class as pagerank's teleport count, and memoized per corpus
-      // so only the first family query pays the count job
-      val bc = stateBroadcast(s, nodeCount(s, d, nodes))
-      var dist = nodes
+      var dist = oe.select(col("src")).distinct()
         .select(col("src").as("node"),
           when(col("src") === SpSeed, lit(0L)).otherwise(lit(Inf))
             .as("dist"))
       for (_ <- 1 to spIters)
-        // lazy by default, like the pagerank loop above (dist is
-        // referenced twice per round, so truncation stays MANDATORY —
-        // only the per-round materialization job is elective)
-        dist = spIterate(dist, oe, bc).localCheckpoint(eagerCkpt(s))
+        // lazy, like the pagerank loop above (dist is referenced
+        // twice per round, so truncation is MANDATORY — only the
+        // per-round materialization job is elective)
+        dist = spIterate(dist, oe).localCheckpoint(false)
       dist.where(col("dist") < Inf).orderBy(col("dist"), col("node"))
     }),
 
@@ -266,22 +216,12 @@ object Graph {
       // linearly), so both are correct and the choice is purely
       // measured. Round 12 adopted the compound plan on a single
       // measurement and the per-run MEDIAN regressed 3.3→5.3 s; the
-      // round-13 median-of-5 A/B (LpaAb, BENCH_LOG round-13) decides
-      // the default below, with the conf as the deployment override.
-      val ckpt = s.conf.getOption("spark.graft.lpaCheckpoint")
-        .map(_.toBoolean).getOrElse(LpaCheckpointDefault)
-      // GraphAb round-20: LPA stays on the SHUFFLE path at every scale
-      // — the interleaved A/B had broadcast losing all 5 pairs (median
-      // 2.84 vs 3.48 s): a 3-round loop with TWO aggregations per
-      // round amortizes the removed exchange worse than it pays the
-      // per-round broadcast build. Conf still forces it for A/Bs.
-      val bc = s.conf.getOption("spark.graft.graphStateBroadcast")
-        .contains("on")
+      // round-13 median-of-5 A/B (BENCH_LOG round 13) adopted the
+      // per-round lazy checkpoint below.
       var labels = oe.select(col("src")).distinct()
         .select(col("src").as("node"), col("src").as("label"))
       for (_ <- 1 to lpIters) {
-        labels = lpIterate(labels, oe, bc)
-        if (ckpt) labels = labels.localCheckpoint(false)
+        labels = lpIterate(labels, oe).localCheckpoint(false)
       }
       labels.groupBy(col("label").as("community"))
         .agg(count(lit(1)).as("size"))
@@ -308,10 +248,9 @@ object Graph {
       val pairs = tradeGraph(s, d)
         .where(col("src") < col("dst"))
         .select(col("src").as("doc_a"), col("dst").as("doc_b"))
-      // `spark.graft.ccAlgo`: auto (default — hook below
-      // spark.graft.ccAutoEdges, star above; the three-session A/B in
-      // BENCH_LOG round-14 put the crossover between ×10 and ×30 of
-      // this fixture), or "hook"/"star" to force. Both exact at any
+      // hook below spark.graft.ccAutoEdges, star above (the
+      // three-session A/B in BENCH_LOG round 14 put the crossover
+      // between ×10 and ×30 of this fixture). Both exact at any
       // diameter, both label = component min.
       LlmExtra.componentsAuto(s, pairs, dedupePerRound = true)
         .groupBy(col("label").as("component"))
@@ -323,21 +262,6 @@ object Graph {
         .orderBy(col("size").desc, col("component")).limit(20)
     })
   )
-
-  /** Default for the LPA per-round lazy checkpoint, set by the
-    * round-13 median-of-5 A/B (see `graft.LpaAb` + BENCH_LOG):
-    * overridable per session via `spark.graft.lpaCheckpoint`. */
-  private[graft] val LpaCheckpointDefault = true
-
-  /** Eager-vs-lazy switch for the pagerank/BFS per-round checkpoints
-    * (`spark.graft.graphCheckpointEager`): default LAZY, confirmed by
-    * the round-13 interleaved median A/B — kept as a conf so the A/B
-    * runs (and deployments with long idle gaps between rounds, where
-    * eager bounds executor-memory residency earlier) can flip it
-    * without a rebuild. */
-  private def eagerCkpt(s: org.apache.spark.sql.SparkSession): Boolean =
-    s.conf.getOption("spark.graft.graphCheckpointEager")
-      .exists(_.toBoolean)
 
   /** BFS round bound / LPA round count / infinity sentinel — fixed so
     * the DuckDB oracle unrolls the same loops as plain CTEs. */

@@ -369,10 +369,6 @@ object Joins {
     })
   )
 
-  /** The two materialized tables behind `join_dpp_pruned`, shared with
-    * PlanSpec's metric assertions: a day-partitioned fact (event_id,
-    * value) and a tiny per-day dim (day, n_events), both content-keyed
-    * under the artifact root. Returns (factDir, dimDir). */
   /** The two bucketed catalog tables `join_bucketed_colocated` joins,
     * written ONCE per (session, corpus) — round-20 optimization: the
     * key used to DROP + rewrite both tables on every invocation,
@@ -395,14 +391,13 @@ object Joins {
     // collide): a memo hit must still resolve in THIS session's
     // catalog, else s.table(to) throws and the key's NonFatal fallback
     // silently degrades to the plain shuffle join (round-20 advice).
-    // Verify-and-evict before trusting a hit; the rebuild below then
+    // Verify and rebuild in ONE compute per key, so no caller can read
+    // a stale pair between another's check and eviction; the rebuild
     // runs the full stale-location hygiene.
-    Option(bucketedBuilt.get(memoKey)).foreach { case (to, tc) =>
-      if (!s.catalog.tableExists(to) || !s.catalog.tableExists(tc))
-        bucketedBuilt.remove(memoKey)
-    }
-    bucketedBuilt.computeIfAbsent(
-      memoKey, _ => {
+    bucketedBuilt.compute(memoKey, (_, prev) =>
+      if (prev != null && s.catalog.tableExists(prev._1) &&
+          s.catalog.tableExists(prev._2)) prev
+      else {
         val (to, tc) =
           (s"graft_bkt_orders_$tag", s"graft_bkt_customer_$tag")
         // Hygiene: drop bucketed tables from OTHER sf tags so repeated
@@ -442,6 +437,10 @@ object Joins {
       })
   }
 
+  /** The two materialized tables behind `join_dpp_pruned`, shared with
+    * PlanSpec's metric assertions: a day-partitioned fact (event_id,
+    * value) and a tiny per-day dim (day, n_events), both content-keyed
+    * under the artifact root. Returns (factDir, dimDir). */
   private[graft] def dppTables(s: org.apache.spark.sql.SparkSession,
       d: String): (String, String) = {
     val tag = new java.io.File(d).getName

@@ -484,8 +484,8 @@ object LlmExtra {
     * with star's non-outlier samples clustered at 29-34 s while hook
     * spreads 32-108 s) — the hook's contraction rewrite cost grows
     * with edge multiplicity on dense graphs while star's
-    * distinct()-collapsed rounds stay ~linear in |E|. So: `auto`
-    * (default) takes one count of `pairs` and picks hook below
+    * distinct()-collapsed rounds stay ~linear in |E|. So the dispatch
+    * takes one count of `pairs` and picks hook below
     * `spark.graft.ccAutoEdges`, star above. THE UNIT IS ROWS OF
     * `pairs` (undirected candidate pairs, half the directed edge
     * count): the round-14 A/B tied at ×10 = 6M pairs and star won at
@@ -493,23 +493,20 @@ object LlmExtra {
     * (×20 = 12.0M pairs, interleaved median-of-5 under 64 GiB) came
     * back hook 24.1 s vs star 32.3 s — a clear hook win, so the
     * crossover lies in (12M, 18M] and the default threshold is 15M,
-    * the midpoint of the TIGHTENED band in pair units. `spark.graft
-    * .ccAlgo=hook|star` forces either. Callers pass a materialized or
-    * cheap-to-rescan `pairs` (both call sites do: the persisted dedup
-    * pair list, the parquet-artifact-backed trade graph), so the
-    * dispatch count never re-runs an expensive pipeline. */
+    * the midpoint of the TIGHTENED band in pair units. Callers pass a
+    * materialized or cheap-to-rescan `pairs` (both call sites do: the
+    * persisted dedup pair list, the parquet-artifact-backed trade
+    * graph), so the dispatch count never re-runs an expensive
+    * pipeline. */
   private[graft] def componentsAuto(s: org.apache.spark.sql.SparkSession,
       pairs: org.apache.spark.sql.DataFrame,
-      dedupePerRound: Boolean = false): org.apache.spark.sql.DataFrame =
-    s.conf.getOption("spark.graft.ccAlgo") match {
-      case Some("star") => connectedComponentsStar(pairs)
-      case Some("hook") => connectedComponents(pairs, dedupePerRound)
-      case _ =>
-        val thresh = s.conf.getOption("spark.graft.ccAutoEdges")
-          .map(_.toLong).getOrElse(15000000L)
-        if (pairs.count() > thresh) connectedComponentsStar(pairs)
-        else connectedComponents(pairs, dedupePerRound)
-    }
+      dedupePerRound: Boolean = false)
+      : org.apache.spark.sql.DataFrame = {
+    val thresh = s.conf.getOption("spark.graft.ccAutoEdges")
+      .map(_.toLong).getOrElse(15000000L)
+    if (pairs.count() > thresh) connectedComponentsStar(pairs)
+    else connectedComponents(pairs, dedupePerRound)
+  }
 
   /** Connected components by ALTERNATING STAR CONTRACTION (Kiveris et
     * al., "Connected Components in MapReduce and Beyond", SoCC'14 —

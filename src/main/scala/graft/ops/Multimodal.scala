@@ -77,6 +77,15 @@ object Multimodal {
     val n = docs.sparkSession.sessionState.conf.numShufflePartitions
     docs.select(col("doc_id")).repartition(n, col("doc_id"))
       .as[Long].mapPartitions { it =>
+      // per-partition init site: ImageIO defaults to a DISK-backed
+      // stream cache — every write creates and deletes a temp FILE,
+      // which serializes concurrent codec tasks on the filesystem
+      // (measured round 21: the 32-way parallel decode ran SLOWER than
+      // single-task until this was off). Payloads here are tiny
+      // in-memory byte arrays — cache off is pure memory, same bytes
+      // out. The setting is JVM-GLOBAL (every ImageIO user in this
+      // executor sees it); idempotent and thread-safe.
+      javax.imageio.ImageIO.setUseCache(false)
       it.map { id =>
         val bytes = pngBytes(id)
         MediaRecord(id, "image", bytes, bytes.length)
@@ -88,13 +97,6 @@ object Multimodal {
     * (id·7, id·13, id·31) mod 256 — arithmetic any SQL engine can
     * replay, so the decode below is checkable without a codec. */
   private[graft] def pngBytes(id: Long): Array[Byte] = {
-    // ImageIO defaults to a DISK-backed stream cache: every write
-    // creates and deletes a temp FILE, which serializes concurrent
-    // codec tasks on the filesystem (measured round-21: the 32-way
-    // parallel decode ran SLOWER than single-task until this was off).
-    // Payloads here are tiny in-memory byte arrays — cache off is pure
-    // memory, same bytes out. JVM-global, idempotent, thread-safe.
-    javax.imageio.ImageIO.setUseCache(false)
     val w = 1 + (id % 4).toInt
     val h = 1 + (id % 3).toInt
     val rgb = (((id * 7) % 256).toInt << 16) |
@@ -119,7 +121,7 @@ object Multimodal {
     import media.sparkSession.implicits._
     media.mapPartitions { it =>
       // per-partition init site: memory-only stream cache (see
-      // pngBytes — the default disk cache serializes parallel tasks
+      // toPngMedia — the default disk cache serializes parallel tasks
       // on temp-file churn)
       javax.imageio.ImageIO.setUseCache(false)
       it.map { r =>
@@ -183,15 +185,13 @@ object Multimodal {
     require(w != null, "no WAVE AudioFileWriter provider in this JVM")
     w
   }
-  /** Exposed for graft.CodecAb's no-Spark concurrency micro-bench. */
-  private[graft] def readAudioForAb(payload: Array[Byte])
-      : javax.sound.sampled.AudioInputStream = readAudio(payload)
   /** AudioSystem.getAudioInputStream's own reader loop, minus its
     * per-call registry lock — plus a memo of the LAST provider that
     * accepted a payload, tried first: the registry lists several
     * readers ahead of the matching one, and every miss costs a thrown
-    * UnsupportedAudioFileException per row (round-21 CodecAb bisect:
-    * the provider loop, not the RIFF parse, dominated header decode).
+    * UnsupportedAudioFileException per row (round-21 codec bisect,
+    * VERDICT.md item 2: the provider loop, not the RIFF parse,
+    * dominated header decode).
     * Identical accept semantics — a memo miss falls through to the
     * full loop. */
   @volatile private var lastGoodReader = -1

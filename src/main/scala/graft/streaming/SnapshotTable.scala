@@ -3256,7 +3256,8 @@ object SnapshotTable {
     // memoized per (root, version, kept-set): committed versions are
     // immutable, and Catalyst asks for relation stats on EVERY query —
     // without the memo each front-door query pays one manifest-agg
-    // Spark job (~50-80 ms of pure driver latency, DoorAb round 19).
+    // Spark job (~50-80 ms of pure driver latency, BENCH_LOG round 19
+    // native DSv2 batch read A/B).
     // Keyed on a STRONG (128-bit) digest of the file list, not its
     // 32-bit hashCode (round-20 advice): a hashCode collision between
     // two kept sets would serve the wrong size to Catalyst — a large

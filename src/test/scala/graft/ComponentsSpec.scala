@@ -93,7 +93,7 @@ class ComponentsSpec extends AnyFunSuite {
   }
 
   test("componentsAuto dispatches by edge count: hook below the " +
-      "threshold, star above, and an explicit ccAlgo overrides both") {
+      "threshold, star above") {
     import spark.implicits._
     import graft.ops.LlmExtra
     // a shape where the two algorithms take a DIFFERENT number of
@@ -118,14 +118,6 @@ class ComponentsSpec extends AnyFunSuite {
       === hookRounds)
     // threshold 0: auto must pick star
     assert(withConf("spark.graft.ccAutoEdges" -> "0")(
-      rounds(LlmExtra.componentsAuto(spark, df).collect()))
-      === starRounds)
-    // explicit algo beats any threshold
-    assert(withConf("spark.graft.ccAutoEdges" -> "0",
-      "spark.graft.ccAlgo" -> "hook")(
-      rounds(LlmExtra.componentsAuto(spark, df).collect()))
-      === hookRounds)
-    assert(withConf("spark.graft.ccAlgo" -> "star")(
       rounds(LlmExtra.componentsAuto(spark, df).collect()))
       === starRounds)
   }

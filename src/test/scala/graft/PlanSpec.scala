@@ -329,18 +329,30 @@ class PlanSpec extends AnyFunSuite {
     // scale and ships nothing but doc_id — guide §2.5/§8), but the
     // exchange must sit BELOW the codec in the plan so no payload byte
     // ever crosses it, and no join may sneak in
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     for (key <- Seq("llm_multimodal_image", "llm_multimodal_audio")) {
-      val p = plan(q(key))
+      val df = q(key)
+      val p = plan(df)
       assert(!p.contains("Join"), s"$key: ${p.take(2000)}")
       assert("\\(\\d+\\) Exchange".r.findAllIn(p).size <= 2,
         s"$key: ${p.take(2000)}")
       assert("hashpartitioning".r.findAllIn(p).size <= 1,
         s"$key: ${p.take(2000)}")
-      // the hash exchange's input schema is the bare id — the payload
-      // (generated above it) cannot cross a shuffle
-      val hashIdx = p.indexOf("hashpartitioning(doc_id")
-      assert(hashIdx >= 0,
-        s"$key: id repartition missing: ${p.take(2000)}")
+      // the hash exchange's output is exactly the bare id — the
+      // payload (generated above it) cannot cross a shuffle. Checked on
+      // the exchange node itself: a plan that shuffled full payload
+      // rows partitioned by doc_id would still match the text above.
+      val hashExchanges = new AdaptiveSparkPlanHelper {}.collect(
+          df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec
+            if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+      }
+      assert(hashExchanges.size == 1,
+        s"$key: expected one hash exchange: ${p.take(2000)}")
+      assert(hashExchanges.head.output.map(_.name) == Seq("doc_id"),
+        s"$key: hash exchange carries ${hashExchanges.head.output}")
     }
   }
 
