@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Recorded warm per-query medians (seconds, sf0.1 noop action):
     * the round-14 cross-sample medians over the five noop samples
@@ -123,26 +122,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The "No Partition Defined for Window operation" warning fires for
-    // the three CONSTANT-KEY windows (ads_gmv_cumulative, win_gapfill,
-    // ads_anomaly_zscore) whose inputs are plan-asserted in PlanSpec to
-    // be calendar-bounded aggregates (≤|days|/|hours| rows) — proven
-    // benign there, so the per-query spam carries no information in
-    // bench logs. Scoped to the one logger; every other WARN still
-    // surfaces. (The logger is the CONCRETE exec class; the message
-    // lives in WindowExecBase — set both.)
-    Seq("org.apache.spark.sql.execution.window.WindowExec",
-      "org.apache.spark.sql.execution.window.WindowExecBase")
-      .foreach(n => org.apache.logging.log4j.core.config.Configurator
-        .setLevel(n, org.apache.logging.log4j.Level.ERROR))
+    val spark = Harness.session()
     // Untimed warmup: JIT, codegen compilation, and parquet reader init
     // land here instead of inside the first timed query. The default
     // set first-touches every fact table a cold box distorts most
@@ -190,59 +170,7 @@ object Bench {
     }
     probeOnce() // untimed: codegen + JIT for the probe plan itself
     val probeStart = probeMedian()
-    // Optional comma-separated subset for local iteration (the driver
-    // never sets this, so round benches always cover the full inventory).
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).toSet)
-    // A failed query reports -1.0 (never a fake timing) and lands in
-    // "errors" so a broken plan can't masquerade as a fast one.
-    // Timed action: a NOOP WRITE, not count() — count() lets Catalyst
-    // eliminate row-count-preserving work (a left join against a
-    // unique-keyed aggregate, window columns nobody filters on), so an
-    // op like llm_dedup_substring_prune would "bench" an emptied plan.
-    // The noop sink executes every operator and materializes every
-    // column on the executors, then discards the rows — the honest
-    // full-plan cost, still with zero driver/disk transfer. (Streaming-
-    // only shapes that reject batch writes fall back to count.)
-    def runOnce(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame):
-        Double = {
-      val t0 = System.nanoTime()
-      val ok = try {
-        val df = fn(spark, sfDir)
-        try df.write.mode("overwrite").format("noop").save()
-        catch { case _: org.apache.spark.sql.AnalysisException =>
-          df.count(); ()
-        }
-        true
-      }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // Drop per-query persist() blocks so cached signature/assignment
-      // tables don't accumulate in the block manager across the
-      // full-inventory session (each query pays its own cache build
-      // above, inside its timing — no cross-query subsidy). release()
-      // also frees the driver-side OpCache handle list, which
-      // clearCache alone leaves growing for the session. FIVE designed
-      // exceptions survive this hygiene as materialized artifacts
-      // under the graft.ops.Artifacts root (content-keyed, built once
-      // per JVM or shared root): the dedup cluster table
-      // (llm_dedup_clusters/prune), the trade-graph edge table
-      // (graph_connected_components/pagerank/shortest_path/
-      // label_propagation), the capped shingle index
-      // (llm_dedup_ngram_jaccard/incremental + the cluster build), the
-      // IVF centroids (llm_dedup_embcos/knn_ivf/semdedup), and the
-      // binary fixture dir (source_binary_files). Whichever family
-      // member runs FIRST in a session pays its build — exactly like
-      // production reading a materialized table — so ~12 keys' timings
-      // depend on in-session order; alphabetical execution makes that
-      // order (and therefore the per-key medians) stable run-to-run.
-      graft.ops.OpCache.release(spark)
-      spark.catalog.clearCache()
-      if (ok) dt else -1.0
-    }
+    val only = Harness.only
     var reruns = 0
     // Materialized-artifact builds are production MATERIALIZATION jobs,
     // not per-query cost: the trade-graph edge table (orders ⋈ lineitem
@@ -307,6 +235,8 @@ object Bench {
     val includeBucketed =
       only.forall(_.contains("join_bucketed_colocated"))
     val includeJdbc = only.forall(_.exists(jdbcKeys))
+    // per-chain wall seconds of the phase, for the full record
+    var chains: Seq[(String, Double)] = Nil
     val artifactLines: Seq[(String, Double)] =
       // round 16: the merge-table builds used to bill themselves to
       // whichever reader key ran first alphabetically (r15 billed
@@ -318,7 +248,7 @@ object Bench {
       // exactly as the adjacent comment always claimed
       artifactLine("table_artifact_build",
         includeTables || includeLlm || includeBucketed || includeJdbc) {
-        graft.ops.Scans.tableArtifactBuild(spark, sfDir,
+        chains = graft.ops.Scans.tableArtifactBuild(spark, sfDir,
           includeTables = includeTables,
           includeGraph = includeGraph,
           includeLlm = includeLlm,
@@ -328,44 +258,45 @@ object Bench {
       artifactLine("graph_artifact_build", includeGraph) {
         graft.ops.Graph.tradeGraph(spark, sfDir); ()
       }
-    val results = artifactLines ++ SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .map { case (name, fn) =>
-        val dt1 = runOnce(name, fn)
-        // Cold-run guard: a first timing far above the recorded warm
-        // median (3×, floor 2 s; unknown keys: 2 s flat) is re-measured
-        // once and the better time reported. On a warm box this almost
-        // never triggers (3× the recorded median clears normal
-        // variance), so warm totals are unchanged; on a cold/contended
-        // box — the round-10 driver artifact measured map-CPU keys
-        // 5-25× high on its single cold pass — the query's one-time
-        // init cost lands in the discarded first sample instead of the
-        // round artifact. Failures (-1) never rerun: a broken plan
-        // stays loud.
-        val limit = RefMedians.get(name)
-          .map(m => math.max(3.0 * m, 2.0)).getOrElse(2.0)
-        val dt = if (dt1 >= 0 && dt1 > limit) {
+    val timer = new Harness.Timer(spark)
+    val queries = SparkEntry.queries
+    val runs = Harness.keys.map { name =>
+      def run() = timer.time(name)(queries(name)(spark, sfDir))
+      val r1 = run()
+      // Cold-run guard: a first timing far above the recorded warm
+      // median (3×, floor 2 s; unknown keys: 2 s flat) is re-measured
+      // once and the better time reported. On a warm box this almost
+      // never triggers (3× the recorded median clears normal
+      // variance), so warm totals are unchanged; on a cold/contended
+      // box — the round-10 driver artifact measured map-CPU keys
+      // 5-25× high on its single cold pass — the query's one-time
+      // init cost lands in the discarded first sample instead of the
+      // round artifact. Failures (-1) never rerun: a broken plan
+      // stays loud.
+      val limit = RefMedians.get(name)
+        .map(m => math.max(3.0 * m, 2.0)).getOrElse(2.0)
+      val r = if (r1.ok && r1.wall > limit) {
+        reruns += 1
+        val r2 = run()
+        if (!r2.ok) r1
+        else if (math.min(r1.wall, r2.wall) > limit) {
+          // min-of-2 can't survive a bad SESSION (round-14 driver
+          // artifact: LPA 30.3 s vs a 5.6 s cross-sample median,
+          // both passes inflated by box state) — take a third
+          // sample and report the MEDIAN: a genuine regression
+          // still shows (all three high), a drifting box stops
+          // polluting the round artifact with one outlier
           reruns += 1
-          val dt2 = runOnce(name, fn)
-          if (dt2 < 0) dt1
-          else if (math.min(dt1, dt2) > limit) {
-            // min-of-2 can't survive a bad SESSION (round-14 driver
-            // artifact: LPA 30.3 s vs a 5.6 s cross-sample median,
-            // both passes inflated by box state) — take a third
-            // sample and report the MEDIAN: a genuine regression
-            // still shows (all three high), a drifting box stops
-            // polluting the round artifact with one outlier
-            reruns += 1
-            val dt3 = runOnce(name, fn)
-            if (dt3 < 0) math.min(dt1, dt2)
-            else Seq(dt1, dt2, dt3).sorted.apply(1)
-          } else math.min(dt1, dt2)
-        } else dt1
-        (name, dt)
-      }
+          val r3 = run()
+          if (!r3.ok) Seq(r1, r2).minBy(_.wall)
+          else Seq(r1, r2, r3).sortBy(_.wall).apply(1)
+        } else Seq(r1, r2).minBy(_.wall)
+      } else r1
+      (name, r)
+    }
+    val results = artifactLines ++ runs.map { case (k, r) => (k, r.wall) }
     val probeEnd = probeMedian()
-    def fmt(v: Double): String =
-      "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    import Harness.{fmt, obj}
     // CONTENTION FLAG (round-18 verdict item 7: the round-17 driver
     // session recorded reruns=35 and 3-4× per-key outliers — a poor
     // record of the code that still passed the gate; readers had to
@@ -380,15 +311,17 @@ object Bench {
     val contended = reruns > 8 || math.min(probeStart, probeEnd) > 0.40
     val probeJson = s""""probe":{"start_sec":${fmt(probeStart)},""" +
       s""""end_sec":${fmt(probeEnd)}},"contended":$contended"""
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
+    val qs = obj(results.map { case (k, v) => (k, fmt(v)) })
     val errs = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = results.map(_._2).filter(_ >= 0).sum
     val line =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
         s""""queries":$qs,"errors":$errs,"reruns":$reruns,$probeJson,""" +
-        s""""sf":"$sfDir"}"""
+        s""""sf":"$sfDir","split":${obj(runs.map { case (k, r) =>
+          (k, r.json) })},""" +
+        s""""artifact_chains":${obj(chains.map { case (k, v) =>
+          (k, fmt(v)) })}}"""
     // The full per-query line is ~5 KB at 139 keys, but the round
     // artifact captures only the LAST 2000 chars of the run log — a
     // full-map println has never fit, so every BENCH_r*.json carried
@@ -404,9 +337,8 @@ object Bench {
     // clobbered file, losing per-key data for ~180 of 210 keys)
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
       "/tmp/graft_bench.json")
-    val slow = results.filter(_._2 >= 0).sortBy(-_._2).take(30)
-      .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
+    val slow = obj(results.filter(_._2 >= 0).sortBy(-_._2).take(30)
+      .map { case (k, v) => (k, fmt(v)) })
     val shortLine =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
         s""""n_queries":${results.size},"queries":$slow,"errors":$errs,""" +

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Driver-metadata ceiling rehearsal (round-16; the round-15 verdict's
   * missing #3): SnapshotTable plans versions by COLLECTING the stats
@@ -45,13 +45,7 @@ object ManifestScale {
     val ns =
       if (args.length > 1) args.drop(1).map(_.toInt).toSeq
       else Seq(1000, 10000, 100000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     import org.apache.spark.sql.functions._
     import graft.streaming.SnapshotTable
 
@@ -68,7 +62,7 @@ object ManifestScale {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
     def median(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.size / 2) }
-    def fmt(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    import Harness.fmt
     def usedMb(): Long = {
       System.gc()
       val r = Runtime.getRuntime

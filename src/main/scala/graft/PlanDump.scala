@@ -1,12 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for declared queries into a directory —
   * the optimization rounds' plan-evidence artifact (plans/r<k>/), so
   * plan-shape claims (join strategy, Exchange count, PushedFilters)
-  * are reviewable without running Spark. Same session shape as Bench
-  * (master/extensions/shuffle partitions from the driver contract
-  * envs); `SPARK_GRAFT_QUERIES` selects a subset, args = [outDir, tag].
+  * are reviewable without running Spark. Same session shape as Bench;
+  * `SPARK_GRAFT_QUERIES` selects a subset, args = [outDir, tag].
   * NOTE: queries whose body runs actions (iterative loops, builds)
   * execute them here too — the dumped plan is the one the returned
   * DataFrame would execute under the bench's noop sink. */
@@ -14,33 +12,21 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val outDir = args.headOption.getOrElse("plans/r20")
     val tag = if (args.length > 1) args(1) else "plan"
-    val keys = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).toSeq)
-      .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    keys.foreach { k =>
-      SparkEntry.queries.get(k).foreach { f =>
-        try {
-          val df = f(spark, sfDir)
-          val txt = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          val w = new java.io.PrintWriter(s"$outDir/${k}_$tag.txt")
-          try w.println(txt) finally w.close()
-          println(s"[plandump] wrote $outDir/${k}_$tag.txt")
-        } catch { case e: Throwable =>
-          println(s"[plandump] $k failed: ${e.getMessage}")
-        }
+    Harness.keys.foreach { k =>
+      try {
+        val txt = SparkEntry.queries(k)(spark, sfDir).queryExecution
+          .explainString(org.apache.spark.sql.execution.FormattedMode)
+        val w = new java.io.PrintWriter(s"$outDir/${k}_$tag.txt")
+        try w.println(txt) finally w.close()
+        println(s"[plandump] wrote $outDir/${k}_$tag.txt")
+      } catch { case e: Throwable =>
+        println(s"[plandump] $k failed: ${e.getMessage}")
       }
+      finally Harness.release(spark)
     }
     spark.stop()
   }

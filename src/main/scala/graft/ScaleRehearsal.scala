@@ -145,14 +145,8 @@ object ScaleRehearsal {
   def main(args: Array[String]): Unit = {
     val mults = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 10)
     val root = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
+    import Harness.{fmt, obj}
     // decontaminate rides along: its benchmark slice (doc_id % 17) grows
     // WITH the corpus here — harsher than production's fixed eval set —
     // so a linear curve on this shape upper-bounds the real deployment.
@@ -161,10 +155,11 @@ object ScaleRehearsal {
       "llm_dedup_substring", "llm_dedup_substring_prune",
       "llm_dedup_canonical", "llm_similarity_knn", "llm_knn_ivf",
       "llm_dedup_paragraph")
-    // warmup: codegen + parquet reader init outside the timed region
-    try SparkEntry.queries("llm_text_stats")(spark, "/root/testdata/sf0.1")
+    // warmup: codegen + parquet reader init outside the timed region,
+    // on the first multiplier's own corpus — it exists by construction
+    synthesize(spark, s"$root/x${mults.head}", mults.head)
+    SparkEntry.queries("llm_text_stats")(spark, s"$root/x${mults.head}")
       .count()
-    catch { case _: Throwable => () }
     val lines = mults.map { mult =>
       val dir = s"$root/x$mult"
       synthesize(spark, dir, mult)
@@ -191,8 +186,7 @@ object ScaleRehearsal {
         val n = obs.get.get("n").map(_.asInstanceOf[Long]).getOrElse(-1L)
         val cc = if (name == "llm_dedup_clusters")
           graft.ops.LlmExtra.lastCcRounds else -1
-        graft.ops.OpCache.release(spark)
-        spark.catalog.clearCache()
+        Harness.release(spark)
         (name, dt, n, cc)
       }
       // index shape stats: per-(source,h) df on the CAPPED index (what
@@ -203,11 +197,8 @@ object ScaleRehearsal {
         .agg(max(col("df")).as("max_df"),
           sum(col("df") * (col("df") - 1) / 2).as("cand_pairs"))
         .first()
-      val secs = timings.map(t => s""""${t._1}":${"%.2f"
-        .formatLocal(java.util.Locale.ROOT, t._2)}""")
-        .mkString("{", ",", "}")
-      val rows = timings.map(t => s""""${t._1}":${t._3}""")
-        .mkString("{", ",", "}")
+      val secs = obj(timings.map(t => (t._1, fmt(t._2))))
+      val rows = obj(timings.map(t => (t._1, t._3)))
       val ccRounds = timings.collectFirst {
         case (_, _, _, cc) if cc >= 0 => cc }.getOrElse(-1)
       // graph-iterative rehearsal on synthesized trade tables of the
@@ -234,21 +225,17 @@ object ScaleRehearsal {
         // blowup when a segment of the timing curve exceeds linear
         val cc = if (name == "graph_connected_components")
           graft.ops.LlmExtra.lastCcRounds else -1
-        graft.ops.OpCache.release(spark)
-        spark.catalog.clearCache()
+        Harness.release(spark)
         (name, dt, cc)
       }
       val gRounds = gTimings.collectFirst {
         case (_, _, cc) if cc >= 0 => cc }.getOrElse(-1)
-      val gSecs = gTimings.map(t => s""""${t._1}":${"%.2f"
-        .formatLocal(java.util.Locale.ROOT, t._2)}""")
-        .mkString("{", ",", "}")
+      val gSecs = obj(gTimings.map(t => (t._1, fmt(t._2))))
       val line = s"""{"rehearsal":{"mult":$mult,"docs":${docs.count()},""" +
         s""""secs":$secs,"rows":$rows,"cc_rounds":$ccRounds,""" +
         s""""max_df":${dfStats.getLong(0)},""" +
         s""""cand_pairs":${dfStats.getDouble(1).toLong},""" +
-        s""""edges":$nEdges,"graph_build":${"%.2f"
-          .formatLocal(java.util.Locale.ROOT, graphBuild)},""" +
+        s""""edges":$nEdges,"graph_build":${fmt(graphBuild)},""" +
         s""""graph_cc_rounds":$gRounds,"graph_secs":$gSecs}}"""
       println(line)
       line

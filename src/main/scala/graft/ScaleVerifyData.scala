@@ -42,15 +42,7 @@ object ScaleVerifyData {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val mult = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     def keyDomain(table: String, key: String): Long =
       graft.ops.Tables.t(spark, src, table)

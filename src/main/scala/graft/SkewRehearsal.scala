@@ -95,27 +95,26 @@ object SkewRehearsal {
     // synth step skips dirs with a _SUCCESS marker, so a version bump is
     // what invalidates fixtures left by earlier rounds
     val root = sys.env.getOrElse("SPARK_GRAFT_SKEW_DIR", "/tmp/graft_skew_v2")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
+    import Harness.{fmt, obj}
     // ads_traffic_board rides the same bot-user fixture: its
     // sessionization window sorts the one nHot-row user partition —
     // O(n log n) per key, so t(x10) must stay ~10× t(x1)
     val ops = Seq("cep_absence_timeout", "ads_attribution",
       "llm_dedup_substring", "join_interval_left_bucketed",
       "ads_traffic_board")
+    // SPARK_GRAFT_SKEW_TRIO_ONLY=1 skips the five standard op
+    // timings (and the doc fixture they alone need) — for iterating
+    // on the skew-join trio at multipliers where the op sweep would
+    // dominate the wall clock
+    val trioOnly = sys.env.get("SPARK_GRAFT_SKEW_TRIO_ONLY").contains("1")
     // warmup (codegen + reader init outside the timed region) runs
     // against the FIRST mult's own synthesized fixture — it exists by
     // construction, unlike a hardcoded corpus path that silently makes
     // the first timed op absorb the init cost on boxes without it
     val warmDir = s"$root/x${mults.head}"
     synthEvents(spark, warmDir, 10000L * mults.head)
-    if (!sys.env.get("SPARK_GRAFT_SKEW_TRIO_ONLY").contains("1")) {
+    if (!trioOnly) {
       synthDocs(spark, warmDir, 10000L * mults.head)
       try SparkEntry.queries("cep_absence_timeout")(
         spark, warmDir).write.mode("overwrite")
@@ -125,12 +124,6 @@ object SkewRehearsal {
     val lines = mults.map { mult =>
       val nHot = 10000L * mult
       val dir = s"$root/x$mult"
-      // SPARK_GRAFT_SKEW_TRIO_ONLY=1 skips the five standard op
-      // timings (and the doc fixture they alone need) — for iterating
-      // on the skew-join trio at multipliers where the op sweep would
-      // dominate the wall clock
-      val trioOnly = sys.env.get("SPARK_GRAFT_SKEW_TRIO_ONLY")
-        .contains("1")
       synthEvents(spark, dir, nHot)
       if (!trioOnly) synthDocs(spark, dir, nHot)
       val timings = (if (trioOnly) Seq.empty[String] else ops).map { name =>
@@ -141,15 +134,11 @@ object SkewRehearsal {
           .write.mode("overwrite").format("noop").save()
         val dt = (System.nanoTime() - t0) / 1e9
         val n = obs.get.get("n").map(_.asInstanceOf[Long]).getOrElse(-1L)
-        graft.ops.OpCache.release(spark)
-        spark.catalog.clearCache()
+        Harness.release(spark)
         (name, dt, n)
       }
-      val secs = timings.map(t => s""""${t._1}":${"%.2f"
-        .formatLocal(java.util.Locale.ROOT, t._2)}""")
-        .mkString("{", ",", "}")
-      val rows = timings.map(t => s""""${t._1}":${t._3}""")
-        .mkString("{", ",", "}")
+      val secs = obj(timings.map(t => (t._1, fmt(t._2))))
+      val rows = obj(timings.map(t => (t._1, t._3)))
       // Skew-JOIN trio (round-12 verdict item 4): the same hot-user
       // fact ⋈ per-user-dim join computed three ways on this fixture —
       // (a) one shuffle join with ALL skew handling off (the hazard:
@@ -191,8 +180,7 @@ object SkewRehearsal {
         val t0 = System.nanoTime()
         df.write.mode("overwrite").format("noop").save()
         val dt = (System.nanoTime() - t0) / 1e9
-        graft.ops.OpCache.release(spark)
-        spark.catalog.clearCache()
+        Harness.release(spark)
         dt
       }
       def withConfs(kv: (String, String)*)(body: => Double): Double = {
@@ -219,10 +207,8 @@ object SkewRehearsal {
       val tSalt = withConfs(noBcast,
         "spark.sql.adaptive.skewJoin.enabled" -> "false")(
         timedNoop(salted()))
-      val trio = s"""{"plain_smj":${"%.2f".formatLocal(
-        java.util.Locale.ROOT, tPlain)},"aqe_skew":${"%.2f".formatLocal(
-        java.util.Locale.ROOT, tAqe)},"manual_salt":${"%.2f".formatLocal(
-        java.util.Locale.ROOT, tSalt)}}"""
+      val trio = obj(Seq("plain_smj" -> fmt(tPlain),
+        "aqe_skew" -> fmt(tAqe), "manual_salt" -> fmt(tSalt)))
       val line =
         s"""{"skew":{"mult":$mult,"hot_rows":$nHot,"secs":$secs,""" +
           s""""rows":$rows,"skew_join_trio":$trio}}"""

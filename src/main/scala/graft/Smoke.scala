@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Local smoke runner: prints the flagship `SparkEntry.entry` result
   * (driver gate: rows > 0 at sf0.001) and each query's row count at the
@@ -7,26 +6,15 @@ import org.apache.spark.sql.SparkSession
 object Smoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val e = SparkEntry.entry(spark)
     e.show(10, truncate = false)
     println(s"ENTRY_ROWS=${e.count()}")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val n = try fn(spark, sfDir).count().toString
+    Harness.keys.foreach { name =>
+      val n = try SparkEntry.queries(name)(spark, sfDir).count().toString
       catch { case ex: Throwable => s"ERROR ${ex.getMessage.take(80)}" }
+      finally Harness.release(spark)
       println(s"$name: $n")
-      // same between-queries hygiene as Bench/Verify: ops persist()
-      // lazily and never see their final action; release drops the
-      // OpCache-tracked handles so driver-side refs don't pile up either
-      graft.ops.OpCache.release(spark)
-      spark.catalog.clearCache()
     }
     spark.stop()
   }

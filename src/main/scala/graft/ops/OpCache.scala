@@ -6,9 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * unpersist in-op: `queries` entries return UNEXECUTED builders (the
   * driver contract), so the op never observes the caller's action and
   * can't follow clusterTable's persist→action→unpersist pattern for a
-  * table the returned plan still references. Shipped runners (Bench,
-  * Verify, Smoke, the shared test fixture) already clear globally via
-  * `spark.catalog.clearCache()` between queries; a library caller
+  * table the returned plan still references. The shipped runners clear
+  * between queries through `graft.Harness.release`; a library caller
   * composing ops calls `release(session)` after its own action instead
   * of accumulating blocks across calls. */
 object OpCache {
@@ -32,6 +31,11 @@ object OpCache {
     handles.updateWith(p.sparkSession)(l => Some(p :: l.getOrElse(Nil)))
     activeScope.get().headOption.foreach(sc => sc.mine = p :: sc.mine)
     p
+  }
+
+  /** How many handles are tracked for `s` (for hygiene tests). */
+  private[graft] def tracked(s: SparkSession): Int = synchronized {
+    handles.get(s).map(_.size).getOrElse(0)
   }
 
   /** Unpersist every intermediate tracked for `s`. */

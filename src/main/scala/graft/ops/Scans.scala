@@ -1539,18 +1539,14 @@ object Scans {
     * line (like `graph_artifact_build`): a table BUILD is a production
     * materialization job, not per-query cost, and billing it to
     * whichever key runs first alphabetically would make that key's
-    * median an artifact of session order. */
+    * median an artifact of session order. Returns each build's wall
+    * seconds, in submission order. */
   def tableArtifactBuild(s: org.apache.spark.sql.SparkSession,
       d: String, includeGraph: Boolean = false,
       includeLlm: Boolean = false,
       includeBucketed: Boolean = false,
       includeTables: Boolean = true,
-      includeJdbc: Boolean = false): Unit = {
-    def tr(n: String)(f: => Any): Unit = {
-      val t0 = System.nanoTime(); f
-      if (sys.env.contains("GRAFT_ARTIFACT_TIMING"))
-        println(f"ABUILD $n ${(System.nanoTime() - t0) / 1e9}%.2f")
-    }
+      includeJdbc: Boolean = false): Seq[(String, Double)] = {
     // The chains are mutually independent (distinct content-keyed
     // roots; only `clone` consumes another build's output, so it runs
     // in the same task after its source). Each chain is a sequence of
@@ -1635,27 +1631,28 @@ object Scans {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(nThreads)
     try {
       val futures = builds.map { case (n, f) =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
+        pool.submit(new java.util.concurrent.Callable[(String, Double)] {
+          def call(): (String, Double) = {
             // jobs submitted from pool threads need the session's
             // thread-locals (active session for resolution, job
             // description for the UI)
             org.apache.spark.sql.SparkSession.setActiveSession(s)
             s.sparkContext.setJobDescription(s"artifact build: $n")
-            tr(n)(f())
+            val t0 = System.nanoTime()
+            f()
+            (n, (System.nanoTime() - t0) / 1e9)
           }
         })
       }
       // surface the FIRST real failure (unwrapped), not the wrapper —
       // the bench's artifactLine catch records it as the line's error
-      futures.foreach { fu =>
+      futures.map { fu =>
         try fu.get()
         catch { case e: java.util.concurrent.ExecutionException =>
           throw Option(e.getCause).getOrElse(e)
         }
       }
     } finally { pool.shutdown() }
-    ()
   }
 
   /** The 3-version merge CHAIN `table_cdf_consume` folds changelogs

@@ -316,13 +316,18 @@ class ArtifactStoreSpec extends AnyFunSuite {
       catch { case t: Throwable => err.set(t) })
     loser.start()
     // wait until the loser's build ran and its temp sibling is gone
-    // (post-rename, post-nested-cleanup) — it is now in the wait loop
+    // (post-rename, post-nested-cleanup) — it is now in the wait loop.
+    // buildsPerformed ticks BEFORE the build creates the temp, so the
+    // temp only counts as gone once it has been seen
     val fam = new java.io.File(bare, "spec")
     val dl = System.nanoTime() + 60L * 1000 * 1000 * 1000
     def tempGone = !fam.listFiles().exists(_.getName.contains(".build-"))
-    while ((Artifacts.buildsPerformed.get() == before || !tempGone) &&
-        System.nanoTime() < dl)
+    var tempSeen = false
+    while (!(tempSeen && tempGone) && System.nanoTime() < dl) {
+      tempSeen ||= !tempGone
       Thread.sleep(10)
+    }
+    assert(tempSeen && tempGone)
     assert(Artifacts.buildsPerformed.get() > before)
     // THE defect the round-13 review flagged: the old loser created
     // _SUCCESS here, exposing the winner's partial part files to every

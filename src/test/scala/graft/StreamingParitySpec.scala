@@ -2163,4 +2163,22 @@ class StreamingParitySpec extends AnyFunSuite {
         new java.io.File(ck))
     }
   }
+
+  test("rateEvents: the live rate source's schema and value domains") {
+    val q = Streams.rateEvents(spark, rowsPerSecond = 100)
+      .writeStream.format("memory").queryName("rate_events").start()
+    val out = spark.table("rate_events")
+    try {
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (out.count() < 50 && System.nanoTime() < deadline)
+        Thread.sleep(100)
+    } finally q.stop()
+    assert(out.count() >= 50)
+    assert(out.schema.map(f => (f.name, f.dataType.simpleString)) == Seq(
+      "event_id" -> "bigint", "user_id" -> "bigint", "ts" -> "timestamp",
+      "ts_us" -> "bigint", "event_type" -> "string", "value" -> "double"))
+    assert(out.where(col("user_id") < 0 || col("user_id") >= 50).isEmpty)
+    assert(out.select("event_type").distinct().collect().map(_.getString(0))
+      .toSet == Set("view", "click", "purchase", "signup", "error"))
+  }
 }

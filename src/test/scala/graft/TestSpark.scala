@@ -21,9 +21,8 @@ object TestSpark {
   def q(name: String): DataFrame = {
     // ops persist() lazily and never see their final action, so repeated
     // q() calls would otherwise accumulate cached blocks across a suite
-    // run — the same between-queries hygiene Bench and Verify apply
-    graft.ops.OpCache.release(spark)
-    spark.catalog.clearCache()
+    // run — q() applies the runnable mains' between-key hygiene first
+    Harness.release(spark)
     SparkEntry.queries(name)(spark, sf)
   }
 }
