@@ -206,21 +206,6 @@ object Bench {
     val llmArtifactKeys = Set("llm_dedup_clusters", "llm_dedup_prune",
       "llm_dedup_ngram_jaccard", "llm_dedup_incremental",
       "llm_dedup_embcos", "llm_knn_ivf", "llm_semdedup")
-    // readers of the table chains the phase builds — a subset naming
-    // NONE of these must not pay the 18 table builds (round-20 verdict:
-    // a graph-only subset run triggered the full table phase)
-    val tableArtifactKeys = Set("sink_snapshot_merge",
-      "table_merge_pruned", "table_changelog", "table_cdf_consume",
-      "table_cdf_stream", "table_merge_dv", "table_merge_sql",
-      "table_delete_sql", "table_meta_agg", "table_runtime_prune",
-      "table_sql_maintenance", "table_limit_door",
-      "table_type_widening", "table_clustered_write",
-      "table_dv_distributed", "table_stream_door",
-      "table_history", "table_clone",
-      "table_time_travel", "table_schema_evolution",
-      "table_stats_pruning", "table_zorder_skipping",
-      "table_incremental_append", "table_bloom_skipping",
-      "table_restore")
     // Derby (embedded JDBC) keys: the ENGINE boot (~1-2 s of class
     // loading + recovery check) is session infrastructure, not query
     // work — it lands in the phase so the alphabetically-first JDBC
@@ -229,7 +214,8 @@ object Bench {
       "source_jdbc_dim")
     // each family's builds run only when the subset will read them;
     // full runs (no subset) build everything
-    val includeTables = only.forall(_.exists(tableArtifactKeys))
+    val includeTables =
+      only.forall(_.exists(graft.ops.Scans.readsTableChain))
     val includeGraph = only.forall(_.exists(_.startsWith("graph_")))
     val includeLlm = only.forall(_.exists(llmArtifactKeys))
     val includeBucketed =

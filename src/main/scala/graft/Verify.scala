@@ -27,7 +27,10 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    // a SPARK_GRAFT_QUERIES subset writes only its own keys' oracles,
+    // so tools/check.py judges exactly the keys that ran
     val json = SparkEntry.oracleSql
+      .filter { case (k, _) => Harness.only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

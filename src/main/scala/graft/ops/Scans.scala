@@ -263,9 +263,7 @@ object Scans {
       val merged = batches
         .foldLeft(Option.empty[org.apache.spark.sql.DataFrame])(
           (state, batch) => Some(upsertMerge(state, batch))).get
-      merged
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          ep(col("ts")).as("ts_us"), round(col("value"), 2).as("value"))
+      merged.select(imageCols: _*)
         .orderBy("user_id")
     }),
 
@@ -320,18 +318,11 @@ object Scans {
     // is a retraction (delete clause). `action` records which MERGE
     // clause produced each surviving row.
     "merge_upsert" -> ((s, d) => {
-      val ev = t(s, d, "events")
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          ep(col("ts")).as("ts_us"), round(col("value"), 2).as("value"))
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("ts_us").desc, col("event_id").desc)
-      def latest(df: org.apache.spark.sql.DataFrame) = df
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1).drop("rn")
-      val tgt = latest(ev.where(pmod(col("event_id"), lit(2)) === 0))
+      val ev = t(s, d, "events").select(imageCols: _*)
+      val tgt = latestUs(ev.where(pmod(col("event_id"), lit(2)) === 0))
         .select(col("user_id"), col("event_id").as("t_id"),
           col("ts_us").as("t_us"), col("value").as("t_val"))
-      val src = latest(ev.where(pmod(col("event_id"), lit(2)) === 1))
+      val src = latestUs(ev.where(pmod(col("event_id"), lit(2)) === 1))
         .select(col("user_id"), col("event_id").as("s_id"),
           col("ts_us").as("s_us"), col("value").as("s_val"),
           (col("event_type") === "error").as("s_del"))
@@ -420,9 +411,7 @@ object Scans {
         graft.streaming.SnapshotTable.newFiles(s, root, v).size <
           graft.streaming.SnapshotTable.fileCount(s, root, v)
       }
-      graft.streaming.SnapshotTable.read(s, root).get
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          ep(col("ts")).as("ts_us"), round(col("value"), 2).as("value"))
+      graft.streaming.SnapshotTable.read(s, root).get.select(imageCols: _*)
         .withColumn("file_merge", lit(fileMerge))
         .orderBy("user_id")
     }),
@@ -430,22 +419,25 @@ object Scans {
     // TIME TRAVEL over the snapshot table (round 13; the reason ACID
     // table formats keep version history at all — audit "what did the
     // board say at commit k", reproduce a training run against the
-    // exact table version it read): a 3-version table is built ONCE
-    // per (root, corpus content) — the artifact materialize-once
-    // discipline, with retain=3 so no version is vacuumed and a
-    // re-invocation READS instead of appending versions 4..6 (version
+    // exact table version it read): the table is the first three
+    // versions of the restore chain (restoreRoot), built ONCE per
+    // (root, corpus content) — the artifact materialize-once
+    // discipline, with retain=5 so no version is vacuumed and a
+    // re-invocation READS instead of appending more versions (version
     // CONTENT must be a function of corpus content for the oracle,
     // and a rebuilt-on-top table would break that) — then every
     // version is read back by number and summarized. Version k holds
     // the per-user latest image over batches 1..k (event_id mod 3),
-    // so the oracle reconstructs each snapshot with one window per k.
+    // so the oracle reconstructs each snapshot with one window per k;
+    // the chain's fourth version (table_restore's rollback) is never
+    // read here.
     "table_time_travel" -> ((s, d) => {
-      val root = timeTravelRoot(s, d)
-      // resolve the three PHYSICAL committed versions by listing (not
-      // latest-2..latest arithmetic — orphan-skip numbering can leave
-      // committed versions non-contiguous) and report them as 1..3
-      val vs = graft.streaming.SnapshotTable
-        .committedVersions(s, root).takeRight(3)
+      val root = restoreRoot(s, d)
+      // resolve the first three PHYSICAL committed versions by listing
+      // (not version-number arithmetic — orphan-skip numbering can
+      // leave committed versions non-contiguous) and report them as
+      // 1..3
+      val vs = graft.streaming.SnapshotTable.committedVersions(s, root).take(3)
       vs.zipWithIndex.map { case (v, i) =>
         // round 17: the MIDDLE version is read back by TIMESTAMP AS OF
         // (its own commit wall time must resolve to itself — and, being
@@ -632,13 +624,14 @@ object Scans {
     // FILE-GRANULAR MERGE over the snapshot table (round 15; the
     // second half of the O(delta) story — commitAppend covers appends,
     // this covers the genre's bread-and-butter KEYED UPSERT): the
-    // table is committed once as the per-user latest image of the
-    // even-event_id batch, range-clustered on user_id into 8 files
-    // with a stats manifest; the merge batch is the odd-event_id
-    // events of the BOTTOM QUARTER of the user range (localized — the
-    // production shape: today's updates touch recent/segmented keys),
-    // and commitMerge rewrites ONLY the files that actually contain a
-    // batch user: stats-manifest range pruning finds candidates, an
+    // table is versions 1-2 of the shared cdf chain (cdfChainRoot) —
+    // v1 the per-user latest image of the even-event_id batch,
+    // range-clustered on user_id into 8 files with a stats manifest;
+    // v2 merges the odd-event_id events of the BOTTOM QUARTER of the
+    // user range (localized — the production shape: today's updates
+    // touch recent/segmented keys), and commitMerge rewrites ONLY the
+    // files that actually contain a batch user: stats-manifest range
+    // pruning finds candidates, an
     // exact content semi-join picks the touched files, untouched
     // files carry by reference. Output: the merged latest image plus a
     // structural `file_merge` boolean (files_new < files_total — the
@@ -646,58 +639,16 @@ object Scans {
     // daily upsert costs the overlapping files, not the table; a
     // pure-insert batch costs an append.
     "table_merge_pruned" -> ((s, d) => {
-      val root = mergePrunedRoot(s, d)
-      val v = graft.streaming.SnapshotTable.latestVersion(s, root).get
-      val merged =
-        graft.streaming.SnapshotTable.newFiles(s, root, v).size <
-          graft.streaming.SnapshotTable.fileCount(s, root, v)
-      graft.streaming.SnapshotTable.read(s, root).get
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          ep(col("ts")).as("ts_us"), round(col("value"), 2).as("value"))
+      val root = cdfChainRoot(s, d)
+      val v = graft.streaming.SnapshotTable.committedVersions(s, root)(1)
+      val merged = graft.streaming.SnapshotTable.newFiles(s, root, v).size <
+        graft.streaming.SnapshotTable.fileCount(s, root, v)
+      graft.streaming.SnapshotTable.readVersion(s, root, v)
+        .select(imageCols: _*)
         .withColumn("file_merge", lit(merged))
         .orderBy("user_id")
     }),
 
-    // ROW-LEVEL CHANGELOG off the snapshot table (round 16; Delta CDF /
-    // Iceberg changelog-scan analog — the round-15 verdict's missing
-    // #2: readSince serves append deltas, but a MERGE commit's
-    // row-level changes between versions were not derivable, forcing
-    // downstream incremental consumers of a mutating table to re-read
-    // full versions): SnapshotTable.readChanges diffs ONLY the files
-    // the merge actually rewrote against their predecessors (the
-    // manifest says which — untouched files carry by reference and
-    // contribute nothing, so the diff costs O(touched), never
-    // O(table)), cancels verbatim-carried pass-through rows under bag
-    // difference, and classifies the survivors by key into
-    // insert / update_preimage / update_postimage / delete. The table
-    // is the SAME content-keyed 2-version merge artifact
-    // table_merge_pruned builds (v1 = even-event latest image
-    // range-clustered on user_id, v2 = bottom-quarter odd-event merge),
-    // so the oracle reconstructs both latest images with one window
-    // each and diffs them: a user gaining their first row is an
-    // insert, a user whose winning event changed pairs as
-    // update_preimage/update_postimage, an unchanged winner emits
-    // NOTHING (the carried-row cancellation made observable), and the
-    // upsert never deletes. Feeding these +/- rows through the
-    // changelog algebra (cdc_retract_agg / changelogLatestImage) gives
-    // exact incremental consumption of a merged 100 TB table.
-    // BLOOM FILE SKIPPING off the snapshot table (round 16; the Delta
-    // bloom-file-index analog): min/max manifests only bite on
-    // CLUSTERED layouts — on a hash-distributed table every file's
-    // range spans the whole key domain and a point lookup reads every
-    // file. commitWithSkipping additionally records an 8 KB packed
-    // Bloom bitset per file (one extra delta-only pass, array<bigint>
-    // in the same manifest row), and readPrunedIn prunes an in-list
-    // probe to the files whose filter may hold some probe value — at
-    // 100 TB a "which files hold user k" lookup costs manifest
-    // metadata instead of the key column of every file. False
-    // positives cost one exact probe read; false negatives are
-    // impossible for present values (same Spark-side hash family on
-    // both write and probe, spec-pinned). The key builds the per-user
-    // latest image HASH-distributed into 16 files with a user_id
-    // bloom, probes the 3 smallest user ids, and reports their rows
-    // plus a structural `bloom_pruned` boolean (files_read <
-    // files_total — range stats alone could never prune this layout).
     // INCREMENTAL CONSUMPTION of a MERGED table via the changelog
     // (round 16; pairs readChanges with the cdc_retract_agg signed-row
     // algebra — the loop Delta CDF exists to close): a downstream
@@ -716,9 +667,7 @@ object Scans {
     // direct is the whole claim.
     "table_cdf_consume" -> ((s, d) => {
       val root = cdfChainRoot(s, d)
-      val vs = graft.streaming.SnapshotTable
-        .committedVersions(s, root).takeRight(3)
-      val dec = org.apache.spark.sql.types.DecimalType(18, 2)
+      val vs = graft.streaming.SnapshotTable.committedVersions(s, root).take(3)
       val b = graft.streaming.SnapshotTable.readVersion(s, root, vs(0))
         .agg(count(lit(1)).as("n"),
           sum(round(col("value"), 2).cast(dec)).as("sv")).first()
@@ -771,10 +720,7 @@ object Scans {
     // re-bootstrapping a consumer means re-reading the table.
     "table_cdf_stream" -> ((s, d) => {
       val root = cdfChainRoot(s, d)
-      val tag = new java.io.File(d).getName
-      val snap = Snapshot.of(Seq(s"$d/events.parquet"))
-      val state =
-        Artifacts.scratch(s, s"cdf_stream_${tag}_$snap") + "/board"
+      val state = keyedRoot(s, d, "cdf_stream") + "/board"
       while (graft.streaming.Streams.tableChangeStep(
         s, root, "user_id", state)(cdfBoardInit(s))(cdfBoardFold(s))) ()
       s.read.parquet(state)
@@ -844,17 +790,10 @@ object Scans {
     // clause labels reconstructed from the source/target images).
     "table_merge_sql" -> ((s, d) => {
       val root = mergeSqlRoot(s, d)
-      val ev = t(s, d, "events")
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          ep(col("ts")).as("ts_us"), round(col("value"), 2).as("value"))
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("ts_us").desc, col("event_id").desc)
-      def latest(df: org.apache.spark.sql.DataFrame) = df
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1).drop("rn")
-      val tgtKeys = latest(ev.where(pmod(col("event_id"), lit(2)) === 0))
+      val ev = t(s, d, "events").select(imageCols: _*)
+      val tgtKeys = latestUs(ev.where(pmod(col("event_id"), lit(2)) === 0))
         .select(col("user_id")).withColumn("in_t", lit(true))
-      val srcKeys = latest(ev.where(pmod(col("event_id"), lit(2)) === 1))
+      val srcKeys = latestUs(ev.where(pmod(col("event_id"), lit(2)) === 1))
         .select(col("user_id")).withColumn("in_s", lit(true))
       graft.streaming.SnapshotTable.read(s, root).get
         .join(tgtKeys, Seq("user_id"), "left_outer")
@@ -1105,10 +1044,7 @@ object Scans {
     // chain, commit times nondecreasing in version order.
     "table_history" -> ((s, d) => {
       val root = widenRoot(s, d)
-      val tag = new java.io.File(d).getName
-      val snap = Snapshot.of(Seq(s"$d/events.parquet"))
-      val cat = sqlCatalogFor(s, s"graft_widen_${tag}_$snap",
-        root.stripSuffix("/t"))
+      val cat = sqlCatalogFor(s, root.stripSuffix("/t"))
       val h = s.sql(s"CALL $cat.history(table => 't')").collect()
         .sortBy(_.getLong(0))
       val metaOk = h.length == 3 &&
@@ -1147,13 +1083,28 @@ object Scans {
         st.dataFiles(s, root, cv) == st.dataFiles(s, src, sv) &&
         st.dvOf(s, root, cv).nonEmpty &&
         st.statsManifest(s, root, cv).columns.contains("min__user_id")
-      st.read(s, root).get
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          ep(col("ts")).as("ts_us"), round(col("value"), 2).as("value"))
+      st.read(s, root).get.select(imageCols: _*)
         .withColumn("cloned", lit(cloned))
         .orderBy("user_id")
     }),
 
+    // BLOOM FILE SKIPPING off the snapshot table (round 16; the Delta
+    // bloom-file-index analog): min/max manifests only bite on
+    // CLUSTERED layouts — on a hash-distributed table every file's
+    // range spans the whole key domain and a point lookup reads every
+    // file. commitWithSkipping additionally records an 8 KB packed
+    // Bloom bitset per file (one extra delta-only pass, array<bigint>
+    // in the same manifest row), and readPrunedIn prunes an in-list
+    // probe to the files whose filter may hold some probe value — at
+    // 100 TB a "which files hold user k" lookup costs manifest
+    // metadata instead of the key column of every file. False
+    // positives cost one exact probe read; false negatives are
+    // impossible for present values (same Spark-side hash family on
+    // both write and probe, spec-pinned). The key builds the per-user
+    // latest image HASH-distributed into 16 files with a user_id
+    // bloom, probes the 3 smallest user ids, and reports their rows
+    // plus a structural `bloom_pruned` boolean (files_read <
+    // files_total — range stats alone could never prune this layout).
     "table_bloom_skipping" -> ((s, d) => {
       val root = bloomSkipRoot(s, d)
       val ev = t(s, d, "events")
@@ -1167,8 +1118,7 @@ object Scans {
       val pruned = ps.filesRead < ps.filesTotal
       // conservative scan + exact predicate on top, as always
       ps.df.where(col("user_id").isin(probes: _*))
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          ep(col("ts")).as("ts_us"), round(col("value"), 2).as("value"))
+        .select(imageCols: _*)
         .withColumn("bloom_pruned", lit(pruned))
         .orderBy("user_id")
     }),
@@ -1198,22 +1148,40 @@ object Scans {
         .dataFiles(s, root, vs(0)).toSet
         .subsetOf(graft.streaming.SnapshotTable
           .dataFiles(s, root, vs(1)).toSet)
-      graft.streaming.SnapshotTable.read(s, root).get
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          ep(col("ts")).as("ts_us"), round(col("value"), 2).as("value"))
+      graft.streaming.SnapshotTable.read(s, root).get.select(imageCols: _*)
         .withColumn("merge_on_read", lit(mor))
         .orderBy("user_id")
     }),
 
+    // ROW-LEVEL CHANGELOG off the snapshot table (round 16; Delta CDF /
+    // Iceberg changelog-scan analog — the round-15 verdict's missing
+    // #2: readSince serves append deltas, but a MERGE commit's
+    // row-level changes between versions were not derivable, forcing
+    // downstream incremental consumers of a mutating table to re-read
+    // full versions): SnapshotTable.readChanges diffs ONLY the files
+    // the merge actually rewrote against their predecessors (the
+    // manifest says which — untouched files carry by reference and
+    // contribute nothing, so the diff costs O(touched), never
+    // O(table)), cancels verbatim-carried pass-through rows under bag
+    // difference, and classifies the survivors by key into
+    // insert / update_preimage / update_postimage / delete. The diff
+    // spans versions 1-2 of the shared cdf chain (cdfChainRoot), the
+    // same two versions table_merge_pruned serves (v1 = even-event
+    // latest image range-clustered on user_id, v2 = bottom-quarter
+    // odd-event merge), so the oracle reconstructs both latest images
+    // with one window each and diffs them: a user gaining their first
+    // row is an insert, a user whose winning event changed pairs as
+    // update_preimage/update_postimage, an unchanged winner emits
+    // NOTHING (the carried-row cancellation made observable), and the
+    // upsert never deletes. Feeding these +/- rows through the
+    // changelog algebra (cdc_retract_agg / changelogLatestImage) gives
+    // exact incremental consumption of a merged 100 TB table.
     "table_changelog" -> ((s, d) => {
-      val root = mergePrunedRoot(s, d)
-      val vs = graft.streaming.SnapshotTable
-        .committedVersions(s, root).takeRight(2)
+      val root = cdfChainRoot(s, d)
+      val vs = graft.streaming.SnapshotTable.committedVersions(s, root).take(2)
       graft.streaming.SnapshotTable
         .readChanges(s, root, vs(0), vs(1), "user_id")
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          ep(col("ts")).as("ts_us"), round(col("value"), 2).as("value"),
-          col("_change_type"))
+        .select(imageCols :+ col("_change_type"): _*)
         .orderBy("user_id", "_change_type")
     }),
 
@@ -1243,9 +1211,7 @@ object Scans {
       val scan = b.build().asInstanceOf[graft.dsv2.GraftScan]
       val pruned = scan.filesRead < scan.filesTotal &&
         scan.description().contains(s"filesRead=${scan.filesRead}/")
-      s.read.format("graft").load(root)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          ep(col("ts")).as("ts_us"), round(col("value"), 2).as("value"))
+      s.read.format("graft").load(root).select(imageCols: _*)
         .withColumn("dsv2_pruned", lit(pruned))
         .orderBy("user_id")
     }),
@@ -1259,35 +1225,81 @@ object Scans {
     // structural `restored_exact` boolean asserts the head's file list
     // IS v2's, byte-identical paths — zero data moved). The oracle
     // reconstructs version 2's per-user latest image (batches 0-1)
-    // directly from events: restore-then-read ≡ time travel to k.
+    // directly from events: restore-then-read ≡ time travel to k
+    // (table_time_travel reads versions 1-3 of this same chain, and
+    // ArtifactPhaseSpec pins the head against its version-2 row).
     "table_restore" -> ((s, d) => {
       val root = restoreRoot(s, d)
-      val vs = graft.streaming.SnapshotTable
-        .committedVersions(s, root).takeRight(4)
-      val restoredExact = graft.streaming.SnapshotTable
-        .dataFiles(s, root, vs(3)) ==
-        graft.streaming.SnapshotTable.dataFiles(s, root, vs(1))
-      graft.streaming.SnapshotTable.read(s, root).get
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          ep(col("ts")).as("ts_us"), round(col("value"), 2).as("value"))
+      val vs = graft.streaming.SnapshotTable.committedVersions(s, root).take(4)
+      val restoredExact =
+        graft.streaming.SnapshotTable.dataFiles(s, root, vs(3)) ==
+          graft.streaming.SnapshotTable.dataFiles(s, root, vs(1))
+      graft.streaming.SnapshotTable.read(s, root).get.select(imageCols: _*)
         .withColumn("restored_exact", lit(restoredExact))
         .orderBy("user_id")
     })
   )
 
-  /** The restore-chain table: versions 1-3 upsert event batches
-    * (event_id mod 3), version 4 ROLLS BACK to version 2 via
-    * [[graft.streaming.SnapshotTable.restore]] — content-keyed,
-    * resumable at any died step like every table builder here.
-    * retain=5 keeps the whole drama time-travelable. */
+  /** `<corpus dir name>_<content hash of d/<table>.parquet>`, the key
+    * every lake-table artifact is stored under. CONTENT-keyed (round-12
+    * advice), not uuid-fresh and not dir-name-keyed: a uuid name under
+    * a shared root accumulates one orphan table per invocation that no
+    * retention convention covers, while a bare dir-name tag survives
+    * in-place fixture rewrites — stale rows from the previous corpus
+    * would outlive the upsert latest-image. */
+  private def contentKey(d: String, table: String = "events"): String =
+    new java.io.File(d).getName + "_" +
+      Snapshot.of(Seq(s"$d/$table.parquet"))
+
+  /** The scratch root of the content-keyed artifact `name`. */
+  private def keyedRoot(s: org.apache.spark.sql.SparkSession, d: String,
+      name: String, table: String = "events"): String =
+    Artifacts.scratch(s, s"${name}_${contentKey(d, table)}")
+
+  /** The five raw event columns the chain builders commit. */
+  private def events5(s: org.apache.spark.sql.SparkSession, d: String)
+      : org.apache.spark.sql.DataFrame =
+    t(s, d, "events").select(col("user_id"), col("event_id"),
+      col("event_type"), col("ts"), col("value"))
+
+  /** A served event image: the five event columns with `ts` as epoch
+    * micros and `value` at cents, the shape the oracles compare. */
+  private def imageCols: Seq[org.apache.spark.sql.Column] =
+    Seq(col("user_id"), col("event_id"), col("event_type"),
+      ep(col("ts")).as("ts_us"), round(col("value"), 2).as("value"))
+
+  /** The per-user latest image of rows carrying `ts_us`: the argmax by
+    * (ts_us, event_id). */
+  private def latestUs(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val w = Window.partitionBy("user_id")
+      .orderBy(col("ts_us").desc, col("event_id").desc)
+    df.withColumn("rn", row_number().over(w))
+      .where(col("rn") === 1).drop("rn")
+  }
+
+  /** The seed commit of the merge chains: the per-user latest image of
+    * the events whose event_id ≡ 0 (mod `mod`), range-clustered on
+    * user_id into 8 files with user_id stats. */
+  private def commitSeed(s: org.apache.spark.sql.SparkSession,
+      root: String, ev: org.apache.spark.sql.DataFrame, mod: Int,
+      retain: Int, eb: Long): Unit = {
+    graft.streaming.SnapshotTable.commitWithStats(s, root, "user_id",
+      retain = retain, expectedBase = eb)(_ =>
+      graft.streaming.SnapshotTable.clusterBy(upsertMerge(None,
+        ev.where(pmod(col("event_id"), lit(mod)) === 0)), "user_id", 8))
+    ()
+  }
+
+  /** The restore chain: versions 1-3 upsert event batches (event_id
+    * mod 3), version 4 ROLLS BACK to version 2 via
+    * [[graft.streaming.SnapshotTable.restore]]. `table_time_travel`
+    * reads versions 1-3, `table_restore` the head. retain=5 keeps the
+    * whole drama time-travelable. */
   private def restoreRoot(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
-    val tag = new java.io.File(d).getName
-    val snap = Snapshot.of(Seq(s"$d/events.parquet"))
-    val root = Artifacts.scratch(s, s"restore_m_${tag}_$snap")
-    val ev = t(s, d, "events")
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        col("ts"), col("value"))
+    val root = keyedRoot(s, d, "restore_m")
+    val ev = events5(s, d)
     buildVersionsOnce(s, root, 4) { (i, eb) =>
       if (i < 3)
         graft.streaming.SnapshotTable.commit(s, root, retain = 5,
@@ -1305,34 +1317,18 @@ object Scans {
   }
 
   /** The 3-version merge-committed table `sink_snapshot_merge` reads,
-    * built once per corpus content. CONTENT-keyed (round-12 advice),
-    * not uuid-fresh and not dir-name-keyed: a uuid name under a shared
-    * root accumulates one orphan table per invocation that no
-    * retention convention covers, while a bare dir-name tag survives
-    * in-place fixture rewrites — stale rows from the previous corpus
-    * would outlive the upsert latest-image. The `_fm` tag keys the
-    * root to the round-16 file-granular build (batch 1 = clustered
-    * seed with stats, batches 2-3 = user-half localized commitMerges)
-    * so an old full-rewrite table on the same box is never
-    * half-reused. */
+    * built once per corpus content: v1 = the mod-3 seed, v2-v3 = the
+    * remaining events in two user-half localized commitMerges. The
+    * `_fm` tag keys the root to this round-16 file-granular build so
+    * an old full-rewrite table on the same box is never half-reused. */
   private def snapMergeRoot(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
-    val tag = new java.io.File(d).getName
-    val snap = Snapshot.of(Seq(s"$d/events.parquet"))
-    val root = Artifacts.scratch(s, s"snap_merge_fm_${tag}_$snap")
-    val ev = t(s, d, "events")
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        col("ts"), col("value"))
+    val root = keyedRoot(s, d, "snap_merge_fm")
+    val ev = events5(s, d)
     val uMid = ev.agg(floor(max(col("user_id")) / 2.0).cast("long"))
       .first().getLong(0)
     buildVersionsOnce(s, root, 3) { (i, eb) =>
-      if (i == 0)
-        graft.streaming.SnapshotTable.commitWithStats(
-          s, root, "user_id", retain = 3, expectedBase = eb)(_ =>
-          graft.streaming.SnapshotTable.clusterBy(
-            upsertMerge(None,
-              ev.where(pmod(col("event_id"), lit(3)) === 0)),
-            "user_id", 8))
+      if (i == 0) commitSeed(s, root, ev, 3, retain = 3, eb)
       else {
         val half =
           if (i == 1) col("user_id") <= uMid else col("user_id") > uMid
@@ -1358,10 +1354,7 @@ object Scans {
   private def streamDoorFolded(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
     val root = cdfChainRoot(s, d)
-    val tag = new java.io.File(d).getName
-    val snap = Snapshot.of(Seq(s"$d/events.parquet"))
-    Artifacts.materialize(s, "stream_door_fold",
-        s"${tag}_$snap") { tmp =>
+    Artifacts.materialize(s, "stream_door_fold", contentKey(d)) { tmp =>
       val hc = s.sparkContext.hadoopConfiguration
       val work = Artifacts.scratch(s, "stream_door_work_" +
         java.util.UUID.randomUUID().toString.take(8))
@@ -1386,41 +1379,13 @@ object Scans {
     }
   }
 
-  /** The 3-version upsert chain `table_time_travel` reads (round-20
-    * optimization: extracted from the key body so the build lands in
-    * the `table_artifact_build` materialization line with the other
-    * table builds — the same accounting move rounds 16/19 made for the
-    * merge tables; the key itself now measures query latency against
-    * the published chain). Gate on the COUNT of committed versions,
-    * not mere existence: a prior process that died after 1-2 of the 3
-    * commits would otherwise leave a root that skips the build forever
-    * and fails readVersion(latest-2) on an uncommitted version. */
-  private def timeTravelRoot(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    val tag = new java.io.File(d).getName
-    val snap = Snapshot.of(Seq(s"$d/events.parquet"))
-    val root = Artifacts.scratch(s, s"time_travel_m_${tag}_$snap")
-    val ev = t(s, d, "events")
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        col("ts"), col("value"))
-    buildVersionsOnce(s, root, 3) { (i, eb) =>
-      val batch = ev.where(pmod(col("event_id"), lit(3)) === i)
-      graft.streaming.SnapshotTable.commit(s, root, retain = 3,
-        expectedBase = eb)(state => upsertMerge(state, batch))
-      ()
-    }
-    root
-  }
-
   /** The 4-version evolution chain `table_schema_evolution` reads:
     * v1/v2 = the two event halves (v2 carrying the new `day` column —
     * a TRUE ADD COLUMN, only batch 2's files written), v3/v4 = the
     * rename round-trip day → day_r18 → day (both METADATA-ONLY). */
   private def schemaEvoRoot(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
-    val tag = new java.io.File(d).getName
-    val snap = Snapshot.of(Seq(s"$d/events.parquet"))
-    val root = Artifacts.scratch(s, s"schema_evo_m_${tag}_$snap")
+    val root = keyedRoot(s, d, "schema_evo_m")
     val ev = t(s, d, "events")
     def batch(i: Int): org.apache.spark.sql.DataFrame = {
       val half = ev.where(pmod(col("event_id"), lit(2)) === i)
@@ -1448,9 +1413,7 @@ object Scans {
     * with a stats manifest — `table_stats_pruning`'s subject. */
   private def statsPruneRoot(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
-    val tag = new java.io.File(d).getName
-    val snap = Snapshot.of(Seq(s"$d/orders.parquet"))
-    val root = Artifacts.scratch(s, s"stats_prune_m_${tag}_$snap")
+    val root = keyedRoot(s, d, "stats_prune_m", "orders")
     buildVersionsOnce(s, root, 1) { (_, eb) =>
       graft.streaming.SnapshotTable.commitWithStats(
         s, root, "o_orderdate", expectedBase = eb)(_ =>
@@ -1468,9 +1431,7 @@ object Scans {
     * into 16 files — `table_zorder_skipping`'s subject. */
   private def zorderRoot(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
-    val tag = new java.io.File(d).getName
-    val snap = Snapshot.of(Seq(s"$d/orders.parquet"))
-    val root = Artifacts.scratch(s, s"zorder_m_${tag}_$snap")
+    val root = keyedRoot(s, d, "zorder_m", "orders")
     buildVersionsOnce(s, root, 1) { (_, eb) =>
       graft.streaming.SnapshotTable.commitWithStatsCols(
         s, root, Seq("o_orderdate", "o_custkey"), expectedBase = eb)(_ =>
@@ -1487,12 +1448,8 @@ object Scans {
   /** The 4-version append chain `table_incremental_append` reads. */
   private def incrAppendRoot(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
-    val tag = new java.io.File(d).getName
-    val snap = Snapshot.of(Seq(s"$d/events.parquet"))
-    val root = Artifacts.scratch(s, s"incr_append_${tag}_$snap")
-    val ev = t(s, d, "events")
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        col("ts"), col("value"))
+    val root = keyedRoot(s, d, "incr_append")
+    val ev = events5(s, d)
     buildVersionsOnce(s, root, 4) { (i, eb) =>
       graft.streaming.SnapshotTable.commitAppend(s, root,
         ev.where(pmod(col("event_id"), lit(4)) === i), retain = 4,
@@ -1514,12 +1471,8 @@ object Scans {
     * shuffle survives every session shape). */
   private def bloomSkipRoot(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
-    val tag = new java.io.File(d).getName
-    val snap = Snapshot.of(Seq(s"$d/events.parquet"))
-    val root = Artifacts.scratch(s, s"bloom_skip_${tag}_$snap")
-    val ev = t(s, d, "events")
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        col("ts"), col("value"))
+    val root = keyedRoot(s, d, "bloom_skip")
+    val ev = events5(s, d)
     buildVersionsOnce(s, root, 1) { (_, eb) =>
       graft.streaming.SnapshotTable.commitWithSkipping(s, root,
         statsCols = Seq("user_id"), bloomCols = Seq("user_id"),
@@ -1533,14 +1486,23 @@ object Scans {
     root
   }
 
-  /** Materialize the two content-keyed merge-table artifacts the
-    * sink_snapshot_merge / table_merge_pruned / table_changelog keys
-    * read — the bench times this as its own `table_artifact_build`
-    * line (like `graph_artifact_build`): a table BUILD is a production
+  /** True for the keys that read a lake-table chain: every `table_*`
+    * key plus `sink_snapshot_merge`. A bench subset naming none of them
+    * skips the table chains of [[tableArtifactBuild]]. */
+  def readsTableChain(key: String): Boolean =
+    key.startsWith("table_") || key == "sink_snapshot_merge"
+
+  /** Build every content-keyed artifact in ONE parallel phase: the 16
+    * lake-table chains the [[readsTableChain]] keys read (when
+    * `includeTables`), plus the trade-graph edges, the dedup cluster
+    * chain and IVF centroids, the bucketed join tables and the
+    * embedded-Derby boot when their flags are set. The bench times it
+    * as its own `table_artifact_build` line (like
+    * `graph_artifact_build`): a table BUILD is a production
     * materialization job, not per-query cost, and billing it to
     * whichever key runs first alphabetically would make that key's
-    * median an artifact of session order. Returns each build's wall
-    * seconds, in submission order. */
+    * median an artifact of session order. Returns each build's name
+    * and wall seconds, in submission order. */
   def tableArtifactBuild(s: org.apache.spark.sql.SparkSession,
       d: String, includeGraph: Boolean = false,
       includeLlm: Boolean = false,
@@ -1599,9 +1561,13 @@ object Scans {
     // create/checksum IO collapses under the parquet chains' commit
     // traffic — vs ~0.5 s when the key builds it alone; a small-file
     // fan-out job wants the disk to itself (guide §6 small-files).
-    // round-21: the 18 table chains are gated on includeTables so a
+    // round-21: the table chains are gated on includeTables so a
     // subset run naming only graph/llm/bucketed/jdbc keys stops
-    // paying table builds it never reads (round-20 verdict item 6)
+    // paying table builds it never reads (round-20 verdict item 6).
+    // Each chain serves every reader of its versions: the cdf chain's
+    // v1-v2 are table_merge_pruned/table_changelog's table, the restore
+    // chain's v1-v3 are table_time_travel's, so no table is committed
+    // twice.
     val tableChains: Seq[(String, () => Any)] = if (!includeTables) Nil
     else Seq(
       ("cdfChain+streamDoor", () => {
@@ -1611,14 +1577,12 @@ object Scans {
       ("sqlMaint", () => sqlMaintRoot(s, d)),
       ("deleteSql", () => deleteSqlRoot(s, d)),
       ("mergeDv+clone", () => { mergeDvRoot(s, d); cloneRoot(s, d) }),
-      ("mergePruned", () => mergePrunedRoot(s, d)),
       ("runtimePrune", () => runtimePruneRoot(s, d)),
       ("metaAgg", () => metaAggRoot(s, d)),
       ("widen", () => widenRoot(s, d)),
       ("clusteredWrite", () => clusteredWriteRoot(s, d)),
       ("zorder", () => zorderRoot(s, d)),
       ("restore", () => restoreRoot(s, d)),
-      ("timeTravel", () => timeTravelRoot(s, d)),
       ("bloomSkip", () => bloomSkipRoot(s, d)),
       ("incrAppend", () => incrAppendRoot(s, d)),
       ("statsPrune", () => statsPruneRoot(s, d)),
@@ -1655,31 +1619,24 @@ object Scans {
     } finally { pool.shutdown() }
   }
 
-  /** The 3-version merge CHAIN `table_cdf_consume` folds changelogs
-    * over, built once per corpus content: v1 = the even-event_id
-    * per-user latest image range-clustered on user_id; v2 = commitMerge
-    * of the odd events of the bottom user-QUARTER; v3 = commitMerge of
-    * the odd events of the second quarter — two localized merge
-    * transitions, each rewriting only overlapping files, so the
-    * changelog between consecutive versions is O(touched). */
+  /** The 3-version FILE-GRANULAR MERGE chain, built once per corpus
+    * content: v1 = the mod-2 seed (the even-event_id latest image);
+    * v2 = commitMerge of the odd events of the bottom user-QUARTER
+    * (localized — the production shape: today's updates touch
+    * recent/segmented keys); v3 = commitMerge of the odd events of the
+    * second quarter. Each merge rewrites only the files holding a
+    * batch user, so the changelog between consecutive versions is
+    * O(touched). Readers: `table_merge_pruned` (v2's image) and
+    * `table_changelog` (v1→v2) read versions 1-2; `table_cdf_consume`,
+    * `table_cdf_stream` and `table_stream_door` fold all three. */
   private def cdfChainRoot(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
-    val tag = new java.io.File(d).getName
-    val snap = Snapshot.of(Seq(s"$d/events.parquet"))
-    val root = Artifacts.scratch(s, s"cdf_chain_${tag}_$snap")
-    val ev = t(s, d, "events")
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        col("ts"), col("value"))
+    val root = keyedRoot(s, d, "cdf_chain")
+    val ev = events5(s, d)
     val uCap = ev.agg(floor(max(col("user_id")) / 4.0).cast("long"))
       .first().getLong(0)
     buildVersionsOnce(s, root, 3) { (i, eb) =>
-      if (i == 0)
-        graft.streaming.SnapshotTable.commitWithStats(
-          s, root, "user_id", retain = 3, expectedBase = eb)(_ =>
-          graft.streaming.SnapshotTable.clusterBy(
-            upsertMerge(None,
-              ev.where(pmod(col("event_id"), lit(2)) === 0)),
-            "user_id", 8))
+      if (i == 0) commitSeed(s, root, ev, 2, retain = 3, eb)
       else {
         val quarter =
           if (i == 1) col("user_id") <= uCap
@@ -1701,7 +1658,6 @@ object Scans {
   private[graft] def cdfBoardInit(s: org.apache.spark.sql.SparkSession)(
       img: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(18, 2)
     img.agg(count(lit(1)).as("n_users"),
         coalesce(sum(round(col("value"), 2).cast(dec)),
           lit(0).cast(dec)).as("sum_value"))
@@ -1718,7 +1674,6 @@ object Scans {
       board: org.apache.spark.sql.DataFrame,
       ch: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(18, 2)
     val lastR = board.orderBy(col("version").desc).first()
     val post = col("_change_type").isin("insert", "update_postimage")
     val pre = col("_change_type").isin("delete", "update_preimage")
@@ -1745,67 +1700,20 @@ object Scans {
           nullable = true)))))
   }
 
-  /** The 2-version FILE-GRANULAR MERGE table `table_merge_pruned` and
-    * `table_changelog` share, built once per corpus content: v1 = the
-    * per-user latest image of the even-event_id half, range-clustered
-    * on user_id into 8 files with a stats manifest; v2 = commitMerge
-    * of the odd-event_id events of the BOTTOM QUARTER of the user
-    * range (localized — the production shape: today's updates touch
-    * recent/segmented keys), rewriting only the files that contain a
-    * batch user while the rest carry by reference. */
-  private def mergePrunedRoot(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    val tag = new java.io.File(d).getName
-    val snap = Snapshot.of(Seq(s"$d/events.parquet"))
-    val root = Artifacts.scratch(s, s"merge_pruned_${tag}_$snap")
-    val ev = t(s, d, "events")
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        col("ts"), col("value"))
-    val uCap = ev.agg(floor(max(col("user_id")) / 4.0).cast("long"))
-      .first().getLong(0)
-    buildVersionsOnce(s, root, 2) { (i, eb) =>
-      if (i == 0)
-        graft.streaming.SnapshotTable.commitWithStats(
-          s, root, "user_id", retain = 2, expectedBase = eb)(_ =>
-          graft.streaming.SnapshotTable.clusterBy(
-            upsertMerge(None,
-              ev.where(pmod(col("event_id"), lit(2)) === 0)),
-            "user_id", 8))
-      else
-        graft.streaming.SnapshotTable.commitMerge(s, root,
-          ev.where(pmod(col("event_id"), lit(2)) === 1 &&
-            col("user_id") <= uCap),
-          "user_id", retain = 2, expectedBase = eb)(upsertMerge)
-      ()
-    }
-    root
-  }
-
-  /** The 2-version MERGE-ON-READ table `table_merge_dv` reads, built
-    * once per corpus content: v1 = the per-user latest image of the
-    * even-event_id half, range-clustered on user_id into 8 files with
-    * a stats manifest (the same seed shape as mergePrunedRoot); v2 =
-    * commitMergeDV of the odd-event_id events of the SECOND user
-    * quarter — one fresh segment + deletion vectors, every v1 file
-    * carried physically untouched. */
+  /** The 2-version MERGE-ON-READ table `table_merge_dv`,
+    * `table_dsv2_read`, `table_dv_distributed` and the clone read,
+    * built once per corpus content: v1 = the mod-2 seed (the same seed
+    * as cdfChainRoot); v2 = commitMergeDV of the odd-event_id events of
+    * the SECOND user quarter — one fresh segment + deletion vectors,
+    * every v1 file carried physically untouched. */
   private def mergeDvRoot(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
-    val tag = new java.io.File(d).getName
-    val snap = Snapshot.of(Seq(s"$d/events.parquet"))
-    val root = Artifacts.scratch(s, s"merge_dv_${tag}_$snap")
-    val ev = t(s, d, "events")
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        col("ts"), col("value"))
+    val root = keyedRoot(s, d, "merge_dv")
+    val ev = events5(s, d)
     val uCap = ev.agg(floor(max(col("user_id")) / 4.0).cast("long"))
       .first().getLong(0)
     buildVersionsOnce(s, root, 2) { (i, eb) =>
-      if (i == 0)
-        graft.streaming.SnapshotTable.commitWithStats(
-          s, root, "user_id", retain = 2, expectedBase = eb)(_ =>
-          graft.streaming.SnapshotTable.clusterBy(
-            upsertMerge(None,
-              ev.where(pmod(col("event_id"), lit(2)) === 0)),
-            "user_id", 8))
+      if (i == 0) commitSeed(s, root, ev, 2, retain = 2, eb)
       else
         graft.streaming.SnapshotTable.commitMergeDV(s, root,
           ev.where(pmod(col("event_id"), lit(2)) === 1 &&
@@ -1826,12 +1734,10 @@ object Scans {
       d: String): String = {
     val src = mergeDvRoot(s, d)
     val st = graft.streaming.SnapshotTable
-    val tag = new java.io.File(d).getName
-    val snap = Snapshot.of(Seq(s"$d/events.parquet"))
-    val wh = Artifacts.scratch(s, s"clone_r20_${tag}_$snap")
+    val wh = keyedRoot(s, d, "clone_r20")
     val root = s"$wh/t"
     if (st.latestVersion(s, root).isEmpty) {
-      val cat = sqlCatalogFor(s, s"graft_clone_${tag}_$snap", wh)
+      val cat = sqlCatalogFor(s, wh)
       try {
         s.sql(s"CALL $cat.clone(target => 't', " +
           s"source_path => '$src')").collect(); ()
@@ -1849,18 +1755,6 @@ object Scans {
     root
   }
 
-  /** Build a fixed-length snapshot table ONCE per content-keyed root,
-    * surviving a lost first-build race: on a SHARED artifact root two
-    * JVMs can both see fewer than `n` committed versions and both
-    * start committing — exactly one wins each version and the loser's
-    * SnapshotTable.commit throws its loud conflict. Because the root
-    * is content-keyed, the winner is committing the IDENTICAL batches
-    * (each a pure function of corpus content), so the right response
-    * is not to fail the key but to wait for the winner to finish —
-    * the same adopt-the-winner discipline Artifacts.materialize
-    * applies to its lost publishes. A winner that dies mid-build
-    * leaves the wait to time out loudly (retry resumes at the
-    * version-count gate and commits only the missing batches). */
   /** Surface a [[graft.streaming.SnapshotConflictException]] buried in
     * a wrapper's cause chain (a SQL command's V2 exec may re-wrap the
     * commit's typed conflict) so buildVersionsOnce's adopt-the-winner
@@ -1873,11 +1767,14 @@ object Scans {
     throw e
   }
 
+  /** Register a graft SQL catalog over `warehouse` and return its name.
+    * Catalog instances are cached per session once touched, so the
+    * name must be unique per warehouse: it is `graft_` + the
+    * warehouse's content-keyed dir name. */
   private def sqlCatalogFor(s: org.apache.spark.sql.SparkSession,
-      name: String, warehouse: String): String = {
-    // catalog instances are cached per session once touched, so the
-    // name must be unique per warehouse — key it on the artifact tag
-    val cat = name.replaceAll("[^A-Za-z0-9_]", "_")
+      warehouse: String): String = {
+    val cat = ("graft_" + new org.apache.hadoop.fs.Path(warehouse).getName)
+      .replaceAll("[^A-Za-z0-9_]", "_")
     s.conf.set(s"spark.sql.catalog.$cat", "graft.dsv2.GraftCatalog")
     s.conf.set(s"spark.sql.catalog.$cat.warehouse", warehouse)
     cat
@@ -1889,12 +1786,10 @@ object Scans {
     * manifest). */
   private def metaAggRoot(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
-    val tag = new java.io.File(d).getName
-    val snap = Snapshot.of(Seq(s"$d/events.parquet"))
     // tag bumped round 20: the manifest shape gained per-file sum__
     // records, and a stale content-keyed build would serve without
     // them (the playbook's new-tag-on-new-shape rule)
-    val root = Artifacts.scratch(s, s"meta_agg_r20_${tag}_$snap") + "/t"
+    val root = keyedRoot(s, d, "meta_agg_r20") + "/t"
     val ev = t(s, d, "events")
       .select(col("user_id"), col("event_id"),
         ep(col("ts")).as("ts_us"), round(col("value"), 2).as("value"))
@@ -1914,9 +1809,7 @@ object Scans {
     * clustered fact files and ONLY the runtime key values can prune. */
   private def runtimePruneRoot(s: org.apache.spark.sql.SparkSession,
       d: String): (String, String) = {
-    val tag = new java.io.File(d).getName
-    val snap = Snapshot.of(Seq(s"$d/events.parquet"))
-    val base = Artifacts.scratch(s, s"runtime_prune_${tag}_$snap")
+    val base = keyedRoot(s, d, "runtime_prune")
     val root = s"$base/t"
     val dimPath = s"$base/dim"
     val ev = t(s, d, "events")
@@ -1948,24 +1841,15 @@ object Scans {
     * merge_upsert changeset through the real SQL door. */
   private def mergeSqlRoot(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
-    val tag = new java.io.File(d).getName
-    val snap = Snapshot.of(Seq(s"$d/events.parquet"))
-    val wh = Artifacts.scratch(s, s"merge_sql_${tag}_$snap")
+    val wh = keyedRoot(s, d, "merge_sql")
     val root = s"$wh/t"
-    val ev = t(s, d, "events")
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        ep(col("ts")).as("ts_us"), round(col("value"), 2).as("value"))
-    val w = Window.partitionBy("user_id")
-      .orderBy(col("ts_us").desc, col("event_id").desc)
-    def latest(df: org.apache.spark.sql.DataFrame) = df
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") === 1).drop("rn")
+    val ev = t(s, d, "events").select(imageCols: _*)
     buildVersionsOnce(s, root, 2) { (i, eb) =>
       if (i == 0) {
         graft.streaming.SnapshotTable.commitWithStats(s, root,
           "user_id", retain = 4, expectedBase = eb)(_ =>
           graft.streaming.SnapshotTable.clusterBy(
-            latest(ev.where(pmod(col("event_id"), lit(2)) === 0))
+            latestUs(ev.where(pmod(col("event_id"), lit(2)) === 0))
               .select(col("user_id"), col("event_id"), col("ts_us"),
                 col("value")), "user_id", 8))
         ()
@@ -1973,8 +1857,8 @@ object Scans {
         // resume-safe: a crash between v1 and the declaration leaves
         // the table plain; re-declare before the merge (idempotent)
         graft.streaming.SnapshotTable.setRowId(s, root, "user_id")
-        val cat = sqlCatalogFor(s, s"graft_msql_${tag}_$snap", wh)
-        latest(ev.where(pmod(col("event_id"), lit(2)) === 1))
+        val cat = sqlCatalogFor(s, wh)
+        latestUs(ev.where(pmod(col("event_id"), lit(2)) === 1))
           .select(col("user_id"), col("event_id"), col("ts_us"),
             col("value"),
             (col("event_type") === "error").as("s_del"))
@@ -1997,74 +1881,51 @@ object Scans {
     root
   }
 
-  /** v1 = latest image per user over ALL events (rowid declared),
-    * v2 = SQL `DELETE FROM t WHERE event_id % 7 = 3` — a predicate the
-    * point-delete surface could never express. */
-  private def deleteSqlRoot(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    val tag = new java.io.File(d).getName
-    val snap = Snapshot.of(Seq(s"$d/events.parquet"))
-    val wh = Artifacts.scratch(s, s"delete_sql_${tag}_$snap")
+  /** The SQL-door DELETE chain: v1 = latest image per user over ALL
+    * events (rowid user_id declared, stats + clustering on user_id),
+    * v2 = SQL `DELETE FROM t WHERE <pred>` lowered onto merge-on-read
+    * deletion vectors. Returns the warehouse; the table is `<wh>/t`. */
+  private def sqlDeleteChain(s: org.apache.spark.sql.SparkSession,
+      d: String, name: String, pred: String): String = {
+    val wh = keyedRoot(s, d, name)
     val root = s"$wh/t"
     val ev = t(s, d, "events")
       .select(col("user_id"), col("event_id"),
         ep(col("ts")).as("ts_us"), round(col("value"), 2).as("value"))
-    val w = Window.partitionBy("user_id")
-      .orderBy(col("ts_us").desc, col("event_id").desc)
     buildVersionsOnce(s, root, 2) { (i, eb) =>
       if (i == 0) {
         graft.streaming.SnapshotTable.commitWithStats(s, root,
           "user_id", retain = 4, expectedBase = eb)(_ =>
-          graft.streaming.SnapshotTable.clusterBy(
-            ev.withColumn("rn", row_number().over(w))
-              .where(col("rn") === 1).drop("rn"), "user_id", 8))
+          graft.streaming.SnapshotTable.clusterBy(latestUs(ev), "user_id", 8))
         ()
       } else {
         graft.streaming.SnapshotTable.setRowId(s, root, "user_id")
-        val cat = sqlCatalogFor(s, s"graft_dsql_${tag}_$snap", wh)
-        try {
-          s.sql(s"DELETE FROM $cat.t WHERE event_id % 7 = 3"); ()
-        } catch { case e: Throwable => rethrowConflictOr(e) }
-      }
-    }
-    root
-  }
-
-  /** SQL-maintenance chain (round 20): v1 = latest per-user image of
-    * ALL events (rowid declared, stats + clustering on user_id),
-    * v2 = SQL `DELETE … WHERE event_id % 5 = 2` (merge-on-read DVs),
-    * then the maintenance verbs through `CALL` — each guarded by its
-    * observable no-op condition (DV presence, fragment count, history
-    * depth), so a warm re-invocation performs ZERO commits and a
-    * crash at any point converges on the next run. */
-  private def sqlMaintRoot(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    val tag = new java.io.File(d).getName
-    val snap = Snapshot.of(Seq(s"$d/events.parquet"))
-    val wh = Artifacts.scratch(s, s"sql_maint_${tag}_$snap")
-    val root = s"$wh/t"
-    val ev = t(s, d, "events")
-      .select(col("user_id"), col("event_id"),
-        ep(col("ts")).as("ts_us"), round(col("value"), 2).as("value"))
-    val w = Window.partitionBy("user_id")
-      .orderBy(col("ts_us").desc, col("event_id").desc)
-    buildVersionsOnce(s, root, 2) { (i, eb) =>
-      if (i == 0) {
-        graft.streaming.SnapshotTable.commitWithStats(s, root,
-          "user_id", retain = 4, expectedBase = eb)(_ =>
-          graft.streaming.SnapshotTable.clusterBy(
-            ev.withColumn("rn", row_number().over(w))
-              .where(col("rn") === 1).drop("rn"), "user_id", 8))
-        ()
-      } else {
-        graft.streaming.SnapshotTable.setRowId(s, root, "user_id")
-        val cat = sqlCatalogFor(s, s"graft_maint_${tag}_$snap", wh)
-        try { s.sql(s"DELETE FROM $cat.t WHERE event_id % 5 = 2"); () }
+        val cat = sqlCatalogFor(s, wh)
+        try { s.sql(s"DELETE FROM $cat.t WHERE $pred"); () }
         catch { case e: Throwable => rethrowConflictOr(e) }
       }
     }
+    wh
+  }
+
+  /** `table_delete_sql`'s table: the DELETE chain with
+    * `event_id % 7 = 3` — a predicate the point-delete surface could
+    * never express. */
+  private def deleteSqlRoot(s: org.apache.spark.sql.SparkSession,
+      d: String): String =
+    sqlDeleteChain(s, d, "delete_sql", "event_id % 7 = 3") + "/t"
+
+  /** SQL-maintenance chain (round 20): the DELETE chain with
+    * `event_id % 5 = 2`, then the maintenance verbs through `CALL` —
+    * each guarded by its observable no-op condition (DV presence,
+    * fragment count, history depth), so a warm re-invocation performs
+    * ZERO commits and a crash at any point converges on the next run. */
+  private def sqlMaintRoot(s: org.apache.spark.sql.SparkSession,
+      d: String): String = {
+    val wh = sqlDeleteChain(s, d, "sql_maint", "event_id % 5 = 2")
+    val root = s"$wh/t"
     val st = graft.streaming.SnapshotTable
-    val cat = sqlCatalogFor(s, s"graft_maint_${tag}_$snap", wh)
+    val cat = sqlCatalogFor(s, wh)
     if (st.dvOf(s, root, st.latestVersion(s, root).get).nonEmpty) {
       s.sql(s"CALL $cat.fold_dv(table => 't')").collect(); ()
     }
@@ -2085,9 +1946,7 @@ object Scans {
     * BIGINT column. */
   private def widenRoot(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
-    val tag = new java.io.File(d).getName
-    val snap = Snapshot.of(Seq(s"$d/events.parquet"))
-    val root = Artifacts.scratch(s, s"widen_${tag}_$snap") + "/t"
+    val root = keyedRoot(s, d, "widen") + "/t"
     val ev = t(s, d, "events").select(col("user_id"), col("event_id"))
     def counts(parity: Int, name: String, asLong: Boolean) = {
       val c = ev.where(pmod(col("event_id"), lit(2)) === parity)
@@ -2126,9 +1985,7 @@ object Scans {
     * correct image, and any later total that disagrees restores it. */
   private def clusteredWriteRoot(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
-    val tag = new java.io.File(d).getName
-    val snap = Snapshot.of(Seq(s"$d/events.parquet"))
-    val wh = Artifacts.scratch(s, s"clustered_write_${tag}_$snap")
+    val wh = keyedRoot(s, d, "clustered_write")
     val root = s"$wh/t"
     val st = graft.streaming.SnapshotTable
     val ev = t(s, d, "events")
@@ -2145,7 +2002,7 @@ object Scans {
       catch { case e: Throwable => rethrowConflictOr(e) }
     }
     if (st.committedVersions(s, root).size < 2) {
-      val cat = sqlCatalogFor(s, s"graft_clw_${tag}_$snap", wh)
+      val cat = sqlCatalogFor(s, wh)
       // ~1 MiB advisory partitions: several range-disjoint files at
       // oracle scale without fragmenting the sf0.1 bench build
       val advKey = "spark.graft.dsv2.writeAdvisoryPartitionBytes"
@@ -2172,6 +2029,21 @@ object Scans {
     root
   }
 
+  /** Build a fixed-length snapshot table ONCE per content-keyed root,
+    * surviving a lost first-build race: on a SHARED artifact root two
+    * JVMs can both see fewer than `n` committed versions and both
+    * start committing — exactly one wins each version and the loser's
+    * SnapshotTable.commit throws its loud conflict. Because the root
+    * is content-keyed, the winner is committing the IDENTICAL batches
+    * (each a pure function of corpus content), so the right response
+    * is not to fail the key but to wait for the winner to finish —
+    * the same adopt-the-winner discipline Artifacts.materialize
+    * applies to its lost publishes. A winner that dies mid-build
+    * leaves the wait to time out loudly (retry resumes at the
+    * version-count gate and commits only the missing batches). The
+    * gate is the COUNT of committed versions, not mere existence: a
+    * prior process that died after some of the `n` commits would
+    * otherwise leave a root that skips the build forever. */
   private def buildVersionsOnce(s: org.apache.spark.sql.SparkSession,
       root: String, n: Int)(commitBatch: (Int, Long) => Unit): Unit = {
     def have: Int =

@@ -64,4 +64,51 @@ class ArtifactPhaseSpec extends AnyFunSuite {
     val warm = (System.nanoTime() - t0) / 1e9
     assert(warm < 30.0, f"warm phase re-invocation took $warm%.1f s")
   }
+
+  test("the table-phase subset rule covers every table_* key, " +
+      "table_dsv2_read included, and no other family") {
+    val reads = graft.ops.Scans.readsTableChain _
+    assert(reads("table_dsv2_read"))
+    assert(reads("sink_snapshot_merge"))
+    graft.ops.Scans.queries.keys.filter(_.startsWith("table_"))
+      .foreach(k => assert(reads(k), k))
+    Seq("merge_upsert", "sink_parquet", "graph_pagerank",
+      "llm_dedup_clusters").foreach(k => assert(!reads(k), k))
+  }
+
+  test("readers of one chain agree: restore head = time travel v2, " +
+      "merge_pruned image = cdf v2, changelog fold = cdf v2 - v1") {
+    graft.ops.Scans.tableArtifactBuild(spark, sf)
+    val dec = "decimal(18,2)"
+    def cents(x: Double) =
+      BigDecimal(x).setScale(2, BigDecimal.RoundingMode.HALF_UP)
+    // (rows, exact DECIMAL sum of value) of a served image
+    def board(key: String): (Long, BigDecimal) = {
+      val r = q(key).agg(count(lit(1)), sum(col("value").cast(dec)))
+        .first()
+      (r.getLong(0), BigDecimal(r.getDecimal(1)).setScale(2))
+    }
+    // version -> (n_users, sum_value) of a per-version board key
+    def versions(key: String): Map[Long, (Long, BigDecimal)] =
+      q(key).collect().map(r => r.getAs[Long]("version") ->
+        ((r.getAs[Long]("n_users"), cents(r.getAs[Double]("sum_value")))))
+        .toMap
+    // restore-then-read ≡ time travel to version 2
+    assert(board("table_restore") === versions("table_time_travel")(2L))
+    val cdf = versions("table_cdf_consume")
+    val (n1, v1) = cdf(1L)
+    val (n2, v2) = cdf(2L)
+    assert(board("table_merge_pruned") === ((n2, v2)))
+    // the changelog's signed fold is the v1 -> v2 board delta
+    val ch = q("table_changelog")
+    assert(ch.count() > 0, "table_changelog is empty")
+    val post = col("_change_type").isin("insert", "update_postimage")
+    val r = ch.agg(
+      sum(when(col("_change_type") === "insert", 1L)
+        .when(col("_change_type") === "delete", -1L).otherwise(0L)),
+      sum(when(post, col("value").cast(dec))
+        .otherwise(-col("value").cast(dec)))).first()
+    assert((r.getLong(0), BigDecimal(r.getDecimal(1)).setScale(2)) ===
+      ((n2 - n1, v2 - v1)))
+  }
 }

@@ -790,12 +790,13 @@ class SnapshotTableSpec extends AnyFunSuite {
       "invocation reads, never re-commits") {
     import org.apache.spark.sql.functions.col
     val first = q("table_time_travel").collect()
-    // the key's root is content-keyed; find it and pin its version set
+    // the key's root (the restore chain, whose first three versions it
+    // reads) is content-keyed; find it and pin its version set
     val root = new java.io.File(
       new java.net.URI(graft.ops.Artifacts.root(spark)))
     def roots() = Option(new java.io.File(root, "scratch").listFiles())
       .getOrElse(Array.empty)
-      .filter(_.getName.startsWith("time_travel_")).toSeq
+      .filter(_.getName.startsWith("restore_m_")).toSeq
     assert(roots().nonEmpty)
     def versions() = roots().map(r =>
       Option(r.listFiles()).getOrElse(Array.empty)
