@@ -162,8 +162,8 @@ object SnapshotTable {
     *                stats — never the carried bulk)
     *
     * and readers resolve the chain: files(v) = files(parent) − removed
-    * + files_new; the stats view is the parent view anti-joined with
-    * the removals unioned with the fresh rows. Every
+    * + files_new; the stats view is the parent view minus the removals
+    * unioned with the fresh rows. Every
     * checkpointInterval-th commit is a CHECKPOINT — it writes today's
     * full `_files` sidecar + merged `_manifest`, bounding every chain
     * walk (and the metadata kept alive by it) to K links; full-image
@@ -466,21 +466,72 @@ object SnapshotTable {
     if (fs.exists(p)) Some(readText(fs, p).trim.toLong) else None
   }
 
+  /** Parquet part files of a directory, sorted by name. */
+  private def parquetParts(fs: FileSystem, dir: String): Seq[FileStatus] =
+    fs.listStatus(new Path(dir)).toSeq
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .sortBy(_.getPath.getName)
+
+  /** Footer key under which Spark's parquet writer records the row
+    * schema it wrote (`ParquetReadSupport.SPARK_METADATA_KEY`). */
+  private val sparkRowSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Footer metadata of one parquet file, read on the driver (one
+    * footer fetch, no Spark job). */
+  private def footerOf(s: SparkSession,
+      file: FileStatus): org.apache.parquet.hadoop.metadata.FileMetaData = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file,
+        s.sparkContext.hadoopConfiguration))
+    try r.getFooter.getFileMetaData finally r.close()
+  }
+
+  /** The schema Spark recorded in a footer, if it recorded one. */
+  private def recordedSchema(
+      meta: org.apache.parquet.hadoop.metadata.FileMetaData)
+      : Option[StructType] =
+    Option(meta.getKeyValueMetaData.get(sparkRowSchemaKey)).flatMap(j =>
+      scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(j))
+        .toOption.collect { case st: StructType => st })
+
+  /** Top-level column names of a parquet file, from its footer's
+    * message type: Spark writes its row schema's fields 1:1 as the
+    * message's top-level fields, so these are the names inference
+    * returns. */
+  private[graft] def footerFieldNames(s: SparkSession,
+      file: FileStatus): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    footerOf(s, file).getSchema.getFields.asScala.map(_.getName).toSeq
+  }
+
+  /** `s.read.parquet(paths)` without its schema-inference Spark job:
+    * the schema comes from `footer`'s file (one part of `paths`;
+    * every part of one write shares it). Inference answers from the
+    * same footer key — it reads one part's footer in a Spark job — so
+    * the frame is the one `s.read.parquet(paths)` builds. A footer
+    * without the key (a file Spark did not write) falls back to
+    * inference. */
+  private[graft] def readParquetTyped(s: SparkSession, footer: FileStatus,
+      paths: Seq[String]): DataFrame =
+    recordedSchema(footerOf(s, footer)) match {
+      case Some(st) => s.read.schema(st).parquet(paths: _*)
+      case None => s.read.parquet(paths: _*)
+    }
+
   /** Read a parquet SIDECAR directory (`_manifest`, `_dv`, the legacy
     * `_stats*` dirs) by its explicit part-file list instead of the
     * directory path: a root path whose name starts with `_` is
     * hidden-filtered by Spark's file index, which still serves the
     * read but logs a "All paths were ignored" WARN per call — at one
     * manifest read per query that polluted every bench tail (round-17
-    * verdict item 8). One listing RPC against a dir that holds a
-    * coalesce(1) part file — driver-cheap. */
+    * verdict item 8). One listing RPC and one footer read against a
+    * dir that holds a coalesce(1) part file; no Spark job until the
+    * frame is evaluated. */
   private def readSidecarParquet(s: SparkSession, fs: FileSystem,
       dir: String): DataFrame = {
-    val parts = fs.listStatus(new Path(dir)).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toString).sorted
+    val parts = parquetParts(fs, dir)
     require(parts.nonEmpty, s"no parquet part files under $dir")
-    s.read.parquet(parts: _*)
+    readParquetTyped(s, parts.head, parts.map(_.getPath.toString))
   }
 
   private def textLines(fs: FileSystem, p: Path): Seq[String] =
@@ -547,15 +598,7 @@ object SnapshotTable {
         val parentView =
           if (chainHasStats(parent)) build(parent)
           else fileOnlyManifest(s, dataFiles(s, root, parent))
-        val removed = removedOf(fs, root, x)
-        val kept =
-          if (removed.isEmpty) parentView
-          else {
-            import s.implicits._
-            parentView.join(
-              org.apache.spark.sql.functions.broadcast(
-                removed.toDF("file")), Seq("file"), "left_anti")
-          }
+        val kept = withoutFiles(parentView, removedOf(fs, root, x))
         val fresh =
           if (ownManifest(x))
             readSidecarParquet(s, fs, s"$root/v=$x/$manifestDir")
@@ -563,6 +606,33 @@ object SnapshotTable {
         kept.unionByName(fresh, allowMissingColumns = true)
     }
     build(v)
+  }
+
+  /** `view` minus the rows whose `file` is in `removed` (one chain
+    * link's removals). Up to `maxLiterals` files filter as a literal
+    * set: a broadcast anti-join is one Spark job per link on every
+    * manifest query, so a chain of point upserts (one touched file per
+    * link) would grow each query's job count with the chain depth.
+    * Measured link sizes: at most 9 over the `lake_rw` workload's
+    * MERGE / DELETE / `fold_dv` / `optimize` cycle and over
+    * ManifestScale's merges, but a copy-on-write merge with a key in
+    * every file of a 400-file table removes all 400 in one link. Past
+    * the cap (the in-list cap [[bloomProbeMaxKeys]] puts on probe
+    * expressions) the list stays out of the plan and is broadcast:
+    * filtering a 20k-file view on 4 cores, the literal set was faster up
+    * to 400 removals and the anti-join from 2,000 (587 vs 207 ms at
+    * 10,000), its planning cost growing with the list. */
+  private[graft] def withoutFiles(view: DataFrame, removed: Seq[String],
+      maxLiterals: Int = bloomProbeMaxKeys): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, col}
+    if (removed.isEmpty) view
+    else if (removed.size <= maxLiterals)
+      view.where(!col("file").isin(removed: _*))
+    else {
+      val s = view.sparkSession
+      import s.implicits._
+      view.join(broadcast(removed.toDF("file")), Seq("file"), "left_anti")
+    }
   }
 
   /** Public face of the merged stats-manifest view (specs and ops
@@ -1625,19 +1695,21 @@ object SnapshotTable {
   }
 
   /** Column names of version `v`'s manifest VIEW without building the
-    * view: the union of the chain's LEAF manifest schemas (parquet
-    * footer reads — on a depth-7 chain over a 1M-file table, building
-    * the union-plus-anti-join DataFrame just to call .schema measured
-    * ~1.7 s of analyzer/file-index work per call; the footers answer
-    * in milliseconds). */
+    * view: the union of the chain's LEAF manifest schemas (on a
+    * depth-7 chain over a 1M-file table, building the view DataFrame
+    * just to call .schema measured ~1.7 s of analyzer/file-index work
+    * per call). Each link costs one listing and one driver-side footer
+    * read ([[footerFieldNames]]) — no DataFrame, no Spark job. */
   private def manifestFieldsOf(s: SparkSession, root: String,
       v: Long): Seq[String] = {
     val fs = fsOf(s, root)
     val own =
-      if (fs.exists(new Path(s"$root/v=$v/$manifestDir")))
-        readSidecarParquet(s, fs, s"$root/v=$v/$manifestDir")
-          .schema.fieldNames.toSeq
-      else Nil
+      if (fs.exists(new Path(s"$root/v=$v/$manifestDir"))) {
+        val parts = parquetParts(fs, s"$root/v=$v/$manifestDir")
+        require(parts.nonEmpty,
+          s"no parquet part files under $root/v=$v/$manifestDir")
+        footerFieldNames(s, parts.head)
+      } else Nil
     deltaParent(fs, root, v) match {
       case Some(p) => (manifestFieldsOf(s, root, p) ++ own).distinct
       case None => own
@@ -1735,8 +1807,7 @@ object SnapshotTable {
     * to words driver-side at manifest scale) — bloom column sets are
     * one or two columns in practice, and the pass reads only the
     * segment just written, never the table. */
-  private def segmentBlooms(s: SparkSession, root: String,
-      segName: String, bloomCols: Seq[String],
+  private def segmentBlooms(seg: DataFrame, bloomCols: Seq[String],
       bloomBits: Int): Map[String, Map[String, Seq[Long]]] = {
     import org.apache.spark.sql.functions._
     if (bloomCols.isEmpty) Map.empty
@@ -1750,12 +1821,11 @@ object SnapshotTable {
       // silently duplicate it (round-16 advice — validate loudly)
       require(bloomBits > 0 && bloomBits % 64 == 0,
         s"bloomBits must be a positive multiple of 64, got $bloomBits")
-      val df = s.read.parquet(s"$root/$segName")
       bloomCols.map { c =>
         val pos = explode(array((0 until bloomK).map(i =>
           pmod(hash(col(c), lit(i)).cast("long"), lit(bloomBits.toLong))
             .cast("int")): _*))
-        val byFile = df.select(relFile.as("file"), pos.as("p"))
+        val byFile = seg.select(relFile.as("file"), pos.as("p"))
           .distinct()
           .groupBy("file").agg(collect_set(col("p")).as("ps"))
           .collect().map { r =>
@@ -1794,11 +1864,14 @@ object SnapshotTable {
       bloomBits: Int = defaultBloomBits): (Seq[String], DataFrame) = {
     import org.apache.spark.sql.functions._
     val fs = fsOf(s, root)
-    val listing = fs.listStatus(new Path(s"$root/$segName")).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(st => s"$segName/${st.getPath.getName}" -> st.getLen)
+    val parts = parquetParts(fs, s"$root/$segName")
+    val listing =
+      parts.map(st => s"$segName/${st.getPath.getName}" -> st.getLen)
     val files = listing.map(_._1)
     val sizeOf = listing.toMap
+    // the segment this commit just wrote, typed by its own footer: the
+    // stats and bloom passes read it without an inference job
+    lazy val seg = readParquetTyped(s, parts.head, Seq(s"$root/$segName"))
     // file BYTES ride the manifest (Iceberg's file_size_in_bytes):
     // maintenance decisions (compactSmall's fragment scan) then read
     // one manifest instead of issuing a getFileStatus RPC per file —
@@ -1820,9 +1893,8 @@ object SnapshotTable {
         // — wrap-consistent with Spark's own long sum), so unfiltered
         // SUM joins COUNT/MIN/MAX in the metadata-only aggregate path;
         // float/double sums are order-sensitive and stay scan-served.
-        val segSchema = s.read.parquet(s"$root/$segName").schema
         def integral(c: String): Boolean =
-          segSchema.fields.find(_.name == c).map(_.dataType).exists {
+          seg.schema.fields.find(_.name == c).map(_.dataType).exists {
             case _: org.apache.spark.sql.types.ByteType => true
             case _: org.apache.spark.sql.types.ShortType => true
             case _: org.apache.spark.sql.types.IntegerType => true
@@ -1844,7 +1916,7 @@ object SnapshotTable {
               Seq(sum(col(c).cast("decimal(38,0)")).as(s"sum__$c"))
             else Nil)) :+
           count(lit(1)).as("rows")
-        val agg = s.read.parquet(s"$root/$segName")
+        val agg = seg
           .groupBy(relFile.as("file"))
           .agg(aggs.head, aggs.tail: _*)
         val outSchema = StructType(agg.schema.fields.map(
@@ -1866,7 +1938,7 @@ object SnapshotTable {
       }
     if (bloomCols.isEmpty || files.isEmpty) base
     else {
-      val blooms = segmentBlooms(s, root, segName, bloomCols, bloomBits)
+      val blooms = segmentBlooms(seg, bloomCols, bloomBits)
       val (fs0, df0) = base
       val outSchema = StructType(df0.schema.fields ++ bloomCols.map(c =>
         StructField(s"bloom__$c",
@@ -2185,7 +2257,7 @@ object SnapshotTable {
           require(schema.fieldNames.contains(mergeKey),
             s"merge key '$mergeKey' not in table schema")
           val candidates = candidateFiles(s, root, v, batch, mergeKey,
-            schema)
+            schema, inherited, inheritedBloom)
           val touched: Set[String] =
             if (candidates.isEmpty) Set.empty
             else {
@@ -2233,14 +2305,15 @@ object SnapshotTable {
     * anti-pattern). Optimization only — no-stats files stay candidates
     * via the isNull arms; null batch keys never equi-match existing
     * rows, so they are rightly excluded. Shared by [[commitMerge]] and
-    * [[commitMergeDV]]. */
+    * [[commitMergeDV]], which pass `v`'s [[statsColsOf]] and
+    * [[bloomColsOf]] they already resolved for the commit. */
   private def candidateFiles(s: SparkSession, root: String, v: Long,
-      batch: DataFrame, mergeKey: String,
-      schema: StructType): Seq[String] = {
+      batch: DataFrame, mergeKey: String, schema: StructType,
+      statsCols: Seq[String], bloomCols: Seq[String]): Seq[String] = {
     import org.apache.spark.sql.functions._
     val all = dataFiles(s, root, v)
-    val hasRange = statsColsOf(s, root, v).contains(mergeKey)
-    val hasBloom = bloomColsOf(s, root, v).contains(mergeKey)
+    val hasRange = statsCols.contains(mergeKey)
+    val hasBloom = bloomCols.contains(mergeKey)
     if (!hasRange && !hasBloom) all
     else {
       // manifest columns are physical-keyed (rename-stable)
@@ -2342,7 +2415,7 @@ object SnapshotTable {
         var hit: Option[DataFrame] = None
         try {
           val candidates = candidateFiles(s, root, v, batch, mergeKey,
-            schema)
+            schema, inherited, inheritedBloom)
           val keys = batch.select(col(mergeKey).as("_graft_k"))
             .distinct()
           val visible =

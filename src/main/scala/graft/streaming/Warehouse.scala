@@ -63,10 +63,16 @@ object Warehouse {
         if (!batch.isEmpty) {
           val s = batch.sparkSession
           val incoming = batch.select("w_start", "event_type", "n", "revenue")
+          // the serving table's own filesystem (a non-local or
+          // non-default scheme must be probed, swapped and read there);
+          // the previous image is read under the incoming rows' schema
+          // (parquet reads by name, so `rk` is skipped and nothing is
+          // inferred)
+          val dst = new org.apache.hadoop.fs.Path(statePath)
+          val fs = dst.getFileSystem(s.sparkContext.hadoopConfiguration)
           val merged =
-            if (new java.io.File(statePath).exists())
-              s.read.parquet(statePath)
-                .select("w_start", "event_type", "n", "revenue")
+            if (fs.exists(dst))
+              s.read.schema(incoming.schema).parquet(statePath)
                 .unionByName(incoming)
             else incoming
           val w = Window.partitionBy("w_start")
@@ -78,9 +84,6 @@ object Warehouse {
             .where(col("rk") <= n)
           val tmp = statePath + ".next"
           ranked.write.mode("overwrite").parquet(tmp)
-          val fs = org.apache.hadoop.fs.FileSystem.get(
-            s.sparkContext.hadoopConfiguration)
-          val dst = new org.apache.hadoop.fs.Path(statePath)
           fs.delete(dst, true)
           fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)
         }

@@ -2183,4 +2183,153 @@ class SnapshotTableSpec extends AnyFunSuite {
       assert(SnapshotTable.read(spark, root).get.count() === 2)
     }
   }
+
+  /** Spark jobs `f` launches from this thread, by the call site of each
+    * job's first stage — recorded by a listener on a private job group
+    * with the listener bus drained before and after (events arrive
+    * asynchronously — the Harness.Timer discipline). */
+  private def jobsOf[A](f: => A): (A, Seq[String]) = {
+    val sc = spark.sparkContext
+    def drain(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          names.add(j.stageInfos.headOption.map(_.name).getOrElse("?"))
+    }
+    drain()
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "commit job count")
+    try {
+      val a = f
+      drain()
+      import scala.jdk.CollectionConverters._
+      (a, names.asScala.toSeq)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+  }
+
+  test("commit jobs do not grow with manifest-chain depth: commitMerge " +
+      "and commitMergeDV on a depth-6 delta chain run as many Spark " +
+      "jobs as on a depth-1 chain") {
+    Seq("commitMerge", "commitMergeDV").foreach { how =>
+      withRoot { root =>
+        // every commit has the same shape: upsert one key of the
+        // previous commit's batch (one touched file) plus five new
+        // keys, merge key `k` carrying range stats
+        def merge(i: Int): Seq[String] = {
+          val b = img(((i * 10L - 10) +: (i * 10L until i * 10L + 5))
+            .filter(_ >= 0).map(k => (k, s"v$i")): _*)
+          jobsOf {
+            if (how == "commitMerge")
+              SnapshotTable.commitMerge(spark, root, b, "k",
+                retain = 10)((_, bb) => bb)
+            else
+              SnapshotTable.commitMergeDV(spark, root, b, "k",
+                retain = 10)((_, bb) => bb)
+          }._2
+        }
+        // commit i lands on a base whose delta chain is i-1 links deep.
+        // Counted with AQE off: its query-stage jobs are submitted from
+        // futures, and on the DV path a run skips or adds a stage job
+        // or two by timing (17 or 19 jobs at one depth); without it
+        // each exchange and broadcast is exactly one job
+        val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        val jobs =
+          try (0 to 7).map(merge)
+          finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        val fs = fsFor(root)
+        val head = SnapshotTable.latestVersion(spark, root).get
+        assert(fs.exists(new org.apache.hadoop.fs.Path(
+          s"$root/v=$head/_parent")), "the chain must still be a delta")
+        assert(jobs(2).size === jobs(7).size, s"$how jobs per commit " +
+          s"grew with chain depth (commits 0-7: " +
+          s"${jobs.map(_.size).mkString(", ")}); depth 1: " +
+          s"${jobs(2).mkString("; ")}; depth 6: ${jobs(7).mkString("; ")}")
+        assert(SnapshotTable.read(spark, root).get.count() === 40)
+      }
+    }
+  }
+
+  test("a link's removals filter as literals up to the cap and " +
+      "anti-join past it, keeping the same rows") {
+    import spark.implicits._
+    val view = (1 to 6).map(i => (s"seg/f$i.parquet", i.toLong))
+      .toDF("file", "rows")
+    val removed = Seq("seg/f2.parquet", "seg/f4.parquet", "seg/f5.parquet")
+    def joins(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.analyzed.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+      }.size
+    val literal = SnapshotTable.withoutFiles(view, removed, maxLiterals = 3)
+    val anti = SnapshotTable.withoutFiles(view, removed, maxLiterals = 2)
+    assert(joins(literal) === 0, "at the cap the removals are a filter")
+    assert(joins(anti) === 1, "past the cap the removals anti-join")
+    assert(joins(SnapshotTable.withoutFiles(view, removed)) === 0)
+    val kept = Set("seg/f1.parquet", "seg/f3.parquet", "seg/f6.parquet")
+    Seq(literal, anti).foreach(df =>
+      assert(df.as[(String, Long)].collect().map(_._1).toSet === kept))
+    assert(SnapshotTable.withoutFiles(view, Nil) eq view)
+  }
+
+  test("footer-typed parquet reads equal Spark's inferred reads and run " +
+      "no job: a stats+bloom manifest, a DV sidecar, and a fresh " +
+      "segment after rename, widen and ADD COLUMN") {
+    withRoot { root =>
+      import spark.implicits._
+      val fs = fsFor(root)
+      SnapshotTable.commitWithSkipping(spark, root, Seq("k"), Seq("k"),
+        bloomBits = 4096, retain = 10)(_ =>
+        (1 to 40).map(i => (i.toLong, i, s"v$i")).toDF("k", "n", "v")
+          .repartitionByRange(4, col("k")))
+      SnapshotTable.commitMergeDV(spark, root,
+        Seq((3L, 30, "dv")).toDF("k", "n", "v"), "k",
+        retain = 10)((_, b) => b)
+      val vDv = SnapshotTable.latestVersion(spark, root).get
+      SnapshotTable.renameColumn(spark, root, "v", "label", retain = 10)
+      SnapshotTable.widenColumn(spark, root, "n",
+        org.apache.spark.sql.types.LongType, retain = 10)
+      SnapshotTable.addColumn(spark, root, "note",
+        org.apache.spark.sql.types.StringType, retain = 10)
+      SnapshotTable.commitMerge(spark, root,
+        Seq((5L, 50L, "seg", "x")).toDF("k", "n", "label", "note"), "k",
+        retain = 10)((_, b) => b)
+      val vSeg = SnapshotTable.latestVersion(spark, root).get
+      def parts(dir: String) = fs.listStatus(
+          new org.apache.hadoop.fs.Path(dir)).toSeq
+        .filter(_.getPath.getName.endsWith(".parquet"))
+        .sortBy(_.getPath.getName)
+      def same(dir: String): Seq[String] = {
+        val ps = parts(dir)
+        assert(ps.nonEmpty, s"no parquet parts under $dir")
+        val paths = ps.map(_.getPath.toString)
+        val (typed, jobs) = jobsOf(
+          SnapshotTable.readParquetTyped(spark, ps.head, paths).schema)
+        assert(jobs.isEmpty, s"typed read of $dir launched $jobs")
+        assert(typed === spark.read.parquet(paths: _*).schema, dir)
+        assert(SnapshotTable.footerFieldNames(spark, ps.head) ===
+          typed.fieldNames.toSeq, dir)
+        typed.fieldNames.toSeq
+      }
+      val manifest = same(s"$root/v=$vDv/_manifest")
+      Seq("file", "rows", "bytes", "min__k", "max__k", "nulls__k",
+        "sum__k", "bloom__k").foreach(c =>
+        assert(manifest.contains(c), s"manifest lacks $c: $manifest"))
+      assert(same(s"$root/v=$vDv/_dv").contains("_graft_dvk"))
+      val seg = SnapshotTable.newFiles(spark, root, vSeg)
+        .map(_.split("/").head).distinct
+      assert(seg.size === 1, s"one fresh segment expected, got $seg")
+      // physical names: the renamed column keeps its original name
+      assert(same(s"$root/${seg.head}").toSet === Set("k", "n", "v", "note"))
+    }
+  }
 }

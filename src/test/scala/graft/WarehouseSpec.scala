@@ -12,16 +12,19 @@ import graft.streaming.{Ev, Streams, Warehouse}
 class WarehouseSpec extends AnyFunSuite {
   import TestSpark._
 
-  test("streamed warehouse ADS equals the batch-computed top-N") {
+  /** Streams the corpus through the whole pipeline into a serving
+    * table at `statePath` and checks it against the same layers
+    * computed in batch. */
+  private def adsMatchesBatch(statePath: String,
+      checkpoint: String): Unit = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_wh").toString
     val events = Streams.typed(ops.Tables.events(spark, sf))
       .orderBy("event_id").collect().toSeq
 
     val input = MemoryStream[Ev]
     val query = Warehouse.run(input.toDS().toDF(), topN = 2,
-      s"$dir/ads", s"$dir/ckpt")
+      statePath, checkpoint)
     val chunks = events.grouped((events.size + 3) / 4).toSeq
     chunks.zipWithIndex.foreach { case (c, i) =>
       input.addData(c); query.processAllAvailable()
@@ -51,11 +54,27 @@ class WarehouseSpec extends AnyFunSuite {
       .where(col("rk") <= 2)
       .select(col("w_start"), col("event_type"), col("n"), col("rk"))
 
-    val streamedAds = spark.read.parquet(s"$dir/ads")
+    val streamedAds = spark.read.parquet(statePath)
       .select(col("w_start"), col("event_type"), col("n"), col("rk"))
     assert(streamedAds.count() === batchAds.count())
     assert(streamedAds.join(batchAds,
         Seq("w_start", "event_type", "n", "rk")).count() === batchAds.count())
+  }
+
+  test("streamed warehouse ADS equals the batch-computed top-N") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    adsMatchesBatch(s"$dir/ads", s"$dir/ckpt")
+  }
+
+  test("the ADS serving table keeps every batch's windows on a " +
+      "non-default filesystem scheme") {
+    // copyfs: is a local store under its own scheme — the serving
+    // table must be probed, read and swapped through ITS filesystem,
+    // not java.io.File or the default one
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.copyfs.impl", classOf[CopyRenameFileSystem].getName)
+    val dir = java.nio.file.Files.createTempDirectory("graft_wh_fs").toString
+    adsMatchesBatch(s"copyfs:$dir/ads", s"$dir/ckpt")
   }
 
   test("upsert merge is idempotent under foreachBatch redelivery: " +
