@@ -99,13 +99,12 @@ object ManifestScale {
       val out = fs.create(
         new org.apache.hadoop.fs.Path(s"$root/v=$v2/_files"), true)
       out.write(sidecar.getBytes("UTF-8")); out.close()
-      val ddlIn = fs.open(
-        new org.apache.hadoop.fs.Path(s"$root/v=$v1/_schema.ddl"))
-      val ddl = scala.io.Source.fromInputStream(ddlIn, "UTF-8").mkString
-      ddlIn.close()
-      val ddlOut = fs.create(
-        new org.apache.hadoop.fs.Path(s"$root/v=$v2/_schema.ddl"), true)
-      ddlOut.write(ddl.getBytes("UTF-8")); ddlOut.close()
+      // the per-version sidecars every committed version carries
+      Seq("_schema.ddl", "_commit_ts", "_retain").foreach(f =>
+        org.apache.hadoop.fs.FileUtil.copy(fs,
+          new org.apache.hadoop.fs.Path(s"$root/v=$v1/$f"), fs,
+          new org.apache.hadoop.fs.Path(s"$root/v=$v2/$f"), false, true,
+          spark.sparkContext.hadoopConfiguration))
       fs.create(new org.apache.hadoop.fs.Path(s"$root/v=$v2/_COMMITTED"),
         false).close()
 

@@ -1372,8 +1372,14 @@ object Scans {
           }.start()
         try q.processAllAvailable() finally q.stop()
         // stage the concatenated changelog; Spark's committer leaves
-        // the _SUCCESS materialize requires for a complete artifact
-        s.read.parquet(s"$work/batches/b*")
+        // the _SUCCESS materialize requires for a complete artifact.
+        // The batch dirs are named from one listing, not a `b*` glob:
+        // Spark's streaming-sink metadata probe takes a glob for a
+        // literal path and logs a FileNotFoundException WARN
+        val batches = workPath.getFileSystem(hc)
+          .listStatus(new org.apache.hadoop.fs.Path(s"$work/batches"))
+          .filter(_.isDirectory).map(_.getPath.toString).sorted
+        s.read.parquet(batches.toIndexedSeq: _*)
           .write.mode("overwrite").parquet(tmp.toString)
       } finally {
         workPath.getFileSystem(hc).delete(workPath, true); ()

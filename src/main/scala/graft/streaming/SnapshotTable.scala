@@ -28,27 +28,36 @@ class SnapshotConflictException(msg: String)
   * committed and a reader resolves its version exactly once, so a
   * concurrent commit can NEVER perturb an in-flight read.
   *
-  * Layout under `root/`:
+  * Layout under `root/` — the one layout every commit writes and every
+  * read resolves:
   *   seg-&lt;uuid&gt;/part-*.parquet   immutable data segments, written once
-  *   v=N/_files                  text FILE LIST, one root-relative
-  *                               path per line — full (checkpoint)
-  *                               versions only
-  *   v=N/_parent, _files_new,    DELTA (tiered) versions instead carry
-  *       _removed                a chain pointer + their own file
-  *                               delta (round 17; see the delta-
-  *                               manifest notes at [[parentFile]])
-  *   v=N/_manifest/              parquet stats manifest: (file, rows,
+  *
+  * Every committed `v=N` holds, REQUIRED:
+  *   _COMMITTED                  atomic commit marker (exclusive create)
+  *   _files  XOR  _parent        full (checkpoint) version: text FILE
+  *                               LIST, one root-relative path per line;
+  *                               or delta (tiered) version: the base
+  *                               version number (chain pointer, see the
+  *                               delta-manifest notes at [[parentFile]])
+  *   _schema.ddl                 the version's served schema
+  *   _commit_ts                  commit wall time (epoch millis)
+  *   _retain                     the table's retention horizon
+  * and, OPTIONAL:
+  *   _manifest/                  parquet stats manifest: (file, rows,
   *                               bytes, min__c/max__c, bloom__c per
-  *                               recorded column) — OPTIONAL, present
-  *                               iff stats exist; fresh-rows-only on
-  *                               delta versions (readers merge the
+  *                               recorded column) — present iff the
+  *                               chain carries stats; fresh-rows-only
+  *                               on delta versions (readers merge the
   *                               chain)
-  *   v=N/_dv/, _dv_key           keyed deletion vectors (merge-on-read)
-  *   v=N/_txn, _commit_ts        idempotence tokens, commit wall time
-  *   v=N/_schema.ddl             the version's served schema
-  *   v=N/_COMMITTED              atomic commit marker (exclusive create)
-  *   v=N/_RETIRED                vacuumed-but-chain-referenced stub
-  *                               marker (metadata kept, not committed)
+  *   _dv/, _dv_key               keyed deletion vectors (merge-on-read)
+  *   _txn                        idempotence tokens
+  *   _colmap                     logical→physical column mapping
+  *   _files_new, _removed        a delta version's own file delta
+  *   _RETIRED                    replaces `_COMMITTED` on a vacuumed-
+  *                               but-chain-referenced stub (metadata
+  *                               kept, not committed)
+  * A `v=N` without these (the pre-round-15 self-contained layout:
+  * parquet files directly under `v=N`) is refused, never read.
   *
   * A version is a MANIFEST referencing retained old files plus newly
   * written ones — the Iceberg/Delta commit shape, and the reason a
@@ -56,11 +65,7 @@ class SnapshotConflictException(msg: String)
   * [[commitAppend]] writes only the delta's data files and one small
   * manifest; no historical file is ever rewritten or copied. Full-image
   * [[commit]] (merges, compaction) writes one fresh segment and a
-  * manifest referencing only it. Versions produced before round 15 are
-  * self-contained parquet dirs ("legacy"); every read path detects and
-  * serves them, and the first [[commitAppend]] on a legacy base
-  * migrates it with one full commit (the data could not be referenced
-  * in place: legacy retention deletes version dirs WITH their data).
+  * manifest referencing only it.
   *
   * A version is visible iff its marker exists; the current table is
   * the highest committed N. Commit protocol: resolve base N, write the
@@ -167,8 +172,7 @@ object SnapshotTable {
     * checkpointInterval-th commit is a CHECKPOINT — it writes today's
     * full `_files` sidecar + merged `_manifest`, bounding every chain
     * walk (and the metadata kept alive by it) to K links; full-image
-    * commits (compaction, merges of legacy bases) are natural
-    * checkpoints. Retention interacts through RETIREMENT, not
+    * commits (compaction, clustering) are natural checkpoints. Retention interacts through RETIREMENT, not
     * materialization (materializing survivors would reintroduce the
     * O(table) term at retain < K): vacuum swaps a dropped-but-still-
     * chain-referenced version's `_COMMITTED` marker for `_RETIRED` —
@@ -190,14 +194,13 @@ object SnapshotTable {
   private val retainFile = "_retain"
 
   /** The recorded retention horizon of the table's latest version
-    * (0 when the table predates the sidecar or is empty). */
-  def retentionHorizon(s: SparkSession, root: String): Int = {
-    val fs = fsOf(s, root)
-    latestVersion(s, root).map { v =>
-      val p = new Path(s"$root/v=$v/$retainFile")
-      if (fs.exists(p)) readText(fs, p).trim.toInt else 0
-    }.getOrElse(0)
-  }
+    * (0 when the table is empty). */
+  def retentionHorizon(s: SparkSession, root: String): Int =
+    latestVersion(s, root).map(horizonOf(fsOf(s, root), root, _))
+      .getOrElse(0)
+
+  private def horizonOf(fs: FileSystem, root: String, v: Long): Int =
+    versionText(fs, root, v, retainFile).trim.toInt
 
   /** Declared ROW IDENTITY of the table (round 19): the column whose
     * value names a logical row for SQL row-level commands (MERGE INTO,
@@ -266,10 +269,6 @@ object SnapshotTable {
     k
   }
   private val segPrefix = "seg-"
-  /** Legacy (pre-round-15) per-version stats manifests — still read so
-    * tables committed under the old layout keep pruning. */
-  private val legacyStatsDir = "_stats"
-  private val legacyStatsColsDir = "_stats_cols"
 
   /** COLUMN MAPPING sidecar (round 18 — the Delta column-mapping /
     * Iceberg field-id analog, name-based): `v=N/_colmap` records the
@@ -441,19 +440,11 @@ object SnapshotTable {
       }: _*)
     }
 
-  /** Manifest-backed = has a file-list sidecar, a chain pointer, or a
-    * stats manifest; the parquet manifest itself is OPTIONAL (written
-    * only when some file carries stats — a stats-less table's versions
-    * are fully served by the text sidecars, so its commits launch zero
-    * metadata Spark jobs). */
-  private def isManifestVersion(fs: FileSystem, root: String,
-      v: Long): Boolean =
-    fs.exists(new Path(s"$root/v=$v/$filesSidecar")) ||
-      fs.exists(new Path(s"$root/v=$v/$parentFile")) ||
-      hasStatsManifest(fs, root, v)
-
   /** Whether version `v`'s manifest CHAIN carries a stats manifest
-    * anywhere (own fresh rows or any ancestor's). */
+    * anywhere (own fresh rows or any ancestor's). The parquet manifest
+    * is OPTIONAL — written only when some file carries stats: a
+    * stats-less table's versions are fully served by the text
+    * sidecars, so its commits launch zero metadata Spark jobs. */
   private def hasStatsManifest(fs: FileSystem, root: String,
       v: Long): Boolean =
     fs.exists(new Path(s"$root/v=$v/$manifestDir")) ||
@@ -518,8 +509,8 @@ object SnapshotTable {
       case None => s.read.parquet(paths: _*)
     }
 
-  /** Read a parquet SIDECAR directory (`_manifest`, `_dv`, the legacy
-    * `_stats*` dirs) by its explicit part-file list instead of the
+  /** Read a parquet SIDECAR directory (`_manifest`, `_dv`) by its
+    * explicit part-file list instead of the
     * directory path: a root path whose name starts with `_` is
     * hidden-filtered by Spark's file index, which still serves the
     * read but logs a "All paths were ignored" WARN per call — at one
@@ -549,8 +540,7 @@ object SnapshotTable {
   /** Chain links between `v` and its nearest full (checkpoint) version:
     * 0 = v is itself full. */
   private def chainDepth(fs: FileSystem, root: String, v: Long): Int =
-    if (fs.exists(new Path(s"$root/v=$v/$filesSidecar"))) 0
-    else deltaParent(fs, root, v) match {
+    deltaParent(fs, root, v) match {
       case Some(p) => 1 + chainDepth(fs, root, p)
       case None => 0
     }
@@ -593,8 +583,6 @@ object SnapshotTable {
     def build(x: Long): DataFrame = parentOf(x) match {
       case None => readSidecarParquet(s, fs, s"$root/v=$x/$manifestDir")
       case Some(parent) =>
-        // chainHasStats(parent) subsumes isManifestVersion(parent):
-        // a stats-bearing chain is manifest-backed by definition
         val parentView =
           if (chainHasStats(parent)) build(parent)
           else fileOnlyManifest(s, dataFiles(s, root, parent))
@@ -653,23 +641,35 @@ object SnapshotTable {
     finally in.close()
   }
 
+  /** Text of a sidecar every committed version carries (`_schema.ddl`,
+    * `_commit_ts`, `_retain`; `_files` unless it is a delta version):
+    * one read, no exists() probe first. A missing one is the refusal of
+    * a version dir outside the one layout (see the object header) — a
+    * pre-round-15 self-contained dir, parquet files directly under
+    * `v=N` plus `_COMMITTED`, is neither read nor migrated. The
+    * FileNotFoundException stays the cause: a version vacuumed under a
+    * racing commit is a lost race [[conflictOrRethrow]] reclassifies by
+    * it. */
+  private def versionText(fs: FileSystem, root: String, v: Long,
+      name: String): String =
+    try readText(fs, new Path(s"$root/v=$v/$name"))
+    catch { case e: java.io.FileNotFoundException =>
+      throw new IllegalStateException(s"$root/v=$v has no $name: not " +
+        "a manifest-layout version (pre-round-15 self-contained " +
+        s"version dirs are no longer read; rewrite the table at $root " +
+        "with a current writer)", e) }
+
   /** The schema version `v` serves — recorded at commit time so each
     * version answers with its OWN columns (ADD COLUMN evolution:
     * pre-evolution versions never grow the new column; post-evolution
-    * reads fill it with NULL for files that predate it). Legacy
-    * versions infer from their self-contained dir. */
+    * reads fill it with NULL for files that predate it). */
   def schemaOfVersion(s: SparkSession, root: String,
-      v: Long): StructType = {
-    val fs = fsOf(s, root)
-    val p = new Path(s"$root/v=$v/$schemaFile")
-    if (fs.exists(p)) StructType.fromDDL(readText(fs, p))
-    else s.read.parquet(s"$root/v=$v").schema
-  }
+      v: Long): StructType =
+    StructType.fromDDL(versionText(fsOf(s, root), root, v, schemaFile))
 
-  /** Root-relative data-file paths version `v` references (manifest
-    * versions: the manifest's file list, read driver-side — that is
-    * what a manifest is FOR; legacy versions: the dir's own parquet
-    * files). Sorted for determinism. */
+  /** Root-relative data-file paths version `v` references — the
+    * manifest's file list, read driver-side (that is what a manifest
+    * is FOR). Sorted for determinism. */
   def dataFiles(s: SparkSession, root: String, v: Long): Seq[String] =
     resolveFiles(s, root, v, null).sorted
 
@@ -684,10 +684,7 @@ object SnapshotTable {
       : Seq[String] = {
     def compute: Seq[String] = {
       val fs = fsOf(s, root)
-      val sidecar = new Path(s"$root/v=$v/$filesSidecar")
-      if (fs.exists(sidecar))
-        readText(fs, sidecar).split("\n").toSeq.filter(_.nonEmpty)
-      else deltaParent(fs, root, v) match {
+      deltaParent(fs, root, v) match {
         // delta version: parent's list minus removals plus this
         // commit's files — text reads only, chain depth bounded by the
         // checkpoint interval
@@ -696,15 +693,8 @@ object SnapshotTable {
           val base = resolveFiles(s, root, parent, memo)
           (if (removed.isEmpty) base else base.filterNot(removed)) ++
             filesNewOf(fs, root, v)
-        case None =>
-          if (isManifestVersion(fs, root, v))
-            // manifest versions written before the sidecar existed
-            manifestDf(s, root, v).select("file").collect()
-              .map(_.getString(0)).toSeq
-          else fs.listStatus(new Path(s"$root/v=$v")).toSeq
-            .filter(st =>
-              st.isFile && st.getPath.getName.endsWith(".parquet"))
-            .map(st => s"v=$v/${st.getPath.getName}")
+        case None => versionText(fs, root, v, filesSidecar)
+          .split("\n").toSeq.filter(_.nonEmpty)
       }
     }
     if (memo == null) compute else memo.getOrElseUpdate(v, compute)
@@ -806,20 +796,16 @@ object SnapshotTable {
 
   private def readVersionUnchecked(s: SparkSession, root: String,
       v: Long): DataFrame = {
-    val fs = fsOf(s, root)
-    if (!isManifestVersion(fs, root, v)) s.read.parquet(s"$root/v=$v")
-    else {
-      val schema = schemaOfVersion(s, root, v)
-      val files = dataFiles(s, root, v)
-      if (files.isEmpty) emptyFrame(s, schema)
-      // explicit recorded schema, never mergeSchema inference: at scale
-      // inference opens every file footer; the recorded schema also
-      // pins per-version column ORDER and fills evolution-missing
-      // columns with NULL by parquet name-matching. DV-aware: hidden
-      // rows never surface (readFilesVisible is the plain scan when the
-      // version has no deletion vectors).
-      else readFilesVisible(s, root, v, files, schema)
-    }
+    val schema = schemaOfVersion(s, root, v)
+    val files = dataFiles(s, root, v)
+    if (files.isEmpty) emptyFrame(s, schema)
+    // explicit recorded schema, never mergeSchema inference: at scale
+    // inference opens every file footer; the recorded schema also pins
+    // per-version column ORDER and fills evolution-missing columns with
+    // NULL by parquet name-matching. DV-aware: hidden rows never
+    // surface (readFilesVisible is the plain scan when the version has
+    // no deletion vectors).
+    else readFilesVisible(s, root, v, files, schema)
   }
 
   /** Resolve-once snapshot read: the returned frame is pinned to the
@@ -833,18 +819,10 @@ object SnapshotTable {
     readVersionUnchecked(s, root, v)
   }
 
-  /** Raw commit wall time of version `v` (epoch millis): the
-    * `_commit_ts` stamp for round-17+ versions; the commit MARKER's
-    * mtime for versions committed before the stamp existed (the marker
-    * is created at publish, so its mtime IS publish time — less
-    * reliable only on stores without usable mtimes). */
-  def commitTimestamp(s: SparkSession, root: String, v: Long): Long = {
-    val fs = fsOf(s, root)
-    val p = new Path(s"$root/v=$v/$commitTsFile")
-    if (fs.exists(p)) readText(fs, p).trim.toLong
-    else fs.getFileStatus(new Path(s"$root/v=$v/_COMMITTED"))
-      .getModificationTime
-  }
+  /** Raw commit wall time of version `v` (epoch millis): its
+    * `_commit_ts` stamp. */
+  def commitTimestamp(s: SparkSession, root: String, v: Long): Long =
+    versionText(fsOf(s, root), root, v, commitTsFile).trim.toLong
 
   /** (version, effective commit ts) ascending, with timestamps
     * MONOTONIZED against version order (running max): version numbers
@@ -895,13 +873,10 @@ object SnapshotTable {
     * reads everything as of `asOf`. */
   def readSince(s: SparkSession, root: String, sinceV: Option[Long],
       asOf: Option[Long] = None): DataFrame = {
-    val fs = fsOf(s, root)
     val vs = versionsOf(s, root)
     val to = asOf.getOrElse(vs.lastOption.getOrElse(
       throw new IllegalStateException(s"no committed version at $root")))
     require(vs.contains(to), s"version $to not committed")
-    require(isManifestVersion(fs, root, to),
-      s"readSince requires manifest-backed versions (v=$to is legacy)")
     val before = sinceV.map { v =>
       require(vs.contains(v), s"version $v not committed")
       dataFiles(s, root, v).toSet
@@ -934,10 +909,7 @@ object SnapshotTable {
     * retained version, the new head included), so a later vacuum that
     * drops version k itself never tears files out from under the
     * restore. Idempotence tokens carry forward like every commit — a
-    * rollback must not reopen a stream's replay guard. A LEGACY
-    * (pre-manifest) target is restored by one full data copy — its
-    * files live inside its version dir, which retention deletes whole,
-    * so referencing them in place would dangle.
+    * rollback must not reopen a stream's replay guard.
     *
     * Restoring to the CURRENT version is a no-op returning it (nothing
     * to undo must not burn a commit). `expectedBase` = CAS pin as
@@ -951,12 +923,6 @@ object SnapshotTable {
     val base = vs.lastOption
     casCheck(root, base, expectedBase)
     if (base.contains(toVersion)) return toVersion
-    if (!isManifestVersion(fs, root, toVersion))
-      // legacy self-contained target: one full copy commit (same
-      // migration reasoning as commitAppend on a legacy base)
-      return commitCore(s, root, retain, Nil, carriedFrom = None,
-        casBase = expectedBase)(_ =>
-        readVersionUnchecked(s, root, toVersion))
     val stage = s"$root/.stage-${java.util.UUID.randomUUID()}"
     val stagePath = new Path(stage)
     try {
@@ -988,8 +954,8 @@ object SnapshotTable {
     * wall time (monotonized against version order, like TIMESTAMP AS
     * OF resolution), file/byte/row accounting from the stats manifest
     * (None when the version never recorded them — stats-less chains
-    * and legacy dirs stay honestly unknown rather than paying a data
-    * scan), and the count of files carrying live deletion vectors.
+    * stay honestly unknown rather than paying a data scan), and the
+    * count of files carrying live deletion vectors.
     * `rows` is the PHYSICAL manifest count — DV-hidden rows included,
     * exactly what the version's storage holds. */
   final case class VersionInfo(version: Long, committedAtMs: Long,
@@ -1017,8 +983,7 @@ object SnapshotTable {
       // answer NULL unless every file is accounted.
       val (bytes, rows) =
         if (files.isEmpty) (Some(0L), Some(0L))
-        else if (!isManifestVersion(fs, root, v) ||
-            !hasStatsManifest(fs, root, v)) (None, None)
+        else if (!hasStatsManifest(fs, root, v)) (None, None)
         else {
           import org.apache.spark.sql.functions._
           val m = manifestDf(s, root, v)
@@ -1063,12 +1028,7 @@ object SnapshotTable {
     * two racing cloners (or a clone racing any CREATE) resolve to
     * exactly one winner, and a loser's already-copied segments are
     * unreferenced orphans the age-gated refcount sweep reclaims.
-    * LEGACY (pre-manifest) sources — whose files live inside version
-    * dirs that retention deletes whole, so byte-referencing their
-    * layout would plant orphan-swept `v=N` dirs in the target — fall
-    * back to one full re-encoding commit, stats-less (documented:
-    * migrate with commitAppend first to keep stats). Returns the
-    * clone's committed version (0). */
+    * Returns the clone's committed version (0). */
   def cloneTo(s: SparkSession, root: String, targetRoot: String,
       version: Long = -1L, retain: Int = 2): Long = {
     require(new Path(root) != new Path(targetRoot),
@@ -1081,12 +1041,6 @@ object SnapshotTable {
     casCheck(targetRoot, versionsOf(s, targetRoot).lastOption, EmptyBase)
     val cloneRetain = math.max(retain, retentionHorizon(s, root))
     val files = dataFiles(s, root, v)
-    if (!isManifestVersion(fsOf(s, root), root, v) ||
-        !files.forall(_.startsWith(segPrefix)))
-      // legacy/self-contained layout: one re-encoding commit (same
-      // migration reasoning as restore-of-legacy)
-      return commit(s, targetRoot, cloneRetain,
-        expectedBase = EmptyBase)(_ => readVersionUnchecked(s, root, v))
     val srcFs = fsOf(s, root)
     val dstFs = fsOf(s, targetRoot)
     // distributed byte copy, one task per file. Hadoop Configuration
@@ -1190,9 +1144,6 @@ object SnapshotTable {
     casCheck(root, base, casBase)
     val v = base.getOrElse(throw new IllegalStateException(
       s"no committed version at $root"))
-    require(isManifestVersion(fs, root, v),
-      s"schema metadata commits need a manifest-backed table; run one " +
-        s"migrating commitAppend at $root first")
     val (schema2, cm2) = xform(schemaOfVersion(s, root, v),
       colmapOf(fs, root, v))
     val stage = s"$root/.stage-${java.util.UUID.randomUUID()}"
@@ -1668,17 +1619,12 @@ object SnapshotTable {
 
   /** Stats columns version `v`'s manifest carries (the `min__c` /
     * `max__c` pairs) — what [[compact]] and [[commitAppend]] inherit
-    * so data skipping SURVIVES maintenance and appends. A LEGACY
-    * (pre-manifest) version reports its `_stats_cols/<c>` children so
-    * the migrating commit inherits the layout instead of silently
-    * dropping data skipping (round-15 advice; the ancient single-col
-    * `_stats` dir records no column NAME, so it alone can't be
-    * inherited — migration from it starts stats-less, loudly
-    * documented here rather than silently elsewhere). */
+    * so data skipping SURVIVES maintenance and appends. */
   private def statsColsOf(s: SparkSession, root: String,
       v: Long): Seq[String] = {
     val fs = fsOf(s, root)
-    if (hasStatsManifest(fs, root, v)) {
+    if (!hasStatsManifest(fs, root, v)) Nil
+    else {
       // manifests are keyed by PHYSICAL name (stable across renames);
       // the public vocabulary is logical — retired physicals (dropped
       // columns) keep their manifest stats but stop being addressable
@@ -1686,11 +1632,6 @@ object SnapshotTable {
       manifestFieldsOf(s, root, v)
         .filter(_.startsWith("min__")).map(_.stripPrefix("min__"))
         .filterNot(cm.retired.contains).map(cm.logical)
-    } else {
-      val legacy = new Path(s"$root/v=$v/$legacyStatsColsDir")
-      if (!fs.exists(legacy)) Nil
-      else fs.listStatus(legacy).toSeq.filter(_.isDirectory)
-        .map(_.getPath.getName).sorted
     }
   }
 
@@ -1840,9 +1781,8 @@ object SnapshotTable {
   }
 
   /** Root-relative path of the file a row came from (the last two URI
-    * components: `seg-x/part-y.parquet`, or `v=N/part-y.parquet` for
-    * legacy dirs) — the manifest's `file` naming, derivable inside any
-    * scan via input_file_name. */
+    * components: `seg-x/part-y.parquet`) — the manifest's `file`
+    * naming, derivable inside any scan via input_file_name. */
   private def relFile: Column = {
     import org.apache.spark.sql.functions._
     concat_ws("/", element_at(split(input_file_name(), "/"), -2),
@@ -2068,11 +2008,7 @@ object SnapshotTable {
     * versions keep serving their own schema. `statsCols = None`
     * inherits the base manifest's stats columns (so an appended table
     * keeps skipping without callers restating the layout); columns the
-    * delta lacks record NULL stats — conservatively unprunable. A
-    * LEGACY (pre-manifest) base is migrated by one full commit — its
-    * files cannot be referenced in place, because legacy retention
-    * deletes version dirs WITH their data (its `_stats_cols` layout IS
-    * inherited, so migration keeps data skipping).
+    * delta lacks record NULL stats — conservatively unprunable.
     *
     * `expectedBase` = CAS commit (see [[commit]]); `txn` records an
     * idempotence token `(appId, batchId)` in the version (see
@@ -2082,7 +2018,6 @@ object SnapshotTable {
       statsCols: Option[Seq[String]] = None, retain: Int = 2,
       expectedBase: Long = AnyBase,
       txn: Option[(String, Long)] = None): Long = {
-    val fs = fsOf(s, root)
     val base = latestVersion(s, root)
     casCheck(root, base, expectedBase)
     // row-identity contract (round-20 advice follow-through): the
@@ -2103,17 +2038,9 @@ object SnapshotTable {
     // point-probe skipping without callers restating the layout
     val inheritedBloom =
       base.map(v => bloomColsOf(s, root, v)).getOrElse(Nil)
-    base match {
-      case Some(v) if !isManifestVersion(fs, root, v) =>
-        commitCore(s, root, retain, inherited, carriedFrom = None,
-          casBase = expectedBase, txn = txn,
-          bloomCols = inheritedBloom)(cur =>
-          cur().get.unionByName(delta, allowMissingColumns = true))
-      case b =>
-        commitCore(s, root, retain, inherited, carriedFrom = b,
-          casBase = expectedBase, txn = txn,
-          bloomCols = inheritedBloom)(_ => delta)
-    }
+    commitCore(s, root, retain, inherited, carriedFrom = base,
+      casBase = expectedBase, txn = txn,
+      bloomCols = inheritedBloom)(_ => delta)
   }
 
   /** The CAS precondition both at plan time (here — fail before any
@@ -2195,8 +2122,7 @@ object SnapshotTable {
     * NEXT merge prunes too. A localized daily upsert against a
     * key-clustered 100 TB table rewrites the handful of overlapping
     * files instead of the table; a pure-insert batch touches ZERO
-    * files — it degenerates to [[commitAppend]]'s cost. A legacy base
-    * takes one full rewriting merge (migration, as commitAppend).
+    * files — it degenerates to [[commitAppend]]'s cost.
     *
     * The batch plan is referenced by three stages (key-range agg,
     * touched-file probe, resolve), so it is PINNED internally for the
@@ -2245,13 +2171,6 @@ object SnapshotTable {
             casBase = expectedBase, txn = txn,
             bloomCols = inheritedBloom)(_ =>
             resolve(None, batch))
-        case Some(v) if !isManifestVersion(fs, root, v) =>
-          // legacy self-contained base: one full rewriting merge migrates
-          // to the manifest layout (same reasoning as commitAppend)
-          commitCore(s, root, retain, statsCols, carriedFrom = None,
-            casBase = expectedBase, txn = txn,
-            bloomCols = inheritedBloom)(cur =>
-            fullMerge(cur().get))
         case Some(v) =>
           val schema = schemaOfVersion(s, root, v)
           require(schema.fieldNames.contains(mergeKey),
@@ -2371,8 +2290,7 @@ object SnapshotTable {
     * pruning stays CONSERVATIVE (never wrong, may keep a file whose
     * matching rows are all hidden) and reads pay one anti-join against
     * the entry set on DV'd files only. All other semantics (CAS,
-    * txn replay guard, stats/bloom inheritance, legacy migration via
-    * full rewrite) match [[commitMerge]]. */
+    * txn replay guard, stats/bloom inheritance) match [[commitMerge]]. */
   def commitMergeDV(s: SparkSession, root: String, batch0: DataFrame,
       mergeKey: String, retain: Int = 2,
       expectedBase: Long = AnyBase,
@@ -2384,11 +2302,6 @@ object SnapshotTable {
     casCheck(root, base, expectedBase)
     base match {
       case None =>
-        commitMerge(s, root, batch0, mergeKey, retain, expectedBase,
-          txn)(resolve)
-      case Some(v) if !isManifestVersion(fs, root, v) =>
-        // legacy self-contained base: the migrating merge is a full
-        // rewrite either way — no vectors to save anything
         commitMerge(s, root, batch0, mergeKey, retain, expectedBase,
           txn)(resolve)
       case Some(v) =>
@@ -2479,7 +2392,7 @@ object SnapshotTable {
       // (Spark's file-index construction — driver work linear in
       // files_total, measured real at 100k files by ManifestScale),
       // which an O(delta) append/merge never needs — only full-image
-      // transforms (merge migration, compaction) force it
+      // transforms (commit, compaction, clustering) force it
       transform: (() => Option[DataFrame]) => DataFrame): Long = {
     require(retain >= 1, "retain must keep at least the new version")
     txn.foreach { case (appId, _) =>
@@ -2804,10 +2717,7 @@ object SnapshotTable {
     // (round-19 advice). Written here so EVERY commit shape — data,
     // metadata-only, restore — carries it.
     val horizon = math.max(retain,
-      base.map { v =>
-        val p = new Path(s"$root/v=$v/$retainFile")
-        if (fs.exists(p)) readText(fs, p).trim.toInt else 0
-      }.getOrElse(0))
+      base.map(horizonOf(fs, root, _)).getOrElse(0))
     writeText(fs, new Path(s"$stage/$retainFile"), horizon.toString)
     // commit wall time, stamped as late as possible (atomic with the
     // version — the stage is still private until the rename)
@@ -3005,17 +2915,13 @@ object SnapshotTable {
     // over-retention, reclaimed at the next post-checkpoint sweep).
     def segOf(f: String) = f.takeWhile(_ != '/')
     val memoSegs = scala.collection.mutable.Map.empty[Long, Set[String]]
-    def refSegs(v: Long): Set[String] = memoSegs.getOrElseUpdate(v, {
-      val full = fs.exists(new Path(s"$root/v=$v/$filesSidecar"))
+    def refSegs(v: Long): Set[String] = memoSegs.getOrElseUpdate(v,
       deltaParent(fs, root, v) match {
-        case Some(p) if !full =>
+        case Some(p) =>
           refSegs(p) ++ filesNewOf(fs, root, v).iterator.map(segOf)
-        case _ => resolveFiles(s, root, v, null).iterator.map(segOf).toSet
-      }
-    })
-    val referenced = survivors.flatMap { v =>
-      if (isManifestVersion(fs, root, v)) refSegs(v) else Nil
-    }.toSet
+        case None => resolveFiles(s, root, v, null).iterator.map(segOf).toSet
+      })
+    val referenced = survivors.flatMap(refSegs).toSet
     val now = System.currentTimeMillis()
     fs.listStatus(new Path(root)).toSeq
       .filter(st => st.isDirectory &&
@@ -3039,18 +2945,12 @@ object SnapshotTable {
       c: String): Option[DataFrame] =
     latestVersion(s, root).flatMap { v =>
       import org.apache.spark.sql.functions.col
-      val fs = fsOf(s, root)
-      if (isManifestVersion(fs, root, v) &&
-          statsColsOf(s, root, v).contains(c)) {
-        val cp = colmapOf(fs, root, v).physical(c)
+      if (!statsColsOf(s, root, v).contains(c)) None
+      else {
+        val cp = colmapOf(fsOf(s, root), root, v).physical(c)
         Some(manifestDf(s, root, v).select(col("file"),
           col(s"min__$cp").as("min"), col(s"max__$cp").as("max"),
           col("rows")))
-      }
-      else {
-        val p = new Path(s"$root/v=$v/$legacyStatsColsDir/$c")
-        if (fs.exists(p)) Some(readSidecarParquet(s, fs, p.toString))
-        else None
       }
     }
 
@@ -3110,9 +3010,7 @@ object SnapshotTable {
       preds: Seq[(String, Column, Column)]): PrunedScan = {
     val v = latestVersion(s, root).getOrElse(
       throw new IllegalStateException(s"no committed version at $root"))
-    val fs = fsOf(s, root)
-    if (isManifestVersion(fs, root, v)) pruneManifest(s, root, v, preds)
-    else legacyReadPrunedBox(s, root, v, preds)
+    pruneManifest(s, root, v, preds)
   }
 
   /** POINT/IN-LIST pruned read of the latest version: keep only files
@@ -3133,8 +3031,7 @@ object SnapshotTable {
     val v = latestVersion(s, root).getOrElse(
       throw new IllegalStateException(s"no committed version at $root"))
     val fs = fsOf(s, root)
-    if (!isManifestVersion(fs, root, v) || !hasStatsManifest(fs, root, v))
-      return fullScan(s, root, v)
+    if (!hasStatsManifest(fs, root, v)) return fullScan(s, root, v)
     val hasRange = statsColsOf(s, root, v).contains(c)
     val hasBloom = bloomColsOf(s, root, v).contains(c)
     if (!hasRange && !hasBloom) return fullScan(s, root, v)
@@ -3173,58 +3070,9 @@ object SnapshotTable {
       hi: Column): PrunedScan = {
     val v = latestVersion(s, root).getOrElse(
       throw new IllegalStateException(s"no committed version at $root"))
-    val fs = fsOf(s, root)
-    if (isManifestVersion(fs, root, v)) {
-      statsColsOf(s, root, v) match {
-        case Seq(only) => pruneManifest(s, root, v, Seq((only, lo, hi)))
-        case _ => fullScan(s, root, v)
-      }
-    } else legacyReadPruned(s, root, v, lo, hi)
-  }
-
-  // ---- legacy (pre-round-15, self-contained version dirs) pruning ----
-
-  private def legacyReadPruned(s: SparkSession, root: String, v: Long,
-      lo: Column, hi: Column): PrunedScan = {
-    val dir = s"$root/v=$v"
-    val total = dataFiles(s, root, v).size
-    val fs = fsOf(s, root)
-    val manifest = new Path(s"$dir/$legacyStatsDir")
-    if (!fs.exists(manifest))
-      PrunedScan(s.read.parquet(dir), total, total)
-    else {
-      import org.apache.spark.sql.functions._
-      val keep = readSidecarParquet(s, fs, manifest.toString)
-        .where(col("max") >= lo && col("min") <= hi)
-        .select("file").collect().map(r => s"$dir/${r.getString(0)}")
-      val df =
-        if (keep.isEmpty) s.read.parquet(dir).where(lit(false))
-        else s.read.parquet(keep.toIndexedSeq: _*)
-      PrunedScan(df, keep.length, total)
-    }
-  }
-
-  private def legacyReadPrunedBox(s: SparkSession, root: String, v: Long,
-      preds: Seq[(String, Column, Column)]): PrunedScan = {
-    import org.apache.spark.sql.functions._
-    val dir = s"$root/v=$v"
-    val total = dataFiles(s, root, v).size
-    val fs = fsOf(s, root)
-    val keepSets = preds.flatMap { case (c, lo, hi) =>
-      val m = new Path(s"$dir/$legacyStatsColsDir/$c")
-      if (!fs.exists(m)) None
-      else Some(readSidecarParquet(s, fs, m.toString)
-        .where(col("max") >= lo && col("min") <= hi)
-        .select("file").collect().map(_.getString(0)).toSet)
-    }
-    if (keepSets.isEmpty) PrunedScan(s.read.parquet(dir), total, total)
-    else {
-      val keep = keepSets.reduce(_ intersect _)
-        .toSeq.sorted.map(f => s"$dir/$f")
-      val df =
-        if (keep.isEmpty) s.read.parquet(dir).where(lit(false))
-        else s.read.parquet(keep: _*)
-      PrunedScan(df, keep.length, total)
+    statsColsOf(s, root, v) match {
+      case Seq(only) => pruneManifest(s, root, v, Seq((only, lo, hi)))
+      case _ => fullScan(s, root, v)
     }
   }
 
@@ -3272,8 +3120,7 @@ object SnapshotTable {
     import org.apache.spark.sql.functions._
     val all = dataFiles(s, root, v)
     val fs = fsOf(s, root)
-    if (!isManifestVersion(fs, root, v) ||
-        !hasStatsManifest(fs, root, v)) return (all, all.size)
+    if (!hasStatsManifest(fs, root, v)) return (all, all.size)
     val statCols = statsColsOf(s, root, v).toSet
     val bloomCols = bloomColsOf(s, root, v).toSet
     val schema = schemaOfVersion(s, root, v)
@@ -3359,9 +3206,7 @@ object SnapshotTable {
   private def filesStatsForUncached(s: SparkSession, root: String,
       v: Long, files: Seq[String]): (Option[Long], Option[Long]) = {
     import org.apache.spark.sql.functions._
-    val fs = fsOf(s, root)
-    if (!isManifestVersion(fs, root, v) ||
-        !hasStatsManifest(fs, root, v)) return (None, None)
+    if (!hasStatsManifest(fsOf(s, root), root, v)) return (None, None)
     val m = manifestDf(s, root, v)
     val hasBytes = m.schema.fieldNames.contains("bytes")
     val hasRows = m.schema.fieldNames.contains("rows")
@@ -3403,7 +3248,6 @@ object SnapshotTable {
         Map[String, Any])] = {
     import org.apache.spark.sql.functions._
     val fs = fsOf(s, root)
-    if (!isManifestVersion(fs, root, v)) return None
     if (dvOf(s, root, v).isDefined) return None
     val files = dataFiles(s, root, v)
     if (files.isEmpty)
@@ -3498,10 +3342,8 @@ object SnapshotTable {
     * taken largest-first to minimize the planned count. */
   private[graft] def filesForLimit(s: SparkSession, root: String,
       v: Long, limit: Long): Option[Seq[String]] = {
-    val fs = fsOf(s, root)
-    if (!isManifestVersion(fs, root, v)) return None
     if (dvOf(s, root, v).isDefined) return None
-    if (!hasStatsManifest(fs, root, v)) return None
+    if (!hasStatsManifest(fsOf(s, root), root, v)) return None
     val m = manifestDf(s, root, v)
     if (!m.schema.fieldNames.contains("rows")) return None
     val counts = m.select("file", "rows").collect()
@@ -3544,7 +3386,6 @@ object SnapshotTable {
       c: String, v: Long, descending: Boolean, nullsFirst: Boolean,
       k: Long): Option[Seq[String]] = {
     val fs = fsOf(s, root)
-    if (!isManifestVersion(fs, root, v)) return None
     if (dvOf(s, root, v).isDefined) return None
     if (!hasStatsManifest(fs, root, v)) return None
     if (!statsColsOf(s, root, v).contains(c)) return None
@@ -3756,10 +3597,6 @@ object SnapshotTable {
     val v = latestVersion(s, root).getOrElse(
       throw new IllegalStateException(
         s"compactSmall: no committed version at $root"))
-    if (!isManifestVersion(fs, root, v))
-      // legacy self-contained dir: no file-carry is possible — the
-      // full compact IS the migration
-      return compact(s, root, targetFiles, retain)
     // file sizes come from the manifest's `bytes` column when recorded
     // (round-16 manifests carry it); only files predating the column
     // fall back to a per-file getFileStatus RPC
@@ -3852,52 +3689,50 @@ object SnapshotTable {
     try {
       val fs = fsOf(s, root)
       latestVersion(s, root).foreach { v =>
-        if (isManifestVersion(fs, root, v)) {
-          val minBytes = s.conf
-            .get("spark.graft.autoMaintain.minFileBytes",
-              (8L * 1024 * 1024).toString).toLong
-          val maxFrag = s.conf
-            .get("spark.graft.autoMaintain.maxFragments", "16").toInt
-          val dvRatio = s.conf
-            .get("spark.graft.autoMaintain.dvRowRatio", "0.1").toDouble
-          // fragment census from the manifest's recorded bytes (files
-          // predating the column count conservatively as fragments of
-          // unknown size only via the getFileStatus fallback inside
-          // compactSmall — here they are simply skipped, keeping the
-          // census RPC-free)
-          val fragments: Int =
-            if (!hasStatsManifest(fs, root, v)) 0
-            else {
-              val m = manifestDf(s, root, v)
-              if (!m.schema.fieldNames.contains("bytes")) 0
-              else m.where(org.apache.spark.sql.functions
-                .col("bytes") < minBytes).count().toInt
-            }
-          if (fragments > maxFrag) {
-            compactSmall(s, root, minBytes,
-              targetFiles = math.max(1, fragments / maxFrag), retain)
-            ()
+        val minBytes = s.conf
+          .get("spark.graft.autoMaintain.minFileBytes",
+            (8L * 1024 * 1024).toString).toLong
+        val maxFrag = s.conf
+          .get("spark.graft.autoMaintain.maxFragments", "16").toInt
+        val dvRatio = s.conf
+          .get("spark.graft.autoMaintain.dvRowRatio", "0.1").toDouble
+        // fragment census from the manifest's recorded bytes (files
+        // predating the column count conservatively as fragments of
+        // unknown size only via the getFileStatus fallback inside
+        // compactSmall — here they are simply skipped, keeping the
+        // census RPC-free)
+        val fragments: Int =
+          if (!hasStatsManifest(fs, root, v)) 0
+          else {
+            val m = manifestDf(s, root, v)
+            if (!m.schema.fieldNames.contains("bytes")) 0
+            else m.where(org.apache.spark.sql.functions
+              .col("bytes") < minBytes).count().toInt
           }
-          // tombstone density after any compaction (its rewrite may
-          // have folded entries already)
-          latestVersion(s, root).foreach { v2 =>
-            dvOf(s, root, v2).foreach { case (_, dv) =>
-              val entries = dv.count()
-              val totalRows: Long =
-                if (!hasStatsManifest(fs, root, v2)) 0L
+        if (fragments > maxFrag) {
+          compactSmall(s, root, minBytes,
+            targetFiles = math.max(1, fragments / maxFrag), retain)
+          ()
+        }
+        // tombstone density after any compaction (its rewrite may
+        // have folded entries already)
+        latestVersion(s, root).foreach { v2 =>
+          dvOf(s, root, v2).foreach { case (_, dv) =>
+            val entries = dv.count()
+            val totalRows: Long =
+              if (!hasStatsManifest(fs, root, v2)) 0L
+              else {
+                val m = manifestDf(s, root, v2)
+                if (!m.schema.fieldNames.contains("rows")) 0L
                 else {
-                  val m = manifestDf(s, root, v2)
-                  if (!m.schema.fieldNames.contains("rows")) 0L
-                  else {
-                    val r = m.agg(org.apache.spark.sql.functions
-                      .sum("rows")).first()
-                    if (r.isNullAt(0)) 0L else r.getLong(0)
-                  }
+                  val r = m.agg(org.apache.spark.sql.functions
+                    .sum("rows")).first()
+                  if (r.isNullAt(0)) 0L else r.getLong(0)
                 }
-              if (totalRows > 0 && entries > totalRows * dvRatio) {
-                foldDeletionVectors(s, root, retain)
-                ()
               }
+            if (totalRows > 0 && entries > totalRows * dvRatio) {
+              foldDeletionVectors(s, root, retain)
+              ()
             }
           }
         }

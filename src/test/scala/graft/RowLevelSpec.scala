@@ -488,18 +488,23 @@ class RowLevelSpec extends AnyFunSuite {
       }
       assert(!new java.io.File(s"$wh/v=0").exists(),
         "an invalid clone target must plant nothing in the warehouse")
-      // LEGACY source (pre-manifest self-contained dir): falls back
-      // to one re-encoding commit — image served, stats honestly
-      // absent
-      val leg = s"$wh/legacy"
-      img(7L -> "x").write.parquet(s"$leg/v=1")
-      SnapshotTable.fsOf(spark, leg).create(
-        new org.apache.hadoop.fs.Path(s"$leg/v=1/_COMMITTED"),
+      // a pre-round-15 self-contained source dir is refused: the clone
+      // errors and plants nothing at the target
+      val old = s"$wh/selfcontained"
+      img(7L -> "x").write.parquet(s"$old/v=1")
+      SnapshotTable.fsOf(spark, old).create(
+        new org.apache.hadoop.fs.Path(s"$old/v=1/_COMMITTED"),
         false).close()
-      spark.sql("CALL graft_cl.clone(target => 'dstleg', " +
-        s"source_path => '$leg')").collect()
-      assert(SnapshotTable.read(spark, s"$wh/dstleg").get
-        .select(col("k")).collect().map(_.getLong(0)).toSeq === Seq(7L))
+      val refused = intercept[Exception] {
+        spark.sql("CALL graft_cl.clone(target => 'dstold', " +
+          s"source_path => '$old')").collect()
+      }
+      assert(Iterator.iterate(refused: Throwable)(_.getCause)
+        .takeWhile(_ != null).take(8)
+        .exists(e => Option(e.getMessage).exists(
+          _.contains("pre-round-15 self-contained"))), refused)
+      assert(!new java.io.File(s"$wh/dstold/v=0").exists(),
+        "a refused clone must plant no version at the target")
     }
   }
 

@@ -739,37 +739,92 @@ class SnapshotTableSpec extends AnyFunSuite {
     }
   }
 
-  test("legacy self-contained versions interop: readable, and the " +
-      "first commitAppend migrates them with one full commit") {
+  test("a pre-round-15 self-contained version dir is refused, naming " +
+      "the layout and the root: read, readVersion, commitAppend, " +
+      "commitMerge and cloneTo throw and commit nothing") {
     withRoot { root =>
       val fs = fsFor(root)
-      // hand-build a pre-round-15 version: data directly in v=1 plus
-      // the marker — exactly what an existing table on disk looks like
+      // hand-built v=1 in the retired layout: data directly in the
+      // version dir plus the marker, none of the per-version sidecars
       img(1L -> "a", 2L -> "b").write.parquet(s"$root/v=1")
       fs.create(new org.apache.hadoop.fs.Path(s"$root/v=1/_COMMITTED"),
         false).close()
-      assert(SnapshotTable.read(spark, root).get.count() === 2)
-      assert(SnapshotTable.fileCount(spark, root, 1L) >= 1)
-      // append on the legacy base: migrated via one full commit (its
-      // files can't be referenced in place — legacy retention deletes
-      // version dirs WITH their data); the result is manifest-backed
-      graft.streaming.SnapshotTable.commitAppend(spark, root,
-        img(3L -> "c"), retain = 10)
-      val v2 = SnapshotTable.latestVersion(spark, root).get
-      assert(SnapshotTable.readVersion(spark, root, v2)
-        .orderBy("k").collect().map(_.getLong(0)).toSeq
-        === Seq(1L, 2L, 3L))
-      assert(SnapshotTable.dataFiles(spark, root, v2)
-        .forall(_.startsWith("seg-")))
-      // the legacy version itself is still time-travelable
-      assert(SnapshotTable.readVersion(spark, root, 1L).count() === 2)
-      // and a SECOND append is O(delta) against the migrated base
-      graft.streaming.SnapshotTable.commitAppend(spark, root,
-        img(4L -> "d"), retain = 10)
-      val v3 = SnapshotTable.latestVersion(spark, root).get
-      assert(SnapshotTable.dataFiles(spark, root, v2).toSet.subsetOf(
-        SnapshotTable.dataFiles(spark, root, v3).toSet))
-      assert(SnapshotTable.readVersion(spark, root, v3).count() === 4)
+      val target = s"$root/clone"
+      def refused(what: String)(f: => Any): Unit = {
+        val e = intercept[IllegalStateException](f)
+        assert(e.getMessage.contains("pre-round-15 self-contained") &&
+          e.getMessage.contains(root), s"$what: ${e.getMessage}")
+      }
+      refused("read")(SnapshotTable.read(spark, root))
+      refused("readVersion")(SnapshotTable.readVersion(spark, root, 1L))
+      refused("commitAppend")(
+        SnapshotTable.commitAppend(spark, root, img(3L -> "c")))
+      refused("commitMerge")(SnapshotTable.commitMerge(spark, root,
+        img(1L -> "z"), "k")((_, b) => b))
+      refused("cloneTo")(SnapshotTable.cloneTo(spark, root, target))
+      // nothing committed, no segment written, no clone planted
+      assert(SnapshotTable.committedVersions(spark, root) === Seq(1L))
+      assert(!fs.listStatus(new org.apache.hadoop.fs.Path(root))
+        .exists(_.getPath.getName.startsWith("seg-")))
+      assert(SnapshotTable.committedVersions(spark, target).isEmpty)
+    }
+  }
+
+  test("every commit entry point writes the one version layout: " +
+      "_COMMITTED, exactly one of _files/_parent, _schema.ddl, " +
+      "_commit_ts and _retain") {
+    withRoot { dir =>
+      import spark.implicits._
+      import org.apache.spark.sql.types.{LongType, StringType}
+      val root = s"$dir/t"
+      val clone = s"$dir/clone"
+      val fs = fsFor(root)
+      def rows(ks: Seq[Long], tag: String) =
+        ks.map(k => (k, k.toInt, tag)).toDF("k", "n", "v")
+      // in order: each entry point commits exactly one new version of
+      // its table (retain 20 keeps v0 for the restore)
+      val steps: Seq[(String, String, () => Long)] = Seq(
+        ("commit", root, () => SnapshotTable.commit(spark, root,
+          retain = 20)(_ => rows(1L to 8L, "a").repartition(4))),
+        ("commitAppend", root, () => SnapshotTable.commitAppend(spark,
+          root, rows(9L to 10L, "b"), retain = 20)),
+        ("commitMerge", root, () => SnapshotTable.commitMerge(spark, root,
+          rows(Seq(1L), "m"), "k", retain = 20)((_, b) => b)),
+        ("commitMergeDV", root, () => SnapshotTable.commitMergeDV(spark,
+          root, rows(Seq(2L), "d"), "k", retain = 20)((_, b) => b)),
+        ("foldDeletionVectors", root, () =>
+          SnapshotTable.foldDeletionVectors(spark, root, retain = 20)),
+        ("restore", root, () =>
+          SnapshotTable.restore(spark, root, 0L, retain = 20)),
+        ("addColumn", root, () => SnapshotTable.addColumn(spark, root,
+          "note", StringType, retain = 20)),
+        ("renameColumn", root, () => SnapshotTable.renameColumn(spark,
+          root, "note", "memo", retain = 20)),
+        ("widenColumn", root, () => SnapshotTable.widenColumn(spark, root,
+          "n", LongType, retain = 20)),
+        ("dropColumn", root, () => SnapshotTable.dropColumn(spark, root,
+          "memo", retain = 20)),
+        ("compactSmall", root, () => SnapshotTable.compactSmall(spark,
+          root, Long.MaxValue, retain = 20)),
+        ("compact", root, () =>
+          SnapshotTable.compact(spark, root, retain = 20)),
+        ("cloneTo", clone, () =>
+          SnapshotTable.cloneTo(spark, root, clone, retain = 20)))
+      steps.foreach { case (name, at, run) =>
+        val before = SnapshotTable.committedVersions(spark, at)
+        val v = run()
+        assert(!before.contains(v) &&
+          SnapshotTable.latestVersion(spark, at).contains(v),
+          s"$name committed no new version (v=$v, before $before)")
+        def has(f: String) =
+          fs.exists(new org.apache.hadoop.fs.Path(s"$at/v=$v/$f"))
+        assert(has("_files") != has("_parent"),
+          s"$name: v=$v needs exactly one of _files/_parent")
+        Seq("_COMMITTED", "_schema.ddl", "_commit_ts", "_retain")
+          .foreach(f => assert(has(f), s"$name: v=$v lacks $f"))
+      }
+      assert(SnapshotTable.read(spark, clone).get.orderBy("k").collect()
+        === SnapshotTable.read(spark, root).get.orderBy("k").collect())
     }
   }
 
@@ -1576,43 +1631,6 @@ class SnapshotTableSpec extends AnyFunSuite {
         .where(col("k") === 2L).collect()
       assert(probe.map(_.getString(1)).toSeq === Seq("B2"))
       assert(SnapshotTable.read(spark, root2).get.count() === 6)
-    }
-  }
-
-  test("a legacy base's _stats_cols layout is inherited by the " +
-      "migrating commitAppend — data skipping survives migration") {
-    withRoot { root =>
-      import spark.implicits._
-      val fs = fsFor(root)
-      // hand-build a pre-round-15 version with a per-column legacy
-      // stats manifest (the commitWithStatsCols layout of that era)
-      img((1L to 40L).map(k => (k, s"old$k")): _*)
-        .repartitionByRange(4, col("k")).sortWithinPartitions("k")
-        .write.parquet(s"$root/v=1")
-      val files = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/v=1"))
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.getName).sorted
-      spark.read.parquet(s"$root/v=1")
-        .groupBy(element_at(split(input_file_name(), "/"), -1).as("file"))
-        .agg(min(col("k")).as("min"), max(col("k")).as("max"))
-        .coalesce(1)
-        .write.parquet(s"$root/v=1/_stats_cols/k")
-      fs.create(new org.apache.hadoop.fs.Path(s"$root/v=1/_COMMITTED"),
-        false).close()
-      assert(files.length === 4)
-      // the migrating append must inherit stats on k, not drop them
-      SnapshotTable.commitAppend(spark, root,
-        SnapshotTable.clusterBy(
-          img((41L to 60L).map(k => (k, s"new$k")): _*), "k", 2),
-        retain = 10)
-      val v2 = SnapshotTable.latestVersion(spark, root).get
-      assert(SnapshotTable.colStats(spark, root, "k").isDefined,
-        "migration dropped the legacy stats columns")
-      val scan = SnapshotTable.readPruned(spark, root, lit(45L), lit(50L))
-      assert(scan.filesRead < scan.filesTotal,
-        s"no skipping after migration: ${scan.filesRead}/${scan.filesTotal}")
-      assert(scan.df.where(col("k").between(45L, 50L)).count() === 6)
-      assert(SnapshotTable.readVersion(spark, root, v2).count() === 60)
     }
   }
 
