@@ -343,10 +343,16 @@ object VectorFunctions {
       new ExpressionInfo(classOf[DotProduct].getName, n), b))
   }
 
-  /** Idempotent per-session registration for driver-built sessions. */
-  def register(spark: SparkSession): Unit = fns.foreach { case (n, b) =>
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      n, b, "built-in")
+  /** Idempotent per-session registration for driver-built sessions:
+    * adds only the functions the session's registry lacks, so a session
+    * built with [[GraftExtensions]] (or registered before) is left as
+    * it is — replacing logs one WARN per function on every call. */
+  def register(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    fns.foreach { case (n, b) =>
+      if (!reg.functionExists(FunctionIdentifier(n)))
+        reg.createOrReplaceTempFunction(n, b, "built-in")
+    }
   }
 
   def dot(spark: SparkSession, a: Column, b: Column): Column = {

@@ -2,8 +2,10 @@ package graft.streaming
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{LongType, StringType, StructField,
-  StructType}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType,
+  StringType, StructField, StructType}
 
 /** A snapshot commit LOST ITS RACE (CAS base moved, publish slot
   * taken, or the marker create was beaten) — the retryable outcome of
@@ -597,10 +599,12 @@ object SnapshotTable {
   }
 
   /** `view` minus the rows whose `file` is in `removed` (one chain
-    * link's removals). Up to `maxLiterals` files filter as a literal
-    * set: a broadcast anti-join is one Spark job per link on every
-    * manifest query, so a chain of point upserts (one touched file per
-    * link) would grow each query's job count with the chain depth.
+    * link's removals, or the files a commit drops from its carried
+    * manifest and deletion vectors). Up to `maxLiterals` files filter
+    * as a literal set: a broadcast anti-join is one Spark job per link
+    * on every manifest query, so a chain of point upserts (one touched
+    * file per link) would grow each query's job count with the chain
+    * depth, and every checkpoint or DV-carrying commit would pay one.
     * Measured link sizes: at most 9 over the `lake_rw` workload's
     * MERGE / DELETE / `fold_dv` / `optimize` cycle and over
     * ManifestScale's merges, but a copy-on-write merge with a key in
@@ -2124,7 +2128,7 @@ object SnapshotTable {
     * files instead of the table; a pure-insert batch touches ZERO
     * files — it degenerates to [[commitAppend]]'s cost.
     *
-    * The batch plan is referenced by three stages (key-range agg,
+    * The batch plan is referenced by several stages (key collect,
     * touched-file probe, resolve), so it is PINNED internally for the
     * duration of the commit (persisted memory-and-disk, unpersisted in
     * finally; a batch the caller already persisted is used as-is): the
@@ -2136,6 +2140,12 @@ object SnapshotTable {
     * standard Spark caveat remains: a lost executor recomputes lost
     * cached partitions from lineage.
     *
+    * One pass over the batch's keys ([[batchKeys]]) gives the range
+    * bound; a probe-sized batch also runs the Bloom probe, touched
+    * probe and rewrite on its key set as literals, so the commit plans
+    * no join or exchange on the key; a larger batch semi- and
+    * anti-joins its distinct keys.
+    *
     * `expectedBase` = CAS commit (see [[commit]]); `txn` = replay
     * guard (see [[commitAppend]], [[lastCommittedBatch]]). */
   def commitMerge(s: SparkSession, root: String, batch0: DataFrame,
@@ -2143,8 +2153,6 @@ object SnapshotTable {
       expectedBase: Long = AnyBase,
       txn: Option[(String, Long)] = None)(
       resolve: (Option[DataFrame], DataFrame) => DataFrame): Long = {
-    import org.apache.spark.sql.functions._
-    val fs = fsOf(s, root)
     val base = latestVersion(s, root)
     casCheck(root, base, expectedBase)
     val inherited = base.map(v => statsColsOf(s, root, v)).getOrElse(Nil)
@@ -2157,14 +2165,6 @@ object SnapshotTable {
       else batch0.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      def fullMerge(cur: DataFrame): DataFrame = {
-        val keys = batch.select(col(mergeKey)).distinct()
-        cur.join(keys, Seq(mergeKey), "left_anti")
-          .unionByName(
-            resolve(Some(cur.join(keys, Seq(mergeKey), "left_semi")),
-              batch),
-            allowMissingColumns = true)
-      }
       base match {
         case None =>
           commitCore(s, root, retain, statsCols, carriedFrom = None,
@@ -2175,25 +2175,14 @@ object SnapshotTable {
           val schema = schemaOfVersion(s, root, v)
           require(schema.fieldNames.contains(mergeKey),
             s"merge key '$mergeKey' not in table schema")
-          val candidates = candidateFiles(s, root, v, batch, mergeKey,
+          // the first action on the pinned batch: it materializes it
+          val keys = batchKeys(batch, mergeKey)
+          val candidates = candidateFiles(s, root, v, keys, mergeKey,
             schema, inherited, inheritedBloom)
           val touched: Set[String] =
-            if (candidates.isEmpty) Set.empty
-            else {
-              val keys = batch.select(col(mergeKey).as("_graft_k"))
-                .distinct()
-              // raw physical-shape probe (files store physical names);
-              // DV-hidden rows count as touches — harmless, the
-              // rewrite folds their vectors anyway
-              val cmv = colmapOf(fs, root, v)
-              s.read.schema(physSchema(schema, cmv))
-                .parquet(candidates.map(f => s"$root/$f"): _*)
-                .select(col(cmv.physical(mergeKey)).as(mergeKey),
-                  relFile.as("_graft_file"))
-                .join(keys, col(mergeKey) === col("_graft_k"), "left_semi")
-                .select("_graft_file").distinct()
-                .collect().map(_.getString(0)).toSet
-            }
+            if (candidates.isEmpty || keys.range.isEmpty) Set.empty
+            else touchedProbe(s, root, v, candidates, schema, batch,
+              keys.probe, mergeKey).collect().toSet
           commitCore(s, root, retain, statsCols, carriedFrom = Some(v),
             dropCarried = touched, casBase = expectedBase, txn = txn,
             bloomCols = inheritedBloom) { _ =>
@@ -2202,8 +2191,9 @@ object SnapshotTable {
             // not resurrect into the fresh segment); their DV entries
             // are dropped with them by the carry restriction — the
             // copy-on-write merge doubles as opportunistic DV folding
-            else fullMerge(readFilesVisible(s, root, v,
-              touched.toSeq.sorted, schema))
+            else rewriteTouched(readFilesVisible(s, root, v,
+              touched.toSeq.sorted, schema), batch, keys.probe, mergeKey)(
+              resolve)
           }
       }
     } catch {
@@ -2216,18 +2206,130 @@ object SnapshotTable {
     }
   }
 
+  /** What a merge commit reads of its batch's non-null `mergeKey`
+    * values: `probe` = the distinct values when there are at most
+    * [[bloomProbeMaxKeys]] of them (the CDC point-upsert shape), else
+    * None; `range` = their (min, max), None when there are none.
+    * External (Row) values. */
+  private final case class BatchKeys(probe: Option[Seq[Any]],
+      range: Option[(Any, Any)])
+
+  /** [[BatchKeys]] of `batch` from ONE job with no exchange: each
+    * partition scans its keys once, keeping min and max by the key
+    * type's interpreted ordering (the ordering `min`/`max` use) and the
+    * distinct values up to the cap; the driver merges the partitions.
+    * A merge commit's range bound, Bloom probe, touched probe and
+    * rewrite all read this instead of each aggregating or joining the
+    * batch: on a small commit every extra job or shuffle is a
+    * measurable share of the commit (BENCH_LOG "PR 8"). Past the cap
+    * the key set is not a probe: the probes and the rewrite join the
+    * batch's distinct keys, as they do for nested key types (struct,
+    * array, map), which have no plain literal. */
+  private def batchKeys(batch: DataFrame, mergeKey: String): BatchKeys = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.functions.col
+    val dt = batch.schema(mergeKey).dataType
+    val cap = bloomProbeMaxKeys
+    val parts = batch.select(col(mergeKey))
+      .where(col(mergeKey).isNotNull).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val ord = TypeUtils.getInterpretedOrdering(dt)
+        val seen = scala.collection.mutable.HashSet.empty[Any]
+        var lo, hi: Any = null
+        rows.foreach { r =>
+          val k = r.get(0, dt)
+          if (seen.size <= cap && !seen.contains(k))
+            seen += InternalRow.copyValue(k)
+          if (lo == null || ord.lt(k, lo)) lo = InternalRow.copyValue(k)
+          if (hi == null || ord.gt(k, hi)) hi = InternalRow.copyValue(k)
+        }
+        Iterator((seen.toSeq, lo, hi))
+      }.collect()
+    val ord = TypeUtils.getInterpretedOrdering(dt)
+    val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+    val ks = parts.iterator.flatMap(_._1).toSeq.distinct
+    val nested = dt match {
+      case _: StructType | _: ArrayType | _: MapType => true
+      case _ => false
+    }
+    val los = parts.map(_._2).filter(_ != null)
+    BatchKeys(
+      if (nested || ks.size > cap) None else Some(ks.map(toScala)),
+      if (los.isEmpty) None
+      else Some((toScala(los.min(ord)),
+        toScala(parts.map(_._3).filter(_ != null).max(ord)))))
+  }
+
+  /** The rows of `df` whose `mergeKey` the batch holds (`holds =
+    * false`: the rest, NULL keys included). A probe-sized key set
+    * filters by one literal predicate, NULL-safe so that a NULL key is
+    * never held and always in the rest — exactly the equi-join's
+    * answer; a larger one semi- or anti-joins the batch's distinct
+    * keys. */
+  private def byBatchKeys(df: DataFrame, batch: DataFrame,
+      probe: Option[Seq[Any]], mergeKey: String,
+      holds: Boolean = true): DataFrame = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    probe match {
+      case Some(ks) =>
+        val dt = batch.schema(mergeKey).dataType
+        val in =
+          if (ks.isEmpty) lit(false)
+          else coalesce(col(mergeKey).isin(ks.map(lit(_).cast(dt)): _*),
+            lit(false))
+        df.where(if (holds) in else !in)
+      case None =>
+        df.join(batch.select(col(mergeKey)).distinct(), Seq(mergeKey),
+          if (holds) "left_semi" else "left_anti")
+    }
+  }
+
+  /** Root-relative names of the `candidates` of version `v` that hold a
+    * batch key, read from the key column alone. File names are deduped
+    * inside each partition and then on the driver, so a probe-sized key
+    * set plans no exchange. */
+  private[graft] def touchedProbe(s: SparkSession, root: String, v: Long,
+      candidates: Seq[String], schema: StructType, batch: DataFrame,
+      probe: Option[Seq[Any]], mergeKey: String)
+      : org.apache.spark.sql.Dataset[String] = {
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.functions.col
+    // raw physical-shape probe (files store physical names); DV-hidden
+    // rows count as touches — harmless, the rewrite folds their
+    // vectors anyway
+    val cmv = colmapOf(fsOf(s, root), root, v)
+    val scan = s.read.schema(physSchema(schema, cmv))
+      .parquet(candidates.map(f => s"$root/$f"): _*)
+      .select(col(cmv.physical(mergeKey)).as(mergeKey),
+        relFile.as("_graft_file"))
+    byBatchKeys(scan, batch, probe, mergeKey)
+      .select("_graft_file").as(Encoders.STRING)
+      .mapPartitions(_.toSet.iterator)(Encoders.STRING)
+  }
+
+  /** The copy-on-write image of the touched files `cur`: their rows
+    * whose key the batch does not hold, verbatim, plus `resolve` of the
+    * rows it does hold against the batch. */
+  private[graft] def rewriteTouched(cur: DataFrame, batch: DataFrame,
+      probe: Option[Seq[Any]], mergeKey: String)(
+      resolve: (Option[DataFrame], DataFrame) => DataFrame): DataFrame =
+    byBatchKeys(cur, batch, probe, mergeKey, holds = false).unionByName(
+      resolve(Some(byBatchKeys(cur, batch, probe, mergeKey)), batch),
+      allowMissingColumns = true)
+
   /** Files of version `v` that MAY hold some batch key, by the stats
     * manifest: range conjunct when `mergeKey` has min/max stats, Bloom
     * conjunct when it has a filter and the batch's key set is
     * probe-sized (the CDC point-upsert shape — a big batch touches
     * most files anyway, and its probe expression would be the in-list
-    * anti-pattern). Optimization only — no-stats files stay candidates
-    * via the isNull arms; null batch keys never equi-match existing
-    * rows, so they are rightly excluded. Shared by [[commitMerge]] and
+    * anti-pattern). Both come from `keys`, so this runs no job on the
+    * batch. Optimization only — no-stats files stay candidates via the
+    * isNull arms; null batch keys never equi-match existing rows, so
+    * they are rightly excluded. Shared by [[commitMerge]] and
     * [[commitMergeDV]], which pass `v`'s [[statsColsOf]] and
     * [[bloomColsOf]] they already resolved for the commit. */
   private def candidateFiles(s: SparkSession, root: String, v: Long,
-      batch: DataFrame, mergeKey: String, schema: StructType,
+      keys: BatchKeys, mergeKey: String, schema: StructType,
       statsCols: Seq[String], bloomCols: Seq[String]): Seq[String] = {
     import org.apache.spark.sql.functions._
     val all = dataFiles(s, root, v)
@@ -2239,27 +2341,19 @@ object SnapshotTable {
       val kp = colmapOf(fsOf(s, root), root, v).physical(mergeKey)
       val rangeCond: Option[Column] =
         if (!hasRange) None
-        else {
-          val b = batch
-            .agg(min(col(mergeKey)), max(col(mergeKey))).first()
-          if (b.isNullAt(0)) Some(lit(false)) // empty/all-null
-          else Some(col(s"min__$kp").isNull ||
+        else keys.range match {
+          case None => Some(lit(false)) // empty/all-null
+          case Some((lo, hi)) => Some(col(s"min__$kp").isNull ||
             col(s"max__$kp").isNull ||
-            (col(s"max__$kp") >= lit(b.get(0)) &&
-              col(s"min__$kp") <= lit(b.get(1))))
+            (col(s"max__$kp") >= lit(lo) && col(s"min__$kp") <= lit(hi)))
         }
-      val bloomCond: Option[Column] =
-        if (!hasBloom) None
-        else {
-          val ks = batch.select(col(mergeKey))
-            .where(col(mergeKey).isNotNull).distinct()
-            .limit(bloomProbeMaxKeys + 1)
-            .collect().map(_.get(0)).toSeq
+      val bloomCond: Option[Column] = keys.probe match {
+        case Some(ks) if hasBloom =>
           if (ks.isEmpty) Some(lit(false))
-          else if (ks.size > bloomProbeMaxKeys) None
           else Some(bloomHitExpr(kp,
             rawBloomHashes(s, ks, schema(mergeKey).dataType)))
-        }
+        case _ => None
+      }
       (rangeCond.toSeq ++ bloomCond.toSeq).reduceOption(_ && _) match {
         case None => all
         case Some(cond) => manifestDf(s, root, v).where(cond)
@@ -2319,7 +2413,7 @@ object SnapshotTable {
         val statsCols = (inherited :+ mergeKey).distinct
         val inheritedBloom = bloomColsOf(s, root, v)
         // same single-evaluation pinning as commitMerge: the batch
-        // feeds the candidate agg, the hidden-row probe, and resolve
+        // feeds the key collect, the hidden-row probe, and resolve
         val wasCached =
           batch0.storageLevel != org.apache.spark.storage.StorageLevel.NONE
         val batch = if (wasCached) batch0
@@ -2327,12 +2421,11 @@ object SnapshotTable {
             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         var hit: Option[DataFrame] = None
         try {
-          val candidates = candidateFiles(s, root, v, batch, mergeKey,
+          val keys = batchKeys(batch, mergeKey)
+          val candidates = candidateFiles(s, root, v, keys, mergeKey,
             schema, inherited, inheritedBloom)
-          val keys = batch.select(col(mergeKey).as("_graft_k"))
-            .distinct()
           val visible =
-            if (candidates.isEmpty) None
+            if (candidates.isEmpty || keys.range.isEmpty) None
             else Some(readFilesVisible(s, root, v, candidates, schema,
               keepFileCol = Some("_graft_file")))
           // tombstone probe: ONLY (file, key) — Catalyst prunes the
@@ -2340,12 +2433,11 @@ object SnapshotTable {
           // DV anti-join inputs), so the probe never reads payload
           // bytes. At a wide production schema this is the difference
           // between an O(candidate-bytes) and an O(key-column) merge.
-          val hitKeys = visible.map(_
-            .select(col("_graft_file"), col(mergeKey))
-            .join(keys, col(mergeKey) === col("_graft_k"), "left_semi")
-            .distinct()
-            .persist(org.apache.spark.storage.StorageLevel
-              .MEMORY_AND_DISK))
+          val hitKeys = visible.map(vis =>
+            byBatchKeys(vis.select(col("_graft_file"), col(mergeKey)),
+              batch, keys.probe, mergeKey).distinct()
+              .persist(org.apache.spark.storage.StorageLevel
+                .MEMORY_AND_DISK))
           hit = hitKeys
           val anyHit = hitKeys.exists(!_.isEmpty)
           val dvEntries =
@@ -2359,9 +2451,9 @@ object SnapshotTable {
           // diverge from the tombstones above; a resolve that ignores
           // it (pure upsert, point delete — the CDC hot path) never
           // executes this read at all
-          val existing = visible.map(_
-            .join(keys, col(mergeKey) === col("_graft_k"), "left_semi")
-            .drop("_graft_file"))
+          val existing = visible.map(vis =>
+            byBatchKeys(vis, batch, keys.probe, mergeKey)
+              .drop("_graft_file"))
           commitCore(s, root, retain, statsCols, carriedFrom = Some(v),
             casBase = expectedBase, txn = txn,
             bloomCols = inheritedBloom, dvNew = dvEntries) { _ =>
@@ -2507,19 +2599,12 @@ object SnapshotTable {
         if (usable.nonEmpty || usableBloom.nonEmpty || baseHasStats) {
           val carried = carriedFrom.map { v =>
             if (hasStatsManifest(fs, root, v)) {
-              val all = manifestDf(s, root, v)
-              // exclude the DROPPED (merge-touched) files by broadcast
-              // anti-join, never by isin over the kept set: the kept
-              // set is the WHOLE TABLE minus a few touched files — at
-              // 100 TB that would put ~800k string literals in the
-              // plan, while the touched list stays small by design
-              if (dropCarried.isEmpty) all
-              else {
-                import s.implicits._
-                all.join(org.apache.spark.sql.functions.broadcast(
-                  dropCarried.toSeq.toDF("file")), Seq("file"),
-                  "left_anti")
-              }
+              // exclude the DROPPED (merge-touched) files, never keep
+              // by isin over the kept set: the kept set is the WHOLE
+              // TABLE minus a few touched files — at 100 TB that would
+              // put ~800k string literals in the plan, while the
+              // touched list stays small by design
+              withoutFiles(manifestDf(s, root, v), dropCarried.toSeq.sorted)
             } else fileOnlyManifest(s, carriedFiles)
           }
           val manifest = carried.fold(fresh)(c =>
@@ -2537,15 +2622,7 @@ object SnapshotTable {
       // writes nothing — compaction folding the last DV'd file leaves
       // the version DV-free, observable as the `_dv` dir's absence
       val carriedDv = carriedFrom.flatMap(v => dvOf(s, root, v)).map {
-        case (k, df) =>
-          val kept =
-            if (dropCarried.isEmpty) df
-            else {
-              import s.implicits._
-              df.join(org.apache.spark.sql.functions.broadcast(
-                dropCarried.toSeq.toDF("file")), Seq("file"), "left_anti")
-            }
-          (k, kept)
+        case (k, df) => (k, withoutFiles(df, dropCarried.toSeq.sorted))
       }
       val dvAll = (carriedDv, dvNew) match {
         case (None, n) => n

@@ -2350,4 +2350,234 @@ class SnapshotTableSpec extends AnyFunSuite {
       assert(same(s"$root/${seg.head}").toSet === Set("k", "n", "v", "note"))
     }
   }
+
+  /** Runs `f` with AQE off: its query-stage jobs are submitted from
+    * futures, so without it each exchange and broadcast is exactly one
+    * job and a plan's exchanges are visible in `executedPlan`. */
+  private def withoutAqe[A](f: => A): A = {
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try f finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
+  /** Latest `v` per key over the existing and the batch rows — reads
+    * `existing` through a window, as the streaming DWD upsert does. */
+  private def latestPerKey(ex: Option[org.apache.spark.sql.DataFrame],
+      b: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    ex.fold(b)(_.unionByName(b))
+      .withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy("k")
+          .orderBy(col("v").desc)))
+      .where(col("rn") === 1).drop("rn")
+
+  test("a probe-sized merge gives the same image through its literal " +
+      "key filters as through the join plans: NULL keys, a String key, " +
+      "256 and 257 keys, an empty and an all-NULL batch") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.types._
+    type Rows = Seq[(Option[Any], Long)]
+    def frame(dt: DataType, rows: Rows, pad: Boolean): DataFrame =
+      spark.createDataFrame(
+        java.util.Arrays.asList(rows.map { case (k, n) =>
+          Row(k.orNull, n, pad) }: _*),
+        StructType(Seq(StructField("k", dt), StructField("n", LongType),
+          StructField("pad", BooleanType, nullable = false))))
+    // reads `existing`: per batch key, the sum of the table's and the
+    // batch's `n` — a key split wrongly between the kept and resolved
+    // rows, or a NULL-keyed table row dropped or resolved, changes the
+    // image. Padding rows are dropped first.
+    def resolve(ex: Option[DataFrame], b: DataFrame): DataFrame = {
+      val bb = b.where(!col("pad")).select("k", "n")
+      ex.fold(bb)(_.select("k", "n").unionByName(bb))
+        .groupBy("k").agg(sum("n").as("n"))
+    }
+    def model(table: Rows, batch: Rows): Seq[String] = {
+      val bk = batch.flatMap(_._1).toSet
+      val kept = table.filter(_._1.forall(k => !bk.contains(k)))
+      val resolved = batch.groupBy(_._1).map { case (k, rs) =>
+        (k, rs.map(_._2).sum + k.fold(0L)(x =>
+          table.filter(_._1.contains(x)).map(_._2).sum)) }
+      (kept ++ resolved).map { case (k, n) => s"$k:$n" }.sorted
+    }
+    def image(root: String): Seq[String] =
+      SnapshotTable.read(spark, root).get.collect()
+        .map(r => s"${Option(r.get(0))}:${r.getLong(1)}").toSeq.sorted
+    val longTable: Rows = (0L until 40L).map(k => (Some(k), k * 10)) ++
+      Seq((None, 1000L), (None, 1001L))
+    val strTable: Rows = (0 until 40).map(i => (Some(f"k$i%03d"), i.toLong)) ++
+      Seq((None, 1000L))
+    val cases: Seq[(String, DataType, Rows, Rows, Int => Any)] = Seq(
+      ("NULL keys", LongType, longTable,
+        Seq(Some(3L), Some(17L), None, None, Some(100L))
+          .zipWithIndex.map { case (k, i) => (k, i + 1L) }, 1000000L + _),
+      // unsorted, spanning new keys below and above every file's range
+      ("String key", StringType, strTable,
+        Seq(Some("k031"), Some("a"), Some("k005"), Some("zz"),
+          Some("k0395"), None).zipWithIndex
+          .map { case (k, i) => (k, i + 1L) }, i => s"~pad$i"),
+      ("256 keys", LongType, longTable,
+        (0L until 256L).map(k => (Some(k), 1L)), 1000000L + _),
+      ("257 keys", LongType, longTable,
+        (0L until 257L).map(k => (Some(k), 1L)), 1000000L + _),
+      ("empty batch", LongType, longTable, Nil, 1000000L + _),
+      ("all-NULL batch", LongType, longTable,
+        Seq((None, 5L), (None, 6L)), 1000000L + _))
+    for ((name, dt, table, batch, padKey) <- cases;
+         how <- Seq("commitMerge", "commitMergeDV")) {
+      // the batch as is takes the literal path up to 256 keys; padded
+      // past the cap with keys that are in no file (and that the
+      // resolver drops) it takes the join plans
+      val padding: Rows = (0 until 257).map(i => (Some(padKey(i)), 0L))
+      val images = Seq(false, true).map { padded =>
+        var out: Seq[String] = Nil
+        withRoot { root =>
+          SnapshotTable.commitWithSkipping(spark, root, Seq("k"), Seq("k"),
+            bloomBits = 4096, retain = 10)(_ =>
+            frame(dt, table, pad = false).drop("pad")
+              .repartitionByRange(4, col("k")))
+          val b = frame(dt, batch, pad = false).unionByName(
+            frame(dt, if (padded) padding else Nil, pad = true))
+          if (how == "commitMerge")
+            SnapshotTable.commitMerge(spark, root, b, "k", retain = 10)(
+              resolve)
+          else
+            SnapshotTable.commitMergeDV(spark, root, b, "k", retain = 10)(
+              resolve)
+          out = image(root)
+        }
+        out
+      }
+      val expect = model(table, batch)
+      assert(images.head === expect, s"$how, $name: literal path")
+      assert(images(1) === expect, s"$how, $name: join path")
+    }
+  }
+
+  test("a probe-sized merge plans no exchange in its touched probe and " +
+      "no join in its copy-on-write rewrite") {
+    withRoot { root =>
+      import spark.implicits._
+      SnapshotTable.commitWithStatsCols(spark, root, Seq("k"),
+        retain = 10)(_ => (0L until 40L).map(k => (k, s"v$k"))
+        .toDF("k", "v").repartitionByRange(4, col("k")))
+      val v = SnapshotTable.latestVersion(spark, root).get
+      val files = SnapshotTable.dataFiles(spark, root, v)
+      val schema = SnapshotTable.read(spark, root).get.schema
+      val batch = Seq((3L, "x"), (17L, "y"), (50L, "z")).toDF("k", "v")
+      val keys = Seq[Any](3L, 17L, 50L)
+      def exchanges(ds: org.apache.spark.sql.Dataset[_]): Int =
+        withoutAqe(ds.queryExecution.executedPlan.collect {
+          case e: org.apache.spark.sql.execution.exchange.Exchange => e
+        }.size)
+      def joins(df: org.apache.spark.sql.DataFrame): Int =
+        df.queryExecution.optimizedPlan.collect {
+          case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+        }.size
+      def probe(ks: Option[Seq[Any]]) = SnapshotTable.touchedProbe(spark,
+        root, v, files, schema, batch, ks, "k")
+      def rewrite(ks: Option[Seq[Any]]) = SnapshotTable.rewriteTouched(
+        SnapshotTable.read(spark, root).get, batch, ks, "k")(latestPerKey)
+      assert(exchanges(probe(Some(keys))) === 0,
+        probe(Some(keys)).queryExecution.executedPlan.treeString)
+      assert(joins(rewrite(Some(keys))) === 0,
+        rewrite(Some(keys)).queryExecution.optimizedPlan.treeString)
+      // the over-cap plans, which the literal ones replace
+      assert(exchanges(probe(None)) > 0)
+      assert(joins(rewrite(None)) === 2)
+      assert(probe(Some(keys)).collect().sorted ===
+        probe(None).collect().sorted)
+      assert(probe(Some(keys)).collect().length === 2,
+        "keys 3 and 17 sit in two of the four range-split files")
+      val img = rewrite(Some(keys)).as[(Long, String)].collect().sorted
+      assert(img === rewrite(None).as[(Long, String)].collect().sorted)
+      assert(img.length === 41 && img.contains((3L, "x")) &&
+        img.contains((50L, "z")))
+    }
+  }
+
+  test("a probe-sized merge runs fewer Spark jobs than the range " +
+      "aggregate and join plans did") {
+    // jobs per commit with AQE off: the range aggregate, the capped
+    // distinct-limit key collect (DV path) and the broadcast key joins
+    // of the touched and tombstone probes ran `before`; one key
+    // collect feeding literal filters runs `now`
+    val before = Map("commitMerge" -> 8, "commitMergeDV" -> 10)
+    val now = Map("commitMerge" -> 6, "commitMergeDV" -> 8)
+    val jobs = Seq("commitMerge", "commitMergeDV").map { how =>
+      var names: Seq[String] = Nil
+      withRoot { root =>
+        SnapshotTable.commitWithStatsCols(spark, root, Seq("k"),
+          retain = 10)(_ => img((0L until 40L).map(k => (k, s"v$k")): _*)
+          .repartitionByRange(4, col("k")))
+        // one existing key (one touched file) plus five new ones
+        val b = img((17L +: (40L until 45L)).map(k => (k, "u")): _*)
+        names = withoutAqe(jobsOf {
+          if (how == "commitMerge")
+            SnapshotTable.commitMerge(spark, root, b, "k", retain = 10)(
+              latestPerKey)
+          else
+            SnapshotTable.commitMergeDV(spark, root, b, "k", retain = 10)(
+              latestPerKey)
+        }._2)
+        assert(SnapshotTable.read(spark, root).get.count() === 45)
+      }
+      how -> names
+    }
+    jobs.foreach { case (how, names) =>
+      assert(names.size <= now(how), s"$how ran ${names.size} jobs; the " +
+        s"literal key path runs ${now(how)}, the aggregate and join " +
+        s"plans ran ${before(how)} (all: ${jobs.map(j => s"${j._1} " +
+        j._2.size).mkString(", ")}): ${names.mkString("; ")}")
+    }
+  }
+
+  test("a commit drops its touched files from the carried checkpoint " +
+      "manifest and deletion vectors as literals up to the cap and by " +
+      "anti-join past it, keeping the same rows") {
+    import spark.implicits._
+    val conf = "spark.graft.manifestCheckpointInterval"
+    val prior = spark.conf.getOption(conf)
+    // every commit writes the full (checkpoint) manifest
+    spark.conf.set(conf, "1")
+    try withRoot { root =>
+      SnapshotTable.commitWithStatsCols(spark, root, Seq("k"),
+        retain = 10)(_ => spark.range(0L, 260L, 1L, 260)
+        .select(col("id").as("k"), concat(lit("v"), col("id")).as("v")))
+      val v0 = SnapshotTable.latestVersion(spark, root).get
+      assert(SnapshotTable.fileCount(spark, root, v0) === 260)
+      // hide every seed row behind a deletion vector entry
+      SnapshotTable.commitMergeDV(spark, root,
+        (0L until 260L).map(k => (k, s"d$k")).toDF("k", "v"), "k",
+        retain = 10)((_, b) => b)
+      def manifest(v: Long) = SnapshotTable.statsManifest(spark, root, v)
+        .collect().map(_.toString).toSet
+      def dv(v: Long) = SnapshotTable.dvOf(spark, root, v)
+        .fold(Set.empty[String])(_._2.collect().map(_.toString).toSet)
+      var model = (0L until 260L).map(k => k -> s"d$k").toMap
+      // 3 keys: 3 seed files + the DV segment's file(s), under the cap;
+      // 257 keys: 257 seed files + the segment's, past it
+      Seq(3, 257).foreach { n =>
+        val base = SnapshotTable.latestVersion(spark, root).get
+        val keys = (0L until n.toLong).map(_ * 260 / n)
+        SnapshotTable.commitMerge(spark, root,
+          keys.map(k => (k, s"c$n-$k")).toDF("k", "v"), "k",
+          retain = 10)((_, b) => b)
+        model ++= keys.map(k => k -> s"c$n-$k")
+        val v = SnapshotTable.latestVersion(spark, root).get
+        val dropped = SnapshotTable.dataFiles(spark, root, base).toSet --
+          SnapshotTable.dataFiles(spark, root, v)
+        assert(dropped.size > n && (n < 256 || dropped.size > 256),
+          s"$n keys dropped ${dropped.size} files")
+        def kept(rows: Set[String]) =
+          rows.filterNot(r => dropped.exists(f => r.contains(f)))
+        assert(kept(manifest(base)) subsetOf manifest(v),
+          s"$n keys: carried manifest rows changed")
+        assert(manifest(v).size ===
+          SnapshotTable.dataFiles(spark, root, v).size)
+        assert(dv(v) === kept(dv(base)), s"$n keys: carried DV entries")
+        assert(SnapshotTable.read(spark, root).get.as[(Long, String)]
+          .collect().toMap === model)
+      }
+    } finally prior.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
+  }
 }

@@ -47,6 +47,33 @@ class VectorExprSpec extends AnyFunSuite {
     assert(r.forall(row => math.abs(row.getDouble(0) - 1.0) < 1e-12))
   }
 
+  test("register adds only the functions a session lacks and leaves " +
+      "registered ones in place") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val s2 = spark.newSession()
+    val reg = s2.sessionState.functionRegistry
+    val names = Seq("graft_dot", "graft_cosine", "graft_l2norm",
+      "graft_simhash_bits", "graft_sorted_intersect_count",
+      "graft_minhash8", "graft_shingle_hashes3", "graft_token_hashes",
+      "graft_rolling_fp8", "graft_bpe_tokens")
+    VectorFunctions.register(s2)
+    def infos = names.map(n => reg.lookupFunction(FunctionIdentifier(n)))
+    val before = infos
+    assert(before.forall(_.isDefined), s"unregistered: $names")
+    // a registered function is left as it is: replacing it is a
+    // registry write plus a "replaced a previously registered
+    // function" WARN per function on every dot/cosine/... call
+    s2.range(1).select(VectorFunctions.dot(s2, array(lit(1.0)),
+      array(lit(2.0)))).collect()
+    infos.zip(before).zip(names).foreach { case ((a, b), n) =>
+      assert(a.get eq b.get, s"$n was re-registered") }
+    // a function the session lacks is added back
+    reg.dropFunction(FunctionIdentifier("graft_l2norm"))
+    VectorFunctions.register(s2)
+    assert(s2.sql("SELECT graft_l2norm(array(3.0d, 4.0d))").first()
+      .getDouble(0) === 5.0)
+  }
+
   test("sorted intersect count == size(array_intersect) on shingle sets") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("source"),
