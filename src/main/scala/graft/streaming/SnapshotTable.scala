@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.util.TypeUtils
@@ -469,14 +470,85 @@ object SnapshotTable {
     * schema it wrote (`ParquetReadSupport.SPARK_METADATA_KEY`). */
   private val sparkRowSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
+  /** A driver-side reader of one parquet file, its footer read. The
+    * read options come from the session's Hadoop configuration:
+    * `ParquetFileReader.open(InputFile)` alone builds a fresh Hadoop
+    * `Configuration` for every file, and loading its default resources
+    * cost 11–13 ms per footer, against 0.5–0.7 ms with the session's
+    * (8 manifest footers on a 4-vCPU VM). */
+  private def openParquet(s: SparkSession,
+      file: FileStatus): ParquetFileReader = {
+    val conf = s.sparkContext.hadoopConfiguration
+    ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf, file.getPath)
+        .build())
+  }
+
   /** Footer metadata of one parquet file, read on the driver (one
     * footer fetch, no Spark job). */
   private def footerOf(s: SparkSession,
       file: FileStatus): org.apache.parquet.hadoop.metadata.FileMetaData = {
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file,
-        s.sparkContext.hadoopConfiguration))
+    val r = openParquet(s, file)
     try r.getFooter.getFileMetaData finally r.close()
+  }
+
+  /** The row schema of a parquet file: the one Spark recorded, else
+    * the one Spark's schema converter derives from the message type. */
+  private def sparkSchemaOf(s: SparkSession,
+      meta: org.apache.parquet.hadoop.metadata.FileMetaData): StructType =
+    recordedSchema(meta).getOrElse(
+      new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetToSparkSchemaConverter(s.sessionState.conf)
+        .convert(meta.getSchema))
+
+  /** Every row of an open parquet file as Spark's row reader builds it
+    * (`ParquetReadSupport`, its record materializer), projected to
+    * `requested` — fields the file lacks read NULL. `f` sees each row
+    * once; the row object is reused. On the driver, no Spark job: for
+    * the few-hundred-row manifest parts it serves, the job's fixed
+    * cost was the whole of a Spark read. */
+  private def scanParquet(s: SparkSession, r: ParquetFileReader,
+      requested: StructType)(
+      f: org.apache.spark.sql.catalyst.InternalRow => Unit): Unit = {
+    import org.apache.spark.sql.execution.datasources.DataSourceUtils
+    import org.apache.spark.sql.execution.datasources.parquet
+      .ParquetReadSupport
+    import org.apache.spark.sql.internal.SQLConf
+    import scala.jdk.CollectionConverters._
+    val meta = r.getFooter.getFileMetaData
+    val kv = meta.getKeyValueMetaData
+    val sql = s.sessionState.conf
+    // the keys Spark's parquet scan sets for its read support and
+    // schema converter; nothing else of the Hadoop configuration is read
+    val conf = new org.apache.hadoop.conf.Configuration(false)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requested.json)
+    Seq(SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+      SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG).foreach(e =>
+      conf.setBoolean(e.key, sql.getConf(e)))
+    val fileMeta = (k: String) => kv.get(k)
+    val support = new ParquetReadSupport(None, false,
+      DataSourceUtils.datetimeRebaseSpec(fileMeta,
+        sql.getConfString(SQLConf.PARQUET_REBASE_MODE_IN_READ.key)),
+      DataSourceUtils.int96RebaseSpec(fileMeta,
+        sql.getConfString(SQLConf.PARQUET_INT96_REBASE_MODE_IN_READ.key)))
+    val ctx = support.init(new org.apache.parquet.hadoop.api.InitContext(
+      conf, kv.asScala.map { case (k, x) =>
+        k -> java.util.Collections.singleton(x) }.toMap.asJava,
+      meta.getSchema))
+    r.setRequestedSchema(ctx.getRequestedSchema)
+    val materializer = support.prepareForRead(conf, kv, meta.getSchema, ctx)
+    val io = new org.apache.parquet.io.ColumnIOFactory(meta.getCreatedBy)
+      .getColumnIO(ctx.getRequestedSchema, meta.getSchema, true)
+    var pages = r.readNextRowGroup()
+    while (pages != null) {
+      val rows = io.getRecordReader(pages, materializer,
+        org.apache.parquet.filter2.compat.FilterCompat.NOOP)
+      var i = 0L
+      while (i < pages.getRowCount) { f(rows.read()); i += 1 }
+      pages = r.readNextRowGroup()
+    }
   }
 
   /** The schema Spark recorded in a footer, if it recorded one. */
@@ -517,14 +589,30 @@ object SnapshotTable {
     * hidden-filtered by Spark's file index, which still serves the
     * read but logs a "All paths were ignored" WARN per call — at one
     * manifest read per query that polluted every bench tail (round-17
-    * verdict item 8). One listing RPC and one footer read against a
-    * dir that holds a coalesce(1) part file; no Spark job until the
-    * frame is evaluated. */
+    * verdict item 8). One listing RPC and one footer read
+    * ([[openParquet]]) against a dir that holds a coalesce(1) part
+    * file; no Spark job until the frame is evaluated. */
   private def readSidecarParquet(s: SparkSession, fs: FileSystem,
       dir: String): DataFrame = {
     val parts = parquetParts(fs, dir)
     require(parts.nonEmpty, s"no parquet part files under $dir")
     readParquetTyped(s, parts.head, parts.map(_.getPath.toString))
+  }
+
+  /** The distinct `file` values of a parquet sidecar directory (the
+    * files a `_dv` set names), read on the driver: no Spark job. */
+  private def sidecarFiles(s: SparkSession, dir: String): Set[String] = {
+    import org.apache.spark.unsafe.types.UTF8String
+    val seen = scala.collection.mutable.HashSet.empty[UTF8String]
+    val file = StructType(Seq(StructField("file", StringType)))
+    parquetParts(fsOf(s, dir), dir).foreach { p =>
+      val r = openParquet(s, p)
+      try scanParquet(s, r, file) { row =>
+        if (!row.isNullAt(0) && !seen.contains(row.getUTF8String(0)))
+          seen += row.getUTF8String(0).clone()
+      } finally r.close()
+    }
+    seen.iterator.map(_.toString).toSet
   }
 
   private def textLines(fs: FileSystem, p: Path): Seq[String] =
@@ -554,19 +642,31 @@ object SnapshotTable {
       files: Seq[String]): DataFrame = {
     val rows: java.util.List[Row] = java.util.Arrays.asList(
       files.map(f => Row(f, null)): _*)
-    s.createDataFrame(rows, StructType(Seq(
-      StructField("file", StringType, nullable = false),
-      StructField("rows", LongType, nullable = true))))
+    s.createDataFrame(rows, fileOnlySchema)
   }
 
-  /** The per-file stats manifest VIEW version `v` serves — for a full
-    * version its own parquet manifest; for a delta version the parent
-    * view minus this commit's removals plus its fresh rows (resolution
-    * depth bounded by [[checkpointInterval]]). All pruning, candidate
-    * selection, and maintenance reads go through here, so they see one
-    * merged manifest regardless of the physical tiering. */
-  private def manifestDf(s: SparkSession, root: String,
-      v: Long): DataFrame = {
+  private val fileOnlySchema = StructType(Seq(
+    StructField("file", StringType, nullable = false),
+    StructField("rows", LongType, nullable = true)))
+
+  /** One link of a manifest chain: the rows it contributes — its
+    * parquet manifest `dir`, or else file-only rows for `files` (NULL
+    * rows and stats) — and the files it `removed` from every OLDER
+    * link. */
+  private final case class ManifestLink(dir: Option[String],
+      files: Seq[String], removed: Seq[String])
+
+  /** The links of version `v`'s stats manifest VIEW, newest first: for
+    * a full version its own parquet manifest; for a delta version its
+    * fresh rows (its manifest, or its `_files_new` names when it wrote
+    * none) and removals, then its parent's links — down to the
+    * checkpoint, or to a stats-less parent, which contributes its whole
+    * file list as file-only rows (resolution depth bounded by
+    * [[checkpointInterval]]). A row of a link is in the view unless a
+    * NEWER link removed its file. The one definition of the view that
+    * [[manifestDf]] and [[manifestFiles]] both read. */
+  private def manifestChain(s: SparkSession, root: String,
+      v: Long): List[ManifestLink] = {
     val fs = fsOf(s, root)
     // per-RESOLUTION memos (round-17 advice): without them each chain
     // link re-issues the parent-pointer and manifest-dir exists() RPCs
@@ -582,20 +682,107 @@ object SnapshotTable {
       fs.exists(new Path(s"$root/v=$x/$manifestDir")))
     def chainHasStats(x: Long): Boolean =
       ownManifest(x) || parentOf(x).exists(chainHasStats)
-    def build(x: Long): DataFrame = parentOf(x) match {
-      case None => readSidecarParquet(s, fs, s"$root/v=$x/$manifestDir")
+    def dir(x: Long) = s"$root/v=$x/$manifestDir"
+    def walk(x: Long): List[ManifestLink] = parentOf(x) match {
+      case None => List(ManifestLink(Some(dir(x)), Nil, Nil))
       case Some(parent) =>
-        val parentView =
-          if (chainHasStats(parent)) build(parent)
-          else fileOnlyManifest(s, dataFiles(s, root, parent))
-        val kept = withoutFiles(parentView, removedOf(fs, root, x))
+        val removed = removedOf(fs, root, x)
         val fresh =
-          if (ownManifest(x))
-            readSidecarParquet(s, fs, s"$root/v=$x/$manifestDir")
-          else fileOnlyManifest(s, filesNewOf(fs, root, x))
-        kept.unionByName(fresh, allowMissingColumns = true)
+          if (ownManifest(x)) ManifestLink(Some(dir(x)), Nil, removed)
+          else ManifestLink(None, filesNewOf(fs, root, x), removed)
+        fresh :: (
+          if (chainHasStats(parent)) walk(parent)
+          else List(ManifestLink(None, dataFiles(s, root, parent), Nil)))
     }
-    build(v)
+    walk(v)
+  }
+
+  /** The per-file stats manifest VIEW version `v` serves
+    * ([[manifestChain]]) as a frame: each link's rows minus the newer
+    * links' removals. Maintenance reads and the stats aggregates go
+    * through here, so they see one merged manifest regardless of the
+    * physical tiering; file selection by a predicate reads the same
+    * view on the driver ([[manifestFiles]]). */
+  private def manifestDf(s: SparkSession, root: String,
+      v: Long): DataFrame = {
+    val fs = fsOf(s, root)
+    def rows(l: ManifestLink): DataFrame =
+      l.dir.fold(fileOnlyManifest(s, l.files))(readSidecarParquet(s, fs, _))
+    val oldest :: newer = manifestChain(s, root, v).reverse
+    newer.foldLeft(rows(oldest)) { (older, l) =>
+      withoutFiles(older, l.removed)
+        .unionByName(rows(l), allowMissingColumns = true)
+    }
+  }
+
+  /** Root-relative names of the files in version `v`'s manifest view
+    * whose row satisfies `cond` — `manifestDf(s, root, v).where(cond)
+    * .select("file")` as a set, sorted, with no Spark job. The chain is
+    * walked newest to oldest; each link's manifest part is read on the
+    * driver through Spark's own `ParquetReadSupport`, asking only for
+    * `file` and the columns `cond` references, and a row counts only if
+    * no newer link removed its file. `cond` is resolved against the
+    * view's schema by the analyzer and evaluated as a bound Catalyst
+    * predicate, so the range and Bloom expressions are the ones a
+    * Spark filter would run; only the kept names are held. A link's
+    * manifest is one coalesce(1) part, the part a Spark read of it
+    * would also scan as a single task: the job bought nothing but its
+    * fixed cost, which on a merge commit's candidate selection was as
+    * large as the batch's key pass (0.6–1.2 s per paced DWD commit on
+    * a 4-vCPU VM, against 10–110 ms read on the driver). */
+  private[graft] def manifestFiles(s: SparkSession, root: String,
+      v: Long, cond: Column): Seq[String] = {
+    import org.apache.spark.sql.catalyst.analysis.TypeCoercion
+    import org.apache.spark.sql.catalyst.expressions.{AttributeSeq,
+      BindReferences, GenericInternalRow, Predicate}
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    import org.apache.spark.unsafe.types.UTF8String
+    val fs = fsOf(s, root)
+    val links = manifestChain(s, root, v)
+    val parts = links.map(_.dir.fold(Seq.empty[ParquetFileReader])(d =>
+      parquetParts(fs, d).map(openParquet(s, _))))
+    try {
+      // the view's schema as the union of the links builds it: a column
+      // a link lacks reads NULL there; differing types widen (the
+      // parquet reader widens the narrower part's values)
+      val fields = (parts.flatten.map(r =>
+        sparkSchemaOf(s, r.getFooter.getFileMetaData)) ++
+        (if (links.exists(_.dir.isEmpty)) Seq(fileOnlySchema) else Nil))
+        .flatMap(_.fields)
+      val view = StructType(fields.map(_.name).distinct.map(n =>
+        fields.filter(_.name == n).reduce((a, b) => a.copy(dataType =
+          TypeCoercion.findWiderTypeForTwo(a.dataType, b.dataType)
+            .getOrElse(a.dataType)))))
+      val filter = org.apache.spark.sql.catalyst.optimizer
+        .ReplaceExpressions(s.createDataFrame(
+          java.util.Collections.emptyList[Row], view).where(cond)
+          .queryExecution.analyzed).collectFirst { case f: Filter => f }.get
+      val out = filter.child.output
+      val need = out.filter(_.name == "file") ++
+        out.filter(a => a.name != "file" && filter.references.contains(a))
+      val pred = Predicate.createInterpreted(
+        BindReferences.bindReference(filter.condition, AttributeSeq(need)))
+      pred.initialize(0)
+      val requested = StructType(need.map(a => StructField(a.name,
+        a.dataType)))
+      val gone = scala.collection.mutable.HashSet.empty[UTF8String]
+      val kept = Vector.newBuilder[String]
+      def keep(row: org.apache.spark.sql.catalyst.InternalRow): Unit = {
+        val u = row.getUTF8String(0)
+        if (!gone.contains(u) && pred.eval(row)) kept += u.toString
+      }
+      links.zip(parts).foreach { case (l, ps) =>
+        if (l.dir.isEmpty) {
+          val row = new GenericInternalRow(need.size)
+          l.files.foreach { f =>
+            row.update(0, UTF8String.fromString(f))
+            keep(row)
+          }
+        } else ps.foreach(r => scanParquet(s, r, requested)(keep))
+        gone ++= l.removed.map(UTF8String.fromString)
+      }
+      kept.result().sorted
+    } finally parts.flatten.foreach(_.close())
   }
 
   /** `view` minus the rows whose `file` is in `removed` (one chain
@@ -779,8 +966,7 @@ object SnapshotTable {
     dvOf(s, root, v) match {
       case None => rd(files)
       case Some((key, dv)) =>
-        val dvFiles = dv.select("file").distinct().collect()
-          .map(_.getString(0)).toSet
+        val dvFiles = sidecarFiles(s, s"$root/v=$v/$dvDir")
         val masked = files.filter(dvFiles.contains)
         if (masked.isEmpty) rd(files)
         else {
@@ -1644,7 +1830,8 @@ object SnapshotTable {
     * depth-7 chain over a 1M-file table, building the view DataFrame
     * just to call .schema measured ~1.7 s of analyzer/file-index work
     * per call). Each link costs one listing and one driver-side footer
-    * read ([[footerFieldNames]]) — no DataFrame, no Spark job. */
+    * read ([[footerFieldNames]], well under a millisecond through
+    * [[openParquet]]) — no DataFrame, no Spark job. */
   private def manifestFieldsOf(s: SparkSession, root: String,
       v: Long): Seq[String] = {
     val fs = fsOf(s, root)
@@ -1730,7 +1917,7 @@ object SnapshotTable {
     * predicate is the same few expressions however many values are
     * probed. NULL blooms (files written before the column had a
     * filter, 0-row files) stay conservative. */
-  private def bloomHitExpr(c: String,
+  private[graft] def bloomHitExpr(c: String,
       rawHashes: Seq[Seq[Long]]): Column = {
     import org.apache.spark.sql.functions._
     val b = col(s"bloom__$c")
@@ -2211,7 +2398,7 @@ object SnapshotTable {
     * [[bloomProbeMaxKeys]] of them (the CDC point-upsert shape), else
     * None; `range` = their (min, max), None when there are none.
     * External (Row) values. */
-  private final case class BatchKeys(probe: Option[Seq[Any]],
+  private[graft] final case class BatchKeys(probe: Option[Seq[Any]],
       range: Option[(Any, Any)])
 
   /** [[BatchKeys]] of `batch` from ONE job with no exchange: each
@@ -2322,14 +2509,15 @@ object SnapshotTable {
     * conjunct when it has a filter and the batch's key set is
     * probe-sized (the CDC point-upsert shape — a big batch touches
     * most files anyway, and its probe expression would be the in-list
-    * anti-pattern). Both come from `keys`, so this runs no job on the
-    * batch. Optimization only — no-stats files stay candidates via the
+    * anti-pattern). Both come from `keys`, and the manifest chain is
+    * read on the driver ([[manifestFiles]]), so the selection runs no
+    * Spark job. Optimization only — no-stats files stay candidates via the
     * isNull arms; null batch keys never equi-match existing rows, so
     * they are rightly excluded. Shared by [[commitMerge]] and
     * [[commitMergeDV]], which pass `v`'s [[statsColsOf]] and
     * [[bloomColsOf]] they already resolved for the commit. */
-  private def candidateFiles(s: SparkSession, root: String, v: Long,
-      keys: BatchKeys, mergeKey: String, schema: StructType,
+  private[graft] def candidateFiles(s: SparkSession, root: String,
+      v: Long, keys: BatchKeys, mergeKey: String, schema: StructType,
       statsCols: Seq[String], bloomCols: Seq[String]): Seq[String] = {
     import org.apache.spark.sql.functions._
     val all = dataFiles(s, root, v)
@@ -2356,8 +2544,7 @@ object SnapshotTable {
       }
       (rangeCond.toSeq ++ bloomCond.toSeq).reduceOption(_ && _) match {
         case None => all
-        case Some(cond) => manifestDf(s, root, v).where(cond)
-          .select("file").collect().map(_.getString(0)).toSeq
+        case Some(cond) => manifestFiles(s, root, v, cond)
       }
     }
   }
@@ -2439,12 +2626,15 @@ object SnapshotTable {
               .persist(org.apache.spark.storage.StorageLevel
                 .MEMORY_AND_DISK))
           hit = hitKeys
-          val anyHit = hitKeys.exists(!_.isEmpty)
+          // one job materializes the persisted hit set and answers both
+          // "any hit?" and commitCore's non-empty check
+          val hits = hitKeys.fold(0L)(_.count())
+          val anyHit = hits > 0
           val dvEntries =
             if (!anyHit) None
-            else Some((keyPhys, hitKeys.get
+            else Some(NewDvEntries(keyPhys, hitKeys.get
               .select(col("_graft_file").as("file"),
-                col(mergeKey).as(dvValCol))))
+                col(mergeKey).as(dvValCol)), hits))
           // resolve's `existing` is a LAZY full-schema read of the same
           // immutable candidate files filtered by the same persisted
           // key set — deterministic by file immutability, so it cannot
@@ -2470,6 +2660,12 @@ object SnapshotTable {
     }
   }
 
+  /** A merge-on-read commit's new deletion-vector entries: (file,
+    * key value) rows under the PHYSICAL key name `key`, and how many
+    * there are — counted by the caller on the persisted entry set. */
+  private final case class NewDvEntries(key: String, entries: DataFrame,
+      count: Long)
+
   private def commitCore(s: SparkSession, root: String, retain: Int,
       statsCols: Seq[String], carriedFrom: Option[Long],
       afterStage: String => Unit = _ => (),
@@ -2478,7 +2674,7 @@ object SnapshotTable {
       txn: Option[(String, Long)] = None,
       bloomCols: Seq[String] = Nil,
       bloomBits: Int = defaultBloomBits,
-      dvNew: Option[(String, DataFrame)] = None)(
+      dvNew: Option[NewDvEntries] = None)(
       // the current image is a THUNK, not a value: building the
       // DataFrame resolves and validates every referenced file path
       // (Spark's file-index construction — driver work linear in
@@ -2624,7 +2820,7 @@ object SnapshotTable {
       val carriedDv = carriedFrom.flatMap(v => dvOf(s, root, v)).map {
         case (k, df) => (k, withoutFiles(df, dropCarried.toSeq.sorted))
       }
-      val dvAll = (carriedDv, dvNew) match {
+      val dvAll = (carriedDv, dvNew.map(d => (d.key, d.entries))) match {
         case (None, n) => n
         case (c, None) => c
         case (Some((ck, c)), Some((nk, n))) =>
@@ -2638,9 +2834,9 @@ object SnapshotTable {
       // non-empty by construction (only built on a hit). Assert it so
       // a future commitCore caller passing an empty dvNew fails here
       // instead of silently publishing an empty `_dv` dir + key file
-      // (round-17 advice). One driver-side isEmpty on a frame the
-      // caller just materialized from a persisted probe — cheap.
-      require(dvNew.forall(!_._2.isEmpty),
+      // (round-17 advice) — against the count the caller took of the
+      // persisted entries, so the check itself runs no Spark job.
+      require(dvNew.forall(_.count > 0),
         "commitCore: dvNew must be absent or non-empty — an empty " +
           "entry set must be passed as None, not Some(empty)")
       dvAll.foreach { case (k, df) =>
@@ -3050,7 +3246,6 @@ object SnapshotTable {
     val cm = colmapOf(fsOf(s, root), root, v)
     val avail = preds.filter(p => have.contains(p._1))
     if (avail.isEmpty) return fullScan(s, root, v)
-    val m = manifestDf(s, root, v)
     // manifest stats columns are keyed by PHYSICAL name — the mapping
     // is what lets pruning survive a rename untouched
     val cond = avail.map { case (c0, lo, hi) =>
@@ -3058,13 +3253,12 @@ object SnapshotTable {
       col(s"min__$c").isNull || col(s"max__$c").isNull ||
         (col(s"max__$c") >= lo && col(s"min__$c") <= hi)
     }.reduce(_ && _)
-    // the predicate evaluates ON the manifest scan and only the KEPT
-    // names come back — the driver transfer is the answer, never the
-    // whole file inventory (at 800k files the difference between a
-    // pruned name list and an 800k-row collect); files_total comes
-    // from the sidecar, a text read with no Spark job
-    val keep = m.where(cond).select("file").collect()
-      .map(_.getString(0)).sorted
+    // the predicate is evaluated on the driver as each manifest row is
+    // read and only the KEPT names are held — never the whole file
+    // inventory (at 800k files the difference between a pruned name
+    // list and 800k strings); files_total comes from the sidecar, a
+    // text read; no Spark job
+    val keep = manifestFiles(s, root, v, cond)
     val total = dataFiles(s, root, v).size
     val schema = schemaOfVersion(s, root, v)
     val df =
@@ -3124,10 +3318,9 @@ object SnapshotTable {
       else Some(bloomHitExpr(cp, rawBloomHashes(s, values,
         schemaOfVersion(s, root, v)(c).dataType)))
     val cond = (rangeCond.toSeq ++ bloomCond.toSeq).reduce(_ && _)
-    // kept names only come back to the driver (blooms stay on the
-    // executors; see pruneManifest for the transfer rationale)
-    val keep = manifestDf(s, root, v).where(cond).select("file")
-      .collect().map(_.getString(0)).sorted
+    // only the kept names are held (the Bloom words are read and
+    // tested row by row; see pruneManifest)
+    val keep = manifestFiles(s, root, v, cond)
     val total = dataFiles(s, root, v).size
     val schema = schemaOfVersion(s, root, v)
     val df =
@@ -3232,10 +3425,7 @@ object SnapshotTable {
       }
     (boxConds ++ probeConds).reduceOption(_ && _) match {
       case None => (all, all.size)
-      case Some(cond) =>
-        val keep = manifestDf(s, root, v).where(cond)
-          .select("file").collect().map(_.getString(0)).sorted.toSeq
-        (keep, all.size)
+      case Some(cond) => (manifestFiles(s, root, v, cond), all.size)
     }
   }
 

@@ -2580,4 +2580,289 @@ class SnapshotTableSpec extends AnyFunSuite {
       }
     } finally prior.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
   }
+
+  test("candidate selection and pruned-read planning run no Spark job") {
+    withRoot { root =>
+      import spark.implicits._
+      // a delta chain under a checkpoint: stats and Bloom on `k`, a
+      // merge that removes a file, deletion vectors, and ADD COLUMN
+      SnapshotTable.commitWithSkipping(spark, root, Seq("k"), Seq("k"),
+        bloomBits = 4096, retain = 10)(_ =>
+        (0L until 40L).map(k => (k, s"v$k")).toDF("k", "v")
+          .repartitionByRange(4, col("k")))
+      SnapshotTable.commitMerge(spark, root,
+        Seq((3L, "m"), (50L, "n")).toDF("k", "v"), "k",
+        retain = 10)((_, b) => b)
+      SnapshotTable.commitMergeDV(spark, root,
+        Seq((21L, "d")).toDF("k", "v"), "k", retain = 10)((_, b) => b)
+      SnapshotTable.commitAppend(spark, root,
+        Seq((60L, "a", "x")).toDF("k", "v", "note"), retain = 10)
+      val v = SnapshotTable.latestVersion(spark, root).get
+      val schema = SnapshotTable.schemaOfVersion(spark, root, v)
+      val keys = SnapshotTable.BatchKeys(Some(Seq(17L, 21L)),
+        Some((17L, 21L)))
+      val (cands, candJobs) = withoutAqe(jobsOf(
+        SnapshotTable.candidateFiles(spark, root, v, keys, "k", schema,
+          Seq("k"), Seq("k"))))
+      val (box, boxJobs) = withoutAqe(jobsOf(
+        SnapshotTable.readPrunedBox(spark, root,
+          Seq(("k", lit(0L), lit(10L))))))
+      val (in, inJobs) = withoutAqe(jobsOf(
+        SnapshotTable.readPrunedIn(spark, root, "k", Seq(21L, 60L))))
+      val (dsv2, dsv2Jobs) = withoutAqe(jobsOf(
+        SnapshotTable.pruneFilesFor(spark, root, v,
+          Seq(("k", Some(30L), None)), Seq(("k", Seq(35L))))))
+      Seq("candidateFiles" -> candJobs, "readPrunedBox" -> boxJobs,
+        "readPrunedIn" -> inJobs, "pruneFilesFor" -> dsv2Jobs).foreach {
+        case (what, jobs) => assert(jobs.isEmpty,
+          s"$what ran ${jobs.size} Spark jobs (the manifest collect ran " +
+            s"one): ${jobs.mkString("; ")}") }
+      // the selections are real: fewer files than the version holds,
+      // and the pruned reads still answer exactly
+      val total = SnapshotTable.dataFiles(spark, root, v).size
+      assert(cands.nonEmpty && cands.size < total, s"$cands of $total")
+      assert(box.filesRead < box.filesTotal)
+      assert(box.df.where(col("k") <= 10L).count() === 11)
+      assert(in.df.where(col("k").isin(21L, 60L)).select("k", "v")
+        .as[(Long, String)].collect().toSet === Set((21L, "d"), (60L, "a")))
+      assert(dsv2._1.nonEmpty && dsv2._1.size < dsv2._2)
+    }
+  }
+
+  test("commit job counts with AQE off: commitMerge runs 5 Spark jobs " +
+      "and commitMergeDV 6") {
+    // the same commits ran 6 and 8 jobs while the candidate manifest
+    // collect was a Spark job in each and commitMergeDV probed its hit
+    // set's emptiness with two limit(1) takes instead of one count
+    val pinned = Map("commitMerge" -> 5, "commitMergeDV" -> 6)
+    pinned.foreach { case (how, n) =>
+      withRoot { root =>
+        SnapshotTable.commitWithStatsCols(spark, root, Seq("k"),
+          retain = 10)(_ => img((0L until 40L).map(k => (k, s"v$k")): _*)
+          .repartitionByRange(4, col("k")))
+        val b = img((17L +: (40L until 45L)).map(k => (k, "u")): _*)
+        val names = withoutAqe(jobsOf {
+          if (how == "commitMerge")
+            SnapshotTable.commitMerge(spark, root, b, "k", retain = 10)(
+              latestPerKey)
+          else
+            SnapshotTable.commitMergeDV(spark, root, b, "k", retain = 10)(
+              latestPerKey)
+        }._2)
+        assert(names.size === n, s"$how: ${names.mkString("; ")}")
+        assert(SnapshotTable.read(spark, root).get.count() === 45)
+      }
+    }
+  }
+
+  /** One generated manifest row: a data file and what its link's
+    * manifest records of it (`n` only on links past the ADD COLUMN,
+    * `bloom` only on links that carry the filter). */
+  private case class GenFile(file: String, rows: Option[Long],
+      k: Option[(Long, Long)], n: Option[(Int, Int)],
+      bloom: Option[Seq[Long]])
+  /** One generated version: fresh files, removed files, whether it
+    * writes a parquet manifest and with which optional columns (`n`'s
+    * stats as bigint once the column is widened). */
+  private case class GenLink(fresh: Seq[GenFile], removed: Seq[String],
+      stats: Boolean, withN: Boolean, nLong: Boolean, withBloom: Boolean)
+  /** A generated table history: a pre-checkpoint history whose files
+    * never reach the view, the checkpoint, its deltas (newest last),
+    * and the probe values of the conditions. */
+  private case class GenChain(old: Seq[GenLink], ckpt: GenLink,
+      deltas: Seq[GenLink], lo: Long, hi: Long, ins: Seq[Long],
+      nLo: Int, hashes: Seq[Seq[Long]])
+
+  private object ChainGen {
+    import org.scalacheck.Gen
+    def file(name: String, withN: Boolean, withBloom: Boolean)
+        : Gen[GenFile] = for {
+      rows <- Gen.option(Gen.choose(0L, 50L))
+      lo <- Gen.choose(0L, 100L)
+      w <- Gen.choose(0L, 30L)
+      k <- Gen.frequency(4 -> Gen.const(Some((lo, lo + w))), 1 -> None)
+      nl <- Gen.choose(0, 20)
+      n <- Gen.frequency(3 -> Gen.const(Some((nl, nl + 5))), 1 -> None)
+      words <- Gen.choose(1, 2).flatMap(Gen.listOfN(_, Gen.long))
+      bloom <- Gen.frequency(6 -> Gen.const(Some(words)),
+        1 -> Gen.const(Some(Nil)), 1 -> None)
+    } yield GenFile(name, rows, k, if (withN) n else None,
+      if (withBloom) bloom else None)
+    def link(id: String, live: Seq[String], addN: Boolean,
+        nLong: Boolean, merge: Boolean): Gen[GenLink] = for {
+      nFresh <- Gen.choose(if (merge) 1 else 0, 3)
+      stats <- Gen.frequency(3 -> Gen.const(true), 1 -> Gen.const(false))
+      withBloom <- Gen.oneOf(true, false)
+      fresh <- Gen.sequence[List[GenFile], GenFile]((0 until nFresh).map(
+        i => file(s"seg-$id/part-$i.parquet", addN, withBloom)))
+      removed <-
+        if (!merge || live.isEmpty) Gen.const(Nil)
+        else Gen.choose(1, math.min(3, live.size))
+          .flatMap(Gen.pick(_, live)).map(_.toList.distinct)
+    } yield GenLink(fresh, removed, stats && fresh.nonEmpty, addN, nLong,
+      withBloom)
+    val chain: Gen[GenChain] = for {
+      old <- Gen.choose(1, 2).flatMap(d => Gen.sequence[List[GenLink],
+        GenLink]((0 until d).map(i =>
+        link(s"old$i", Nil, false, false, false))))
+      addAt <- Gen.choose(0, 8)
+      widenAt <- Gen.choose(addAt, 10)
+      depth <- Gen.choose(0, 7)
+      // a checkpoint with files; with no delta over it, it must carry
+      // the manifest (a stats-less table has no view to filter)
+      ckpt0 <- link("c", Nil, addAt == 0, widenAt == 0, merge = true)
+      ckpt = if (depth == 0) ckpt0.copy(stats = true) else ckpt0
+      deltas <- (1 to depth).foldLeft(Gen.const(List.empty[GenLink])) {
+        (acc, i) => acc.flatMap { done =>
+          val live = (ckpt +: done).foldLeft(Seq.empty[String])((l, d) =>
+            l.filterNot(d.removed.contains) ++ d.fresh.map(_.file))
+          Gen.oneOf(true, false).flatMap(m =>
+            link(s"d$i", live, i >= addAt, i >= widenAt, m))
+            .map(done :+ _)
+        }
+      }
+      lo <- Gen.choose(0L, 120L)
+      w <- Gen.choose(0L, 40L)
+      ins <- Gen.choose(1, 4).flatMap(Gen.listOfN(_, Gen.choose(0L, 130L)))
+      nLo <- Gen.choose(0, 25)
+      hashes <- Gen.choose(1, 3).flatMap(Gen.listOfN(_,
+        Gen.listOfN(4, Gen.long)))
+    } yield GenChain(old, ckpt, deltas, lo, lo + w, ins, nLo, hashes)
+  }
+
+  test("manifestFiles equals the manifest view's filter on 120 random " +
+      "chains: appends, merges with removals, stats-less links, ADD " +
+      "COLUMN and a widened type mid-chain, NULL stats, Bloom columns, " +
+      "a checkpoint") {
+    import org.apache.spark.sql.{Column, Row}
+    import org.apache.spark.sql.types._
+    val seed = 20261019L
+    val chains = org.scalacheck.Gen.listOfN(120, ChainGen.chain).apply(
+      org.scalacheck.Gen.Parameters.default,
+      org.scalacheck.rng.Seed(seed)).get
+    assert(chains.size === 120)
+    // the seeded sample holds every shape the title names
+    def stats(c: GenChain) = (c.ckpt +: c.deltas).filter(_.stats)
+    Seq[(String, GenChain => Boolean)](
+      "a removal" -> (_.deltas.exists(_.removed.nonEmpty)),
+      "a stats-less delta" -> (_.deltas.exists(!_.stats)),
+      "ADD COLUMN" -> (c => stats(c).exists(_.withN) &&
+        stats(c).exists(!_.withN)),
+      "a widened type" -> (c => stats(c).exists(_.nLong) &&
+        stats(c).exists(l => l.withN && !l.nLong)),
+      "NULL stats" -> (c => stats(c).exists(_.fresh.exists(_.k.isEmpty))),
+      "a Bloom column" -> (c => stats(c).exists(_.withBloom) &&
+        stats(c).exists(!_.withBloom))).foreach { case (shape, p) =>
+      assert(chains.count(p) >= 5, s"seed $seed: too few chains with $shape")
+    }
+    withRoot { base =>
+      // the layout is written with java.nio: the roots are local, and
+      // a Hadoop create (with its checksum file) per sidecar made the
+      // layout of 120 chains take seconds
+      import java.nio.file.{Files, Paths}
+      def text(p: String, lines: Seq[String]): Unit = {
+        Files.write(Paths.get(p), lines.mkString("\n").getBytes("UTF-8"))
+        ()
+      }
+      // lay out every version's sidecars; collect each manifest's rows
+      // by schema variant (withN, nLong, withBloom) so one partitioned
+      // write per variant writes every link's manifest part
+      val variants = scala.collection.mutable.Map.empty[
+        (Boolean, Boolean, Boolean), Vector[Row]]
+        .withDefaultValue(Vector.empty)
+      val tops = chains.zipWithIndex.map { case (c, ci) =>
+        val root = s"$base/c$ci"
+        val versions = c.old ++ (c.ckpt +: c.deltas)
+        var live = Seq.empty[String]
+        versions.zipWithIndex.foreach { case (l, v) =>
+          val dir = s"$root/v=$v"
+          Files.createDirectories(Paths.get(dir))
+          val fullAt = v == 0 || v == c.old.size
+          if (fullAt) live = Nil
+          live = live.filterNot(l.removed.contains) ++ l.fresh.map(_.file)
+          if (fullAt) text(s"$dir/_files", live)
+          else {
+            text(s"$dir/_parent", Seq((v - 1).toString))
+            text(s"$dir/_files_new", l.fresh.map(_.file))
+            if (l.removed.nonEmpty) text(s"$dir/_removed", l.removed)
+          }
+          def row(f: GenFile): Row = Row.fromSeq(
+            Seq(s"c${ci}v$v", f.file, f.rows.getOrElse(null),
+              f.k.map(_._1).getOrElse(null), f.k.map(_._2).getOrElse(null)) ++
+            (if (!l.withN) Nil else Seq(f.n.map(_._1), f.n.map(_._2))
+              .map(_.map(x => if (l.nLong) x.toLong: Any else x).orNull)) ++
+            (if (l.withBloom) Seq(f.bloom.orNull) else Nil))
+          if (l.stats)
+            variants((l.withN, l.nLong, l.withBloom)) ++= l.fresh.map(row)
+        }
+        (root, versions.size - 1L, live.toSet)
+      }
+      variants.foreach { case ((withN, nLong, withBloom), rows) =>
+        val nType = if (nLong) LongType else IntegerType
+        val schema = StructType(Seq(
+          StructField("d", StringType), StructField("file", StringType),
+          StructField("rows", LongType), StructField("min__k", LongType),
+          StructField("max__k", LongType)) ++
+          (if (withN) Seq(StructField("min__n", nType),
+            StructField("max__n", nType)) else Nil) ++
+          (if (withBloom) Seq(StructField("bloom__k", ArrayType(LongType)))
+           else Nil))
+        val out = s"$base/w-$withN-$nLong-$withBloom"
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+          .coalesce(1).write.partitionBy("d").parquet(out)
+        rows.map(_.getString(0)).distinct.foreach { d =>
+          val Array(ci, v) = d.stripPrefix("c").split("v")
+          Files.move(Paths.get(s"$out/d=$d"),
+            Paths.get(s"$base/c$ci/v=$v/_manifest"))
+        }
+      }
+      def range(c: String, lo: Any, hi: Any): Column =
+        col(s"min__$c").isNull || col(s"max__$c").isNull ||
+          (col(s"max__$c") >= lit(lo) && col(s"min__$c") <= lit(hi))
+      // one chain's check: the Spark filter over its view against the
+      // driver-side selection, for every condition its view can answer
+      def check(ci: Int): Unit = {
+        val (c, (root, top, live)) = (chains(ci), tops(ci))
+        val view = SnapshotTable.statsManifest(spark, root, top)
+        val cols = view.schema.fieldNames.toSet
+        val bloom = SnapshotTable.bloomHitExpr("k", c.hashes)
+        // "rows" and "none" are false on a file-only row (NULL rows), as
+        // an empty batch's candidate condition is on every row
+        val conds: Seq[(String, Column)] =
+          Seq("rows" -> (col("rows") >= c.lo % 50), "none" -> lit(false)) ++
+          (if (!cols("min__k")) Nil else Seq(
+            "range k" -> range("k", c.lo, c.hi),
+            "in k" -> (col("min__k").isNull || col("max__k").isNull ||
+              c.ins.map(x => col("min__k") <= x && col("max__k") >= x)
+                .reduce(_ || _)))) ++
+          (if (!cols("min__n")) Nil
+           else Seq("range n" -> range("n", c.nLo, c.nLo + 3))) ++
+          (if (!cols("bloom__k")) Nil else Seq("bloom k" -> bloom)) ++
+          (if (!cols("bloom__k") || !cols("min__k")) Nil
+           else Seq("range and bloom k" -> (range("k", c.lo, c.hi) && bloom)))
+        val expect = view.select(col("file") +: conds.zipWithIndex.map {
+          case ((_, cond), i) => coalesce(cond, lit(false)).as(s"c$i")
+        }: _*).collect()
+        conds.zipWithIndex.foreach { case ((name, cond), i) =>
+          val want = expect.filter(_.getBoolean(i + 1))
+            .map(_.getString(0)).toSet
+          val got = SnapshotTable.manifestFiles(spark, root, top, cond)
+          assert(got.distinct.size === got.size && got.toSet === want,
+            s"seed $seed, chain $ci, $name: $c")
+        }
+        assert(SnapshotTable.manifestFiles(spark, root, top, lit(true))
+          .toSet === live, s"seed $seed, chain $ci: view != live files")
+      }
+      // four chains at a time: each check is a few small Spark jobs and
+      // driver reads, and concurrent selections share the session
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+      try {
+        implicit val ec: scala.concurrent.ExecutionContext =
+          scala.concurrent.ExecutionContext.fromExecutor(pool)
+        import scala.concurrent.{Await, Future}
+        Await.result(Future.sequence(chains.indices.toList.map(ci =>
+          Future(check(ci)))), scala.concurrent.duration.Duration(10, "min"))
+      } finally pool.shutdown()
+    }
+  }
 }
