@@ -5,8 +5,9 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.util.TypeUtils
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType,
-  StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType,
+  DecimalType, IntegerType, LongType, MapType, ShortType, StringType,
+  StructField, StructType}
 
 /** A snapshot commit LOST ITS RACE (CAS base moved, publish slot
   * taken, or the marker create was beaten) — the retryable outcome of
@@ -592,7 +593,7 @@ object SnapshotTable {
     * verdict item 8). One listing RPC and one footer read
     * ([[openParquet]]) against a dir that holds a coalesce(1) part
     * file; no Spark job until the frame is evaluated. */
-  private def readSidecarParquet(s: SparkSession, fs: FileSystem,
+  private[graft] def readSidecarParquet(s: SparkSession, fs: FileSystem,
       dir: String): DataFrame = {
     val parts = parquetParts(fs, dir)
     require(parts.nonEmpty, s"no parquet part files under $dir")
@@ -1853,7 +1854,7 @@ object SnapshotTable {
     * WIDTH is per-file self-describing (64 × the stored word-array
     * length), so tables whose commits used different widths stay
     * probe-able file by file. */
-  private val bloomK = 4
+  private[graft] val bloomK = 4
   /** Default Bloom width: 64 Kibit = 8 KB/file packed. At ~10k distinct
     * keys per file the false-positive rate is ~4%; for the point-lookup
     * shapes the filter serves, a false positive only costs one exact
@@ -1933,44 +1934,6 @@ object SnapshotTable {
     b.isNull || size(b) === 0 || hit
   }
 
-  /** Per-file packed Bloom words for `bloomCols` over the fresh
-    * segment: one extra delta-only pass PER BLOOM COLUMN (positions
-    * explode ×k, shrink to ≤ width distinct per file pre-shuffle, pack
-    * to words driver-side at manifest scale) — bloom column sets are
-    * one or two columns in practice, and the pass reads only the
-    * segment just written, never the table. */
-  private def segmentBlooms(seg: DataFrame, bloomCols: Seq[String],
-      bloomBits: Int): Map[String, Map[String, Seq[Long]]] = {
-    import org.apache.spark.sql.functions._
-    if (bloomCols.isEmpty) Map.empty
-    else {
-      // the packed representation allocates bloomBits/64 words but mods
-      // positions by bloomBits — a non-multiple width would either
-      // throw mid-commit or (if every position luckily landed below
-      // floor(bits/64)*64) publish a filter whose probe-side modulus
-      // (size*64) differs from the write-side one: FALSE NEGATIVES that
-      // let commitMerge's pruning skip a file holding a batch key and
-      // silently duplicate it (round-16 advice — validate loudly)
-      require(bloomBits > 0 && bloomBits % 64 == 0,
-        s"bloomBits must be a positive multiple of 64, got $bloomBits")
-      bloomCols.map { c =>
-        val pos = explode(array((0 until bloomK).map(i =>
-          pmod(hash(col(c), lit(i)).cast("long"), lit(bloomBits.toLong))
-            .cast("int")): _*))
-        val byFile = seg.select(relFile.as("file"), pos.as("p"))
-          .distinct()
-          .groupBy("file").agg(collect_set(col("p")).as("ps"))
-          .collect().map { r =>
-            val words = new Array[Long](bloomBits / 64)
-            r.getSeq[Int](1).foreach(p =>
-              words(p / 64) |= (1L << (p % 64)))
-            r.getString(0) -> (words.toSeq: Seq[Long])
-          }.toMap
-        c -> byFile
-      }.toMap
-    }
-  }
-
   /** Root-relative path of the file a row came from (the last two URI
     * components: `seg-x/part-y.parquet`) — the manifest's `file`
     * naming, derivable inside any scan via input_file_name. */
@@ -1980,110 +1943,333 @@ object SnapshotTable {
       element_at(split(input_file_name(), "/"), -1))
   }
 
-  /** Manifest rows for the new segment's files: (file, rows,
-    * min__c/max__c per requested column present in the segment),
-    * returned with the segment's file list. With stats columns this is
-    * ONE distributed pass over the segment (the delta only — never the
-    * table), collected driver-side (files_total rows — manifest-scale
-    * by definition) and left-merged with the LISTING so a 0-row part
-    * file still appears (null stats, conservatively unprunable);
-    * without, a pure driver-side listing — a plain commit re-reads
-    * ZERO bytes of what it just wrote. */
+  /** What a segment write recorded of one data file, in Catalyst's
+    * internal values: its row count and, per stats column in the
+    * tracker's order, the min, the max, the NULL count and the sum (an
+    * integral column's non-NULL values, else null), and per Bloom column
+    * the packed bit words. */
+  private final class FileStats(val rows: Long,
+      val min: Array[Any], val max: Array[Any], val nulls: Array[Long],
+      val sum: Array[java.math.BigInteger], val blooms: Array[Array[Long]])
+    extends Serializable
+
+  private final class SegmentTaskStats(val files: Map[String, FileStats])
+    extends org.apache.spark.sql.execution.datasources.WriteTaskStats
+
+  private def integralType(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  /** One write task's side of [[SegmentStatsTracker]]: it sees every
+    * row the task writes, with the path of the file it goes to, and
+    * keeps per file what the manifest records, keyed by the file's
+    * base name (the task writes under a `_temporary` attempt path; the
+    * committed file keeps its name). Min and max compare by the type's
+    * interpreted ordering, the ordering Spark's `min`/`max` use (NaN
+    * above every double), and are copied since the writer reuses its
+    * rows. Sums of integral columns carry past a long's range, as the
+    * `decimal(38,0)` sum they stand for does. `positions` are the
+    * bound Bloom position expressions, [[bloomK]] per Bloom column. */
+  private final class SegmentTaskTracker(schema: StructType,
+      statsCols: Seq[String],
+      positions: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+      words: Int)
+      extends org.apache.spark.sql.execution.datasources
+        .WriteTaskStatsTracker {
+    import org.apache.spark.sql.catalyst.InternalRow
+    private val ords = statsCols.map(schema.fieldIndex).toArray
+    private val types = ords.map(schema(_).dataType)
+    private val orders = types.map(TypeUtils.getInterpretedOrdering)
+    private val integral = types.map(integralType)
+    private val n = ords.length
+    private val nBloom = positions.size / bloomK
+    private val project =
+      if (positions.isEmpty) null
+      else org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+        .create(positions)
+    private final class Acc {
+      var rows = 0L
+      val min, max = new Array[Any](n)
+      val nulls = new Array[Long](n)
+      // the sum is carry * 2^64 + sum, sum wrapping as a long does
+      val sum, carry = new Array[Long](n)
+      val bloom = Array.ofDim[Long](nBloom, words)
+      def result(): FileStats = new FileStats(rows, min, max, nulls,
+        Array.tabulate(n)(i =>
+          if (!integral(i) || nulls(i) == rows) null
+          else java.math.BigInteger.valueOf(carry(i)).shiftLeft(64)
+            .add(java.math.BigInteger.valueOf(sum(i)))),
+        bloom)
+    }
+    private val files = scala.collection.mutable.LinkedHashMap.empty[String, Acc]
+    private var curPath: String = _
+    private var cur: Acc = _
+    private def copy(v: Any): Any = v match {
+      case d: org.apache.spark.sql.types.Decimal => d.clone()
+      case x => InternalRow.copyValue(x)
+    }
+    override def newPartition(values: InternalRow): Unit = ()
+    override def newFile(path: String): Unit = {
+      cur = new Acc
+      curPath = path
+      files(path.substring(path.lastIndexOf('/') + 1)) = cur
+    }
+    override def closeFile(path: String): Unit = ()
+    override def newRow(path: String, row: InternalRow): Unit = {
+      if (path != curPath) {
+        cur = files(path.substring(path.lastIndexOf('/') + 1))
+        curPath = path
+      }
+      val a = cur
+      a.rows += 1
+      var i = 0
+      while (i < n) {
+        val o = ords(i)
+        if (row.isNullAt(o)) a.nulls(i) += 1
+        else {
+          val v = row.get(o, types(i))
+          if (a.min(i) == null || orders(i).lt(v, a.min(i))) a.min(i) = copy(v)
+          if (a.max(i) == null || orders(i).gt(v, a.max(i))) a.max(i) = copy(v)
+          if (integral(i)) {
+            val x = v.asInstanceOf[Number].longValue
+            val r = a.sum(i) + x
+            if (((a.sum(i) ^ r) & (x ^ r)) < 0) a.carry(i) += (if (x < 0) -1 else 1)
+            a.sum(i) = r
+          }
+        }
+        i += 1
+      }
+      if (project != null) {
+        val p = project(row)
+        var j = 0
+        while (j < nBloom * bloomK) {
+          val pos = p.getLong(j).toInt
+          a.bloom(j / bloomK)(pos / 64) |= 1L << (pos % 64)
+          j += 1
+        }
+      }
+    }
+    override def getFinalStats(taskCommitTime: Long)
+        : org.apache.spark.sql.execution.datasources.WriteTaskStats =
+      new SegmentTaskStats(files.iterator.map { case (f, a) =>
+        f -> a.result() }.toMap)
+  }
+
+  /** The segment write's stats hook (Delta's `DeltaJobStatisticsTracker`
+    * shape): each write task records its files' stats as it writes them
+    * ([[SegmentTaskTracker]]), and the driver gathers them when the job
+    * commits. */
+  private final class SegmentStatsTracker(schema: StructType,
+      statsCols: Seq[String],
+      positions: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+      words: Int)
+      extends org.apache.spark.sql.execution.datasources.WriteJobStatsTracker {
+    @transient private var recorded = Map.empty[String, FileStats]
+    def files: Map[String, FileStats] = recorded
+    override def newTaskInstance()
+        : org.apache.spark.sql.execution.datasources.WriteTaskStatsTracker =
+      new SegmentTaskTracker(schema, statsCols, positions, words)
+    override def processStats(
+        stats: Seq[org.apache.spark.sql.execution.datasources.WriteTaskStats],
+        jobCommitTime: Long): Unit =
+      recorded = stats.iterator.collect { case t: SegmentTaskStats =>
+        t.files }.flatten.toMap
+  }
+
+  /** Writes `df` as the parquet segment `path` in ONE Spark job — the
+    * write `df.write.parquet(path)` runs (Spark's `FileFormatWriter`,
+    * the same `ParquetFileFormat`, Hadoop configuration and commit
+    * protocol, under its own SQL execution) — and returns what the write
+    * recorded of each file by base name: per `statsCols` column min,
+    * max, NULL count and integral sum, the row count, and per
+    * `bloomCols` column the `bloomBits`-wide Bloom words. The Bloom bits
+    * come from the expression a Spark pass over the segment would
+    * evaluate, `pmod(hash(c, lit(i)).cast("long"), bloomBits)` for each
+    * of the [[bloomK]] seeds, bound to the written row; the probe side
+    * ([[rawBloomHashes]], [[bloomHitExpr]]) hashes through the same
+    * Murmur3. Recording during the write replaces a second Spark scan
+    * of the fresh segment with a shuffle, plus one more job per Bloom
+    * column (0.2–0.6 s per paced DWD commit on a 4-vCPU VM). */
+  private def writeSegment(s: SparkSession, df: DataFrame, path: String,
+      statsCols: Seq[String], bloomCols: Seq[String],
+      bloomBits: Int): Map[String, FileStats] = {
+    import org.apache.spark.internal.io.FileCommitProtocol
+    import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeSeq,
+      BindReferences}
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.execution.datasources.{
+      BasicWriteJobStatsTracker, FileFormatWriter}
+    import org.apache.spark.sql.execution.datasources.parquet
+      .ParquetFileFormat
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+    val positions =
+      if (bloomCols.isEmpty) Nil
+      else {
+        // the packed representation allocates bloomBits/64 words but
+        // mods positions by bloomBits — a non-multiple width would either
+        // throw mid-commit or (if every position luckily landed below
+        // floor(bits/64)*64) publish a filter whose probe-side modulus
+        // (size*64) differs from the write-side one: FALSE NEGATIVES
+        // that let commitMerge's pruning skip a file holding a batch key
+        // and silently duplicate it (round-16 advice — validate loudly)
+        require(bloomBits > 0 && bloomBits % 64 == 0,
+          s"bloomBits must be a positive multiple of 64, got $bloomBits")
+        val rel = s.createDataFrame(java.util.Collections.emptyList[Row],
+          nullableDeep(df.schema).asInstanceOf[StructType])
+        val p = rel.select((for (c <- bloomCols; i <- 0 until bloomK) yield
+          pmod(hash(col(c), lit(i)).cast("long"), lit(bloomBits.toLong))): _*)
+          .queryExecution.analyzed.asInstanceOf[Project]
+        p.projectList.map(e => BindReferences.bindReference(e match {
+          case a: Alias => a.child
+          case x => x
+        }, AttributeSeq(p.child.output)))
+      }
+    val tracker = new SegmentStatsTracker(df.schema, statsCols, positions,
+      bloomBits / 64)
+    val cs = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val conf = cs.sessionState.newHadoopConf()
+    val out = fsOf(s, path).makeQualified(new Path(path)).toString
+    val committer = FileCommitProtocol.instantiate(
+      cs.sessionState.conf.fileCommitProtocolClass,
+      java.util.UUID.randomUUID().toString, out)
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(s"segment write $out")) {
+      val plan = qe.executedPlan
+      FileFormatWriter.write(cs, plan, new ParquetFileFormat, committer,
+        FileFormatWriter.OutputSpec(out, Map.empty, plan.output), conf,
+        partitionColumns = Nil, bucketSpec = None,
+        statsTrackers = Seq(new BasicWriteJobStatsTracker(
+          new org.apache.spark.util.SerializableConfiguration(conf),
+          BasicWriteJobStatsTracker.metrics), tracker),
+        options = Map.empty)
+    }
+    tracker.files
+  }
+
+  /** A commit's fresh manifest: one row per parquet file of its segment
+    * (`files`, sorted by name), under `schema`. */
+  private final case class FreshManifest(files: Seq[String],
+      schema: StructType, rows: Seq[Row]) {
+    def df(s: SparkSession): DataFrame =
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** Manifest rows for the new segment's files, built on the driver from
+    * the segment listing (each file's `bytes`) and what the write
+    * recorded of each file ([[writeSegment]]); no Spark job. Columns, in
+    * order: `file`; per stats column `min__c`, `max__c`, `nulls__c` and,
+    * for an integral column, `sum__c` as `decimal(38,0)`; `rows`;
+    * `bytes`; `bloom__c` per Bloom column. A file with no rows records
+    * `rows = 0` with NULL stats and Bloom words; a listed file the write
+    * never saw (one the public [[commit]]'s `afterStage` hook added)
+    * records NULL rows, stats and Bloom words, as conservatively
+    * unprunable. Without stats columns `rows` stays NULL: such a
+    * manifest records file names and sizes only. */
   private def segmentManifest(s: SparkSession, root: String,
-      segName: String, statsCols: Seq[String],
-      bloomCols: Seq[String] = Nil,
-      bloomBits: Int = defaultBloomBits): (Seq[String], DataFrame) = {
-    import org.apache.spark.sql.functions._
-    val fs = fsOf(s, root)
-    val parts = parquetParts(fs, s"$root/$segName")
-    val listing =
-      parts.map(st => s"$segName/${st.getPath.getName}" -> st.getLen)
-    val files = listing.map(_._1)
-    val sizeOf = listing.toMap
-    // the segment this commit just wrote, typed by its own footer: the
-    // stats and bloom passes read it without an inference job
-    lazy val seg = readParquetTyped(s, parts.head, Seq(s"$root/$segName"))
+      segName: String, written: StructType, statsCols: Seq[String],
+      bloomCols: Seq[String],
+      recorded: Map[String, FileStats]): FreshManifest = {
     // file BYTES ride the manifest (Iceberg's file_size_in_bytes):
     // maintenance decisions (compactSmall's fragment scan) then read
     // one manifest instead of issuing a getFileStatus RPC per file —
     // at 800k files the difference between one parquet read and an
     // RPC storm. Recorded from the listing this commit already did.
-    val base: (Seq[String], DataFrame) =
-      if (statsCols.isEmpty || files.isEmpty) {
-        val rows: java.util.List[Row] =
-          java.util.Arrays.asList(files.map(f =>
-            Row(f, null, sizeOf(f))): _*)
-        (files, s.createDataFrame(rows, StructType(Seq(
-          StructField("file", StringType, nullable = false),
-          StructField("rows", LongType, nullable = true),
-          StructField("bytes", LongType, nullable = true)))))
-      } else {
-        // ONE pass computes every column's per-file stats (re-scanning
-        // the fresh segment once per column would be N delta passes).
-        // INTEGRAL stats columns also record a per-file SUM (round 20
-        // — wrap-consistent with Spark's own long sum), so unfiltered
-        // SUM joins COUNT/MIN/MAX in the metadata-only aggregate path;
-        // float/double sums are order-sensitive and stay scan-served.
-        def integral(c: String): Boolean =
-          seg.schema.fields.find(_.name == c).map(_.dataType).exists {
-            case _: org.apache.spark.sql.types.ByteType => true
-            case _: org.apache.spark.sql.types.ShortType => true
-            case _: org.apache.spark.sql.types.IntegerType => true
-            case _: org.apache.spark.sql.types.LongType => true
-            case _ => false
-          }
-        // nulls__ (round 20): per-file NULL counts make ORDER BY …
-        // LIMIT k file covers exact (TopN pushdown needs non-null row
-        // counts — nulls sort outside the value order). sum__ records
-        // in DECIMAL(38,0): under ANSI (the Spark 4 default) a long
-        // sum THROWS on overflow, and a file of epoch-micro
-        // timestamps overflows a long at ~5k rows — the stats pass
-        // must never be the thing that fails a commit.
-        val aggs = statsCols.flatMap(c =>
-          Seq(min(col(c)).as(s"min__$c"), max(col(c)).as(s"max__$c"),
-            sum(when(col(c).isNull, 1L).otherwise(0L))
-              .as(s"nulls__$c")) ++
-            (if (integral(c))
-              Seq(sum(col(c).cast("decimal(38,0)")).as(s"sum__$c"))
-            else Nil)) :+
-          count(lit(1)).as("rows")
-        val agg = seg
-          .groupBy(relFile.as("file"))
-          .agg(aggs.head, aggs.tail: _*)
-        val outSchema = StructType(agg.schema.fields.map(
-          _.copy(nullable = true)) :+
-          StructField("bytes", LongType, nullable = true))
-        val byFile = agg.collect().map(r => r.getString(0) -> r).toMap
-        val rows = files.map(f => byFile.get(f) match {
-          case Some(r) => Row.fromSeq(r.toSeq :+ sizeOf(f))
-          // absent from the stats groupBy = the pass scanned the whole
-          // segment and this file contributed NOTHING — record the
-          // PROVEN rows=0 (null would read as "stats missing" and
-          // disqualify exact metadata-only aggregates; round 19), with
-          // vacuous null ranges
-          case None => Row.fromSeq((f +:
-            Seq.fill(outSchema.size - 3)(null)) ++ Seq(0L, sizeOf(f)))
-        })
-        (files, s.createDataFrame(
-          java.util.Arrays.asList(rows: _*), outSchema))
+    val parts = parquetParts(fsOf(s, root), s"$root/$segName")
+    val withStats = statsCols.nonEmpty && parts.nonEmpty
+    val withBloom = bloomCols.nonEmpty && parts.nonEmpty
+    val types = statsCols.map(c => nullableDeep(written(c).dataType))
+    val toScala = types.map(CatalystTypeConverters.createToScalaConverter)
+    // nulls__ (round 20): per-file NULL counts make ORDER BY … LIMIT k
+    // file covers exact (TopN pushdown needs non-null row counts —
+    // nulls sort outside the value order). sum__ (round 20) records in
+    // DECIMAL(38,0), wrap-free, so unfiltered SUM joins COUNT/MIN/MAX
+    // in the metadata-only aggregate path; float/double sums are
+    // order-sensitive and stay scan-served.
+    val statFields = if (!withStats) Nil else
+      statsCols.zip(types).flatMap { case (c, dt) =>
+        Seq(StructField(s"min__$c", dt), StructField(s"max__$c", dt),
+          StructField(s"nulls__$c", LongType)) ++
+          (if (integralType(dt))
+            Seq(StructField(s"sum__$c", DecimalType(38, 0)))
+          else Nil)
       }
-    if (bloomCols.isEmpty || files.isEmpty) base
-    else {
-      val blooms = segmentBlooms(seg, bloomCols, bloomBits)
-      val (fs0, df0) = base
-      val outSchema = StructType(df0.schema.fields ++ bloomCols.map(c =>
-        StructField(s"bloom__$c",
-          org.apache.spark.sql.types.ArrayType(LongType),
-          nullable = true)))
-      val rows = df0.collect().map { r =>
-        Row.fromSeq(r.toSeq ++ bloomCols.map(c =>
-          blooms(c).getOrElse(r.getString(0), null)))
+    val schema = StructType(
+      (StructField("file", StringType, nullable = withStats) +: statFields) ++
+      Seq(StructField("rows", LongType), StructField("bytes", LongType)) ++
+      (if (!withBloom) Nil else bloomCols.map(c =>
+        StructField(s"bloom__$c", ArrayType(LongType)))))
+    val rows = parts.map { st =>
+      val f = recorded.get(st.getPath.getName)
+      val live = f.filter(_.rows > 0)
+      val stats = if (!withStats) Nil else statsCols.indices.flatMap { i =>
+        val cells = live.fold(Seq[Any](null, null, null))(r =>
+          Seq(toScala(i)(r.min(i)), toScala(i)(r.max(i)), r.nulls(i)))
+        cells ++ (if (!integralType(types(i))) Nil
+          else Seq(live.flatMap(r => Option(r.sum(i)))
+            .map(new java.math.BigDecimal(_)).orNull))
       }
-      (fs0, s.createDataFrame(
-        java.util.Arrays.asList(rows.toIndexedSeq: _*), outSchema))
+      val blooms = if (!withBloom) Nil else bloomCols.indices.map(j =>
+        live.map(_.blooms(j).toSeq).orNull)
+      Row.fromSeq((s"$segName/${st.getPath.getName}" +: stats) ++
+        Seq(if (withStats) f.map(_.rows: Any).orNull else null, st.getLen) ++
+        blooms)
     }
+    FreshManifest(parts.map(st => s"$segName/${st.getPath.getName}"),
+      schema, rows)
   }
 
+  /** Writes `m`'s rows as the single part of the parquet directory `dir`
+    * on the driver: parquet-mr's `ParquetWriter` with Spark's own
+    * `ParquetWriteSupport`, configured as Spark's parquet write
+    * configures it (`ParquetUtils.prepareWrite`: the session codec, the
+    * timestamp and legacy-format settings, the row schema), a
+    * `part-…parquet` name, and the footer's
+    * `org.apache.spark.sql.parquet.row.metadata` schema — so
+    * [[recordedSchema]], [[scanParquet]] and [[readSidecarParquet]] read
+    * it exactly as they read a Spark-written part. A delta link's
+    * manifest holds a handful of driver-held rows; a Spark write of them
+    * was one job whose fixed cost was all of it (124–1014 ms per paced
+    * DWD commit on a 4-vCPU VM). */
+  private def writeManifestOnDriver(s: SparkSession, dir: String,
+      m: FreshManifest): Unit = {
+    import org.apache.parquet.hadoop.ParquetOutputFormat
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetOptions, ParquetUtils}
+    val sql = s.sessionState.conf
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      s.sessionState.newHadoopConf())
+    ParquetUtils.prepareWrite(sql, job, m.schema,
+      new ParquetOptions(Map.empty[String, String], sql))
+    val conf = job.getConfiguration
+    val codec = CompressionCodecName.fromConf(
+      conf.get(ParquetOutputFormat.COMPRESSION))
+    val file = org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+      new Path(s"$dir/part-00000-${java.util.UUID.randomUUID()}-c000" +
+        s"${codec.getExtension}.parquet"), conf)
+    val w = new DriverParquetBuilder(file).withConf(conf)
+      .withCompressionCodec(codec).build()
+    val toRow = CatalystTypeConverters.createToCatalystConverter(m.schema)
+    try m.rows.foreach(r => w.write(toRow(r).asInstanceOf[InternalRow]))
+    finally w.close()
+  }
+
+  /** parquet-mr's writer builder over Spark's `ParquetWriteSupport`. */
+  private final class DriverParquetBuilder(
+      file: org.apache.parquet.io.OutputFile)
+      extends org.apache.parquet.hadoop.ParquetWriter.Builder[
+        org.apache.spark.sql.catalyst.InternalRow, DriverParquetBuilder](
+        file) {
+    override def self(): DriverParquetBuilder = this
+    override def getWriteSupport(c: org.apache.hadoop.conf.Configuration)
+        : org.apache.parquet.hadoop.api.WriteSupport[
+          org.apache.spark.sql.catalyst.InternalRow] =
+      new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetWriteSupport()
+  }
   /** ADD-COLUMN-only schema merge for appends: shared names must keep
     * their type (loud otherwise — silent type drift is how a table
     * format corrupts history), new names append, everything nullable
@@ -2162,8 +2348,9 @@ object SnapshotTable {
   /** [[commitWithStatsCols]] plus PER-FILE BLOOM FILTERS on
     * `bloomCols` (round 16; the Delta bloom-file-index analog): each
     * manifest row additionally records a packed `bloomBits`-wide Bloom
-    * bitset (array&lt;bigint&gt;, 8 KB/file at the default width) built
-    * from the file's values in one extra delta-only pass. Min/max
+    * bitset (array&lt;bigint&gt;, 8 KB/file at the default width) set
+    * from the file's values as the segment write writes them
+    * ([[writeSegment]]). Min/max
     * skipping needs CLUSTERED layout to bite; the Bloom filter prunes
     * POINT/IN-LIST probes on high-cardinality keys in ANY layout — a
     * hash-distributed 100 TB table answers "which files may hold key
@@ -2179,7 +2366,7 @@ object SnapshotTable {
       expectedBase: Long = AnyBase)(
       transform: Option[DataFrame] => DataFrame): Long = {
     // fail before any segment is written, not mid-commit (the packed
-    // bitset math requires a word-aligned width — see segmentBlooms)
+    // bitset math requires a word-aligned width — see writeSegment)
     require(bloomBits > 0 && bloomBits % 64 == 0,
       s"bloomBits must be a positive multiple of 64, got $bloomBits")
     commitCore(s, root, retain, statsCols, carriedFrom = None,
@@ -2745,26 +2932,32 @@ object SnapshotTable {
               .map(i => s"${c}__v$i").find(!taken.contains(_)).get))
           }
       }
-      toPhysical(image, cm).write.mode("overwrite").parquet(segAbs)
-      // segment-enrichment hook — runs while the segment is still
-      // unreferenced, so whatever it adds is atomic with the version
-      afterStage(segAbs)
       // stats only for columns the image actually has: an inherited
       // stats column absent from an evolved delta records NULL ranges
       // (conservatively unprunable) instead of failing the commit.
-      // The segment holds PHYSICAL names — stats/bloom passes address
-      // it that way, keeping manifest columns rename-stable.
+      // The segment holds PHYSICAL names — the write's stats tracker
+      // addresses it that way, keeping manifest columns rename-stable.
       val usable = statsCols.filter(image.schema.fieldNames.contains)
         .map(cm.physical)
       val usableBloom = bloomCols
         .filter(image.schema.fieldNames.contains).map(cm.physical)
-      val (freshFiles, fresh) = segmentManifest(s, root, segName, usable,
+      val physImage = toPhysical(image, cm)
+      val recorded = writeSegment(s, physImage, segAbs, usable,
         usableBloom, bloomBits)
+      // segment-enrichment hook — runs while the segment is still
+      // unreferenced, so whatever it adds is atomic with the version
+      afterStage(segAbs)
+      val fresh = segmentManifest(s, root, segName, physImage.schema,
+        usable, usableBloom, recorded)
+      val freshFiles = fresh.files
       writeColmap(fs, stage, cm)
       // the parquet stats manifest is written only when SOME file
       // carries stats (fresh or inherited) — a stats-less table's
-      // version is fully served by the text sidecars, so its commit
-      // launches no metadata Spark job at all
+      // version is fully served by the text sidecars. Where the
+      // version's manifest is exactly the fresh rows (a delta link, or
+      // a commit with no carried base) it is written on the driver; the
+      // every-K-th checkpoint, which unions the carried view, keeps its
+      // Spark write
       val baseHasStats = carriedFrom.exists(v =>
         hasStatsManifest(fs, root, v))
       // DELTA commit (manifest tiering): a carried commit whose chain
@@ -2779,8 +2972,7 @@ object SnapshotTable {
         chainDepth(fs, root, v) + 1 < checkpointInterval(s))
       if (writeDelta) {
         if (usable.nonEmpty || usableBloom.nonEmpty || baseHasStats)
-          fresh.coalesce(1).write.mode("overwrite")
-            .parquet(s"$stage/$manifestDir")
+          writeManifestOnDriver(s, s"$stage/$manifestDir", fresh)
         writeText(fs, new Path(s"$stage/$filesNewSidecar"),
           freshFiles.mkString("\n"))
         if (dropCarried.nonEmpty)
@@ -2803,10 +2995,14 @@ object SnapshotTable {
               withoutFiles(manifestDf(s, root, v), dropCarried.toSeq.sorted)
             } else fileOnlyManifest(s, carriedFiles)
           }
-          val manifest = carried.fold(fresh)(c =>
-            c.unionByName(fresh, allowMissingColumns = true))
-          manifest.coalesce(1).write.mode("overwrite")
-            .parquet(s"$stage/$manifestDir")
+          carried match {
+            case None =>
+              writeManifestOnDriver(s, s"$stage/$manifestDir", fresh)
+            case Some(c) =>
+              c.unionByName(fresh.df(s), allowMissingColumns = true)
+                .coalesce(1).write.mode("overwrite")
+                .parquet(s"$stage/$manifestDir")
+          }
         }
         writeText(fs, new Path(s"$stage/$filesSidecar"),
           (carriedFiles ++ freshFiles).mkString("\n"))
@@ -2817,9 +3013,13 @@ object SnapshotTable {
       // with it) plus this commit's new entries; an entry-less result
       // writes nothing — compaction folding the last DV'd file leaves
       // the version DV-free, observable as the `_dv` dir's absence
-      val carriedDv = carriedFrom.flatMap(v => dvOf(s, root, v)).map {
-        case (k, df) => (k, withoutFiles(df, dropCarried.toSeq.sorted))
-      }
+      // a carried set of which this commit drops every file is empty:
+      // its file names, read on the driver, answer that with no Spark
+      // job (a limit(1) probe of the restricted set was one per commit)
+      val carriedDv = carriedFrom.flatMap(v => dvOf(s, root, v).filter(_ =>
+          (sidecarFiles(s, s"$root/v=$v/$dvDir") -- dropCarried).nonEmpty))
+        .map { case (k, df) =>
+          (k, withoutFiles(df, dropCarried.toSeq.sorted)) }
       val dvAll = (carriedDv, dvNew.map(d => (d.key, d.entries))) match {
         case (None, n) => n
         case (c, None) => c
@@ -2828,27 +3028,20 @@ object SnapshotTable {
             s"table carries '$ck', commit brings '$nk'")
           Some((ck, c.unionByName(n)))
       }
-      // the shortcut below (skip the emptiness probe when the commit
-      // BRINGS entries) encodes an invariant enforced so far only by
-      // commitMergeDV's call discipline: dvNew, when passed, is
-      // non-empty by construction (only built on a hit). Assert it so
-      // a future commitCore caller passing an empty dvNew fails here
-      // instead of silently publishing an empty `_dv` dir + key file
-      // (round-17 advice) — against the count the caller took of the
-      // persisted entries, so the check itself runs no Spark job.
+      // the write below needs no emptiness probe: a carried set is
+      // kept only when a file it names survives, and dvNew, when
+      // passed, is non-empty by construction (commitMergeDV builds it
+      // only on a hit). Assert the latter so a future commitCore caller
+      // passing an empty dvNew fails here instead of silently
+      // publishing an empty `_dv` dir + key file (round-17 advice) —
+      // against the count the caller took of the persisted entries, so
+      // the check itself runs no Spark job.
       require(dvNew.forall(_.count > 0),
         "commitCore: dvNew must be absent or non-empty — an empty " +
           "entry set must be passed as None, not Some(empty)")
       dvAll.foreach { case (k, df) =>
-        // a commit BRINGING entries is non-empty by construction
-        // (asserted above) — the emptiness probe (one Spark action) is
-        // only needed when a carried-only set may have been fully
-        // restricted away by dropCarried
-        if (dvNew.isDefined || !df.isEmpty) {
-          df.coalesce(1).write.mode("overwrite")
-            .parquet(s"$stage/$dvDir")
-          writeText(fs, new Path(s"$stage/$dvKeyFile"), k)
-        }
+        df.coalesce(1).write.mode("overwrite").parquet(s"$stage/$dvDir")
+        writeText(fs, new Path(s"$stage/$dvKeyFile"), k)
       }
       // idempotence tokens — atomic with the version by living in the
       // staged dir (the Delta `txn` action shape); the carried map
@@ -2979,8 +3172,8 @@ object SnapshotTable {
     // the slot every CAS retry is pinned to — without this, retries
     // conflict spuriously until the 15-min orphan sweep clears it
     if (casBase != AnyBase) healCasDestination(fs, root, next)
-    // the segment was written before the (possibly long) stats pass —
-    // refresh its mtime so a concurrent commit's refcount sweep can
+    // the segment was written before the (possibly long) metadata
+    // staging — refresh its mtime so a concurrent commit's refcount sweep can
     // never read it as an aged unreferenced corpse in the window
     // before the manifest referencing it lands
     segPath.foreach(p => graft.ops.FsAtomic.touch(fs, p))
