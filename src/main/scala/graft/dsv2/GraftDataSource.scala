@@ -410,9 +410,9 @@ class GraftTable(val root: String, val snapshotVersion: Long)
     * library's `clusterBy` shape produces). Door-appended files then
     * carry tight DISJOINT ranges, so manifest skipping keeps biting
     * as door-append history accumulates instead of degrading under
-    * natural (arrival-order) partitioning. Stats-less tables keep the
-    * unspecified distribution — no shuffle tax where no manifest
-    * could exploit the layout. */
+    * natural (arrival-order) partitioning. Tables with no stats or
+    * Bloom column keep the unspecified distribution — no shuffle tax
+    * where no manifest column could exploit the layout. */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): Write = {
@@ -437,7 +437,7 @@ class GraftTable(val root: String, val snapshotVersion: Long)
           // let AQE pick the partition count from the delta's size —
           // a micro-INSERT must not fan out to defaults. Spark rejects
           // an advisory size under the UNSPECIFIED distribution, so
-          // stats-less tables report 0 (= none).
+          // tables with no stats or Bloom column report 0 (= none).
           override def distributionStrictlyRequired(): Boolean = false
           override def advisoryPartitionSizeInBytes(): Long =
             if (orders.isEmpty) 0L

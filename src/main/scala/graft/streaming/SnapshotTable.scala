@@ -46,13 +46,15 @@ class SnapshotConflictException(msg: String)
   *   _schema.ddl                 the version's served schema
   *   _commit_ts                  commit wall time (epoch millis)
   *   _retain                     the table's retention horizon
+  *   _manifest/                  parquet file manifest: (file, rows,
+  *                               bytes, plus min__c/max__c/nulls__c/
+  *                               sum__c and bloom__c per recorded
+  *                               column) — the whole view on a full
+  *                               version, the fresh rows only on a
+  *                               delta version (readers merge the
+  *                               chain; a metadata-only delta writes
+  *                               a zero-row part)
   * and, OPTIONAL:
-  *   _manifest/                  parquet stats manifest: (file, rows,
-  *                               bytes, min__c/max__c, bloom__c per
-  *                               recorded column) — present iff the
-  *                               chain carries stats; fresh-rows-only
-  *                               on delta versions (readers merge the
-  *                               chain)
   *   _dv/, _dv_key               keyed deletion vectors (merge-on-read)
   *   _txn                        idempotence tokens
   *   _colmap                     logical→physical column mapping
@@ -61,7 +63,9 @@ class SnapshotConflictException(msg: String)
   *                               but-chain-referenced stub (metadata
   *                               kept, not committed)
   * A `v=N` without these (the pre-round-15 self-contained layout:
-  * parquet files directly under `v=N`) is refused, never read.
+  * parquet files directly under `v=N`) is refused, never read; so is a
+  * version of a table written before every version carried a
+  * `_manifest` (its plain commits wrote none).
   *
   * A version is a MANIFEST referencing retained old files plus newly
   * written ones — the Iceberg/Delta commit shape, and the reason a
@@ -167,8 +171,7 @@ object SnapshotTable {
     *   _files_new   THIS commit's file names (text, one per line)
     *   _removed     carried files this commit dropped (merge-touched;
     *                absent when none)
-    *   _manifest/   fresh-file stats rows ONLY (when the chain carries
-    *                stats — never the carried bulk)
+    *   _manifest/   fresh-file rows ONLY — never the carried bulk
     *
     * and readers resolve the chain: files(v) = files(parent) − removed
     * + files_new; the stats view is the parent view minus the removals
@@ -444,16 +447,6 @@ object SnapshotTable {
       }: _*)
     }
 
-  /** Whether version `v`'s manifest CHAIN carries a stats manifest
-    * anywhere (own fresh rows or any ancestor's). The parquet manifest
-    * is OPTIONAL — written only when some file carries stats: a
-    * stats-less table's versions are fully served by the text
-    * sidecars, so its commits launch zero metadata Spark jobs. */
-  private def hasStatsManifest(fs: FileSystem, root: String,
-      v: Long): Boolean =
-    fs.exists(new Path(s"$root/v=$v/$manifestDir")) ||
-      deltaParent(fs, root, v).exists(p => hasStatsManifest(fs, root, p))
-
   /** Delta-manifest chain pointer of `v`, if it is a delta version. */
   private def deltaParent(fs: FileSystem, root: String,
       v: Long): Option[Long] = {
@@ -466,6 +459,24 @@ object SnapshotTable {
     fs.listStatus(new Path(dir)).toSeq
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       .sortBy(_.getPath.getName)
+
+  /** Parquet parts of the manifest dir `dir` (`root/v=N/_manifest`) —
+    * the one place a manifest link is listed. A missing dir is the
+    * refusal of a table written before every version carried a
+    * manifest; the FileNotFoundException stays the cause, so a version
+    * vacuumed under a racing commit is still the lost race
+    * [[conflictOrRethrow]] reclassifies by it (see [[versionText]]). */
+  private def manifestParts(fs: FileSystem, dir: String): Seq[FileStatus] =
+    try parquetParts(fs, dir)
+    catch { case e: java.io.FileNotFoundException =>
+      val version = dir.stripSuffix(s"/$manifestDir")
+      val root = version.take(version.lastIndexOf('/'))
+      // a dir without even its schema is the older, self-contained layout
+      if (!fs.exists(new Path(s"$version/$schemaFile")))
+        throw layoutRefusal(root, version, schemaFile, e)
+      throw new IllegalStateException(s"$version has no $manifestDir: " +
+        "the table was written before every version carried a manifest " +
+        s"(rewrite the table at $root with a current writer)", e) }
 
   /** Footer key under which Spark's parquet writer records the row
     * schema it wrote (`ParquetReadSupport.SPARK_METADATA_KEY`). */
@@ -594,8 +605,10 @@ object SnapshotTable {
     * ([[openParquet]]) against a dir that holds a coalesce(1) part
     * file; no Spark job until the frame is evaluated. */
   private[graft] def readSidecarParquet(s: SparkSession, fs: FileSystem,
-      dir: String): DataFrame = {
-    val parts = parquetParts(fs, dir)
+      dir: String): DataFrame = readParts(s, dir, parquetParts(fs, dir))
+
+  private def readParts(s: SparkSession, dir: String,
+      parts: Seq[FileStatus]): DataFrame = {
     require(parts.nonEmpty, s"no parquet part files under $dir")
     readParquetTyped(s, parts.head, parts.map(_.getPath.toString))
   }
@@ -636,79 +649,41 @@ object SnapshotTable {
       case None => 0
     }
 
-  /** Minimal (file, rows) manifest rows for chain links that never
-    * wrote a parquet manifest (stats-less chains) — driver rows, no
-    * job; NULL rows/stats stay conservatively unprunable. */
-  private def fileOnlyManifest(s: SparkSession,
-      files: Seq[String]): DataFrame = {
-    val rows: java.util.List[Row] = java.util.Arrays.asList(
-      files.map(f => Row(f, null)): _*)
-    s.createDataFrame(rows, fileOnlySchema)
-  }
+  /** One link of a manifest chain: its parquet manifest `dir` and the
+    * files it `removed` from every OLDER link. */
+  private final case class ManifestLink(dir: String, removed: Seq[String])
 
-  private val fileOnlySchema = StructType(Seq(
-    StructField("file", StringType, nullable = false),
-    StructField("rows", LongType, nullable = true)))
-
-  /** One link of a manifest chain: the rows it contributes — its
-    * parquet manifest `dir`, or else file-only rows for `files` (NULL
-    * rows and stats) — and the files it `removed` from every OLDER
-    * link. */
-  private final case class ManifestLink(dir: Option[String],
-      files: Seq[String], removed: Seq[String])
-
-  /** The links of version `v`'s stats manifest VIEW, newest first: for
-    * a full version its own parquet manifest; for a delta version its
-    * fresh rows (its manifest, or its `_files_new` names when it wrote
-    * none) and removals, then its parent's links — down to the
-    * checkpoint, or to a stats-less parent, which contributes its whole
-    * file list as file-only rows (resolution depth bounded by
-    * [[checkpointInterval]]). A row of a link is in the view unless a
-    * NEWER link removed its file. The one definition of the view that
-    * [[manifestDf]] and [[manifestFiles]] both read. */
+  /** The links of version `v`'s manifest VIEW, newest first: for a full
+    * version its own manifest; for a delta version its fresh rows and
+    * removals, then its parent's links down to the checkpoint (depth
+    * bounded by [[checkpointInterval]]). A row of a link is in the view
+    * unless a NEWER link removed its file. The one definition of the
+    * view that [[manifestDf]] and [[manifestFiles]] both read. */
   private def manifestChain(s: SparkSession, root: String,
       v: Long): List[ManifestLink] = {
     val fs = fsOf(s, root)
-    // per-RESOLUTION memos (round-17 advice): without them each chain
-    // link re-issues the parent-pointer and manifest-dir exists() RPCs
-    // for every ancestor AGAIN (hasStatsManifest recursing per level
-    // made the walk O(depth²) filesystem round-trips — measurable on
-    // object stores at the default interval of 8); one walk now pays
-    // each version's lookups exactly once
-    val parentMemo = scala.collection.mutable.Map.empty[Long, Option[Long]]
-    val ownMemo = scala.collection.mutable.Map.empty[Long, Boolean]
-    def parentOf(x: Long): Option[Long] =
-      parentMemo.getOrElseUpdate(x, deltaParent(fs, root, x))
-    def ownManifest(x: Long): Boolean = ownMemo.getOrElseUpdate(x,
-      fs.exists(new Path(s"$root/v=$x/$manifestDir")))
-    def chainHasStats(x: Long): Boolean =
-      ownManifest(x) || parentOf(x).exists(chainHasStats)
-    def dir(x: Long) = s"$root/v=$x/$manifestDir"
-    def walk(x: Long): List[ManifestLink] = parentOf(x) match {
-      case None => List(ManifestLink(Some(dir(x)), Nil, Nil))
-      case Some(parent) =>
-        val removed = removedOf(fs, root, x)
-        val fresh =
-          if (ownManifest(x)) ManifestLink(Some(dir(x)), Nil, removed)
-          else ManifestLink(None, filesNewOf(fs, root, x), removed)
-        fresh :: (
-          if (chainHasStats(parent)) walk(parent)
-          else List(ManifestLink(None, dataFiles(s, root, parent), Nil)))
+    def walk(x: Long): List[ManifestLink] = {
+      val dir = s"$root/v=$x/$manifestDir"
+      deltaParent(fs, root, x) match {
+        case None => List(ManifestLink(dir, Nil))
+        case Some(parent) =>
+          ManifestLink(dir, removedOf(fs, root, x)) :: walk(parent)
+      }
     }
     walk(v)
   }
 
-  /** The per-file stats manifest VIEW version `v` serves
-    * ([[manifestChain]]) as a frame: each link's rows minus the newer
-    * links' removals. Maintenance reads and the stats aggregates go
-    * through here, so they see one merged manifest regardless of the
-    * physical tiering; file selection by a predicate reads the same
-    * view on the driver ([[manifestFiles]]). */
+  /** The per-file manifest VIEW version `v` serves ([[manifestChain]])
+    * as a frame: each link's rows minus the newer links' removals.
+    * Maintenance reads and the stats aggregates go through here, so
+    * they see one merged manifest regardless of the physical tiering;
+    * file selection by a predicate reads the same view on the driver
+    * ([[manifestFiles]]). */
   private def manifestDf(s: SparkSession, root: String,
       v: Long): DataFrame = {
     val fs = fsOf(s, root)
     def rows(l: ManifestLink): DataFrame =
-      l.dir.fold(fileOnlyManifest(s, l.files))(readSidecarParquet(s, fs, _))
+      readParts(s, l.dir, manifestParts(fs, l.dir))
     val oldest :: newer = manifestChain(s, root, v).reverse
     newer.foldLeft(rows(oldest)) { (older, l) =>
       withoutFiles(older, l.removed)
@@ -735,21 +710,21 @@ object SnapshotTable {
       v: Long, cond: Column): Seq[String] = {
     import org.apache.spark.sql.catalyst.analysis.TypeCoercion
     import org.apache.spark.sql.catalyst.expressions.{AttributeSeq,
-      BindReferences, GenericInternalRow, Predicate}
+      BindReferences, Predicate}
     import org.apache.spark.sql.catalyst.plans.logical.Filter
     import org.apache.spark.unsafe.types.UTF8String
     val fs = fsOf(s, root)
     val links = manifestChain(s, root, v)
-    val parts = links.map(_.dir.fold(Seq.empty[ParquetFileReader])(d =>
-      parquetParts(fs, d).map(openParquet(s, _))))
+    // every link is listed before any part is opened, so a refused
+    // link leaves no reader open
+    val parts = links.map(l => manifestParts(fs, l.dir))
+      .map(_.map(openParquet(s, _)))
     try {
       // the view's schema as the union of the links builds it: a column
       // a link lacks reads NULL there; differing types widen (the
       // parquet reader widens the narrower part's values)
-      val fields = (parts.flatten.map(r =>
-        sparkSchemaOf(s, r.getFooter.getFileMetaData)) ++
-        (if (links.exists(_.dir.isEmpty)) Seq(fileOnlySchema) else Nil))
-        .flatMap(_.fields)
+      val fields = parts.flatten.map(r =>
+        sparkSchemaOf(s, r.getFooter.getFileMetaData)).flatMap(_.fields)
       val view = StructType(fields.map(_.name).distinct.map(n =>
         fields.filter(_.name == n).reduce((a, b) => a.copy(dataType =
           TypeCoercion.findWiderTypeForTwo(a.dataType, b.dataType)
@@ -773,13 +748,7 @@ object SnapshotTable {
         if (!gone.contains(u) && pred.eval(row)) kept += u.toString
       }
       links.zip(parts).foreach { case (l, ps) =>
-        if (l.dir.isEmpty) {
-          val row = new GenericInternalRow(need.size)
-          l.files.foreach { f =>
-            row.update(0, UTF8String.fromString(f))
-            keep(row)
-          }
-        } else ps.foreach(r => scanParquet(s, r, requested)(keep))
+        ps.foreach(r => scanParquet(s, r, requested)(keep))
         gone ++= l.removed.map(UTF8String.fromString)
       }
       kept.result().sorted
@@ -846,10 +815,14 @@ object SnapshotTable {
       name: String): String =
     try readText(fs, new Path(s"$root/v=$v/$name"))
     catch { case e: java.io.FileNotFoundException =>
-      throw new IllegalStateException(s"$root/v=$v has no $name: not " +
-        "a manifest-layout version (pre-round-15 self-contained " +
-        s"version dirs are no longer read; rewrite the table at $root " +
-        "with a current writer)", e) }
+      throw layoutRefusal(root, s"$root/v=$v", name, e) }
+
+  private def layoutRefusal(root: String, version: String, name: String,
+      cause: java.io.FileNotFoundException): IllegalStateException =
+    new IllegalStateException(s"$version has no $name: not a " +
+      "manifest-layout version (pre-round-15 self-contained version " +
+      s"dirs are no longer read; rewrite the table at $root with a " +
+      "current writer)", cause)
 
   /** The schema version `v` serves — recorded at commit time so each
     * version answers with its OWN columns (ADD COLUMN evolution:
@@ -988,6 +961,9 @@ object SnapshotTable {
   private def readVersionUnchecked(s: SparkSession, root: String,
       v: Long): DataFrame = {
     val schema = schemaOfVersion(s, root, v)
+    // one listing: a version without its manifest is refused here, as
+    // one without its schema is above
+    manifestParts(fsOf(s, root), s"$root/v=$v/$manifestDir")
     val files = dataFiles(s, root, v)
     if (files.isEmpty) emptyFrame(s, schema)
     // explicit recorded schema, never mergeSchema inference: at scale
@@ -1121,9 +1097,8 @@ object SnapshotTable {
       // must not chain through versions that may be retired under it
       writeText(fs, new Path(s"$stage/$filesSidecar"),
         dataFiles(s, root, toVersion).mkString("\n"))
-      if (hasStatsManifest(fs, root, toVersion))
-        manifestDf(s, root, toVersion).coalesce(1).write
-          .mode("overwrite").parquet(s"$stage/$manifestDir")
+      manifestDf(s, root, toVersion).coalesce(1).write
+        .mode("overwrite").parquet(s"$stage/$manifestDir")
       dvOf(s, root, toVersion).foreach { case (k, dv) =>
         dv.coalesce(1).write.mode("overwrite").parquet(s"$stage/$dvDir")
         writeText(fs, new Path(s"$stage/$dvKeyFile"), k)
@@ -1143,10 +1118,10 @@ object SnapshotTable {
 
   /** One committed version's audit record (see [[history]]): commit
     * wall time (monotonized against version order, like TIMESTAMP AS
-    * OF resolution), file/byte/row accounting from the stats manifest
-    * (None when the version never recorded them — stats-less chains
-    * stay honestly unknown rather than paying a data scan), and the
-    * count of files carrying live deletion vectors.
+    * OF resolution), file/byte/row accounting from the manifest (None
+    * when some file's value was never recorded — unknown rather than
+    * paid for with a data scan), and the count of files carrying live
+    * deletion vectors.
     * `rows` is the PHYSICAL manifest count — DV-hidden rows included,
     * exactly what the version's storage holds. */
   final case class VersionInfo(version: Long, committedAtMs: Long,
@@ -1160,21 +1135,19 @@ object SnapshotTable {
     * the cost is O(versions) manifest reads however big the table.
     * Served through SQL as `CALL <cat>.history(table => 't')`. */
   def history(s: SparkSession, root: String): Seq[VersionInfo] = {
-    val fs = fsOf(s, root)
     val vs = versionsOf(s, root)
     effectiveTimestamps(s, root, vs).map { case (v, ts) =>
       val files = dataFiles(s, root, v)
-      // COMPLETE-or-NULL accounting: filesStatsFor's sum() skips
-      // null-stat rows (a chain can mix stats-bearing fresh files
-      // with stats-less carried ones — commitMergeDV on a stats-less
-      // base writes a manifest for its fresh segment only), which is
-      // fine for Catalyst's conservative sizing but would let an
-      // AUDIT verb report a partial sum as a definite answer. Count
-      // the non-null stat rows against the kept-file count and
-      // answer NULL unless every file is accounted.
+      // COMPLETE-or-NULL accounting: filesStatsFor's sum() skips NULL
+      // rows, which is fine for Catalyst's conservative sizing but
+      // would let an AUDIT verb report a partial sum as a definite
+      // answer. This writer records `rows` and `bytes` for every file,
+      // but a delta link an older writer wrote over a stats-bearing
+      // base (an append with no stats column) holds NULL `rows`. Count
+      // the non-null rows against the kept-file count and answer NULL
+      // unless every file is accounted.
       val (bytes, rows) =
         if (files.isEmpty) (Some(0L), Some(0L))
-        else if (!hasStatsManifest(fs, root, v)) (None, None)
         else {
           import org.apache.spark.sql.functions._
           val m = manifestDf(s, root, v)
@@ -1232,6 +1205,9 @@ object SnapshotTable {
     casCheck(targetRoot, versionsOf(s, targetRoot).lastOption, EmptyBase)
     val cloneRetain = math.max(retain, retentionHorizon(s, root))
     val files = dataFiles(s, root, v)
+    // resolved (and a version without its manifest refused) before any
+    // byte is copied
+    val manifest = manifestDf(s, root, v)
     val srcFs = fsOf(s, root)
     val dstFs = fsOf(s, targetRoot)
     // distributed byte copy, one task per file. Hadoop Configuration
@@ -1293,9 +1269,8 @@ object SnapshotTable {
     try {
       writeText(dstFs, new Path(s"$stage/$filesSidecar"),
         files.mkString("\n"))
-      if (hasStatsManifest(srcFs, root, v))
-        manifestDf(s, root, v).coalesce(1).write
-          .mode("overwrite").parquet(s"$stage/$manifestDir")
+      manifest.coalesce(1).write
+        .mode("overwrite").parquet(s"$stage/$manifestDir")
       dvOf(s, root, v).foreach { case (k, dv) =>
         dv.coalesce(1).write.mode("overwrite").parquet(s"$stage/$dvDir")
         writeText(dstFs, new Path(s"$stage/$dvKeyFile"), k)
@@ -1349,16 +1324,18 @@ object SnapshotTable {
       // new-typed stats, and a chain read must never union old- and
       // new-typed manifest columns.
       if (manifestXform.isEmpty &&
-          chainDepth(fs, root, v) + 1 < checkpointInterval(s))
+          chainDepth(fs, root, v) + 1 < checkpointInterval(s)) {
         writeText(fs, new Path(s"$stage/$parentFile"), v.toString)
-      else {
+        // no fresh files: a zero-row part keeps the one-manifest-per-
+        // version invariant
+        writeManifestOnDriver(s, s"$stage/$manifestDir",
+          FreshManifest(Nil, fileManifestSchema, Nil))
+      } else {
         writeText(fs, new Path(s"$stage/$filesSidecar"),
           dataFiles(s, root, v).mkString("\n"))
-        if (hasStatsManifest(fs, root, v)) {
-          val m0 = manifestDf(s, root, v)
-          manifestXform.fold(m0)(_(m0)).coalesce(1).write
-            .mode("overwrite").parquet(s"$stage/$manifestDir")
-        }
+        val m0 = manifestDf(s, root, v)
+        manifestXform.fold(m0)(_(m0)).coalesce(1).write
+          .mode("overwrite").parquet(s"$stage/$manifestDir")
       }
       writeText(fs, new Path(s"$stage/$schemaFile"), schema2.toDDL)
       // written UNCONDITIONALLY (even when trivial): an absent file
@@ -1812,18 +1789,19 @@ object SnapshotTable {
     * `max__c` pairs) — what [[compact]] and [[commitAppend]] inherit
     * so data skipping SURVIVES maintenance and appends. */
   private def statsColsOf(s: SparkSession, root: String,
-      v: Long): Seq[String] = {
-    val fs = fsOf(s, root)
-    if (!hasStatsManifest(fs, root, v)) Nil
-    else {
-      // manifests are keyed by PHYSICAL name (stable across renames);
-      // the public vocabulary is logical — retired physicals (dropped
-      // columns) keep their manifest stats but stop being addressable
-      val cm = colmapOf(fs, root, v)
-      manifestFieldsOf(s, root, v)
-        .filter(_.startsWith("min__")).map(_.stripPrefix("min__"))
-        .filterNot(cm.retired.contains).map(cm.logical)
-    }
+      v: Long): Seq[String] = manifestColsOf(s, root, v, "min__")
+
+  /** Logical columns whose `prefix`-named manifest column version `v`'s
+    * view carries. Manifests are keyed by PHYSICAL name (stable across
+    * renames); the public vocabulary is logical — retired physicals
+    * (dropped columns) keep their manifest columns but stop being
+    * addressable. */
+  private def manifestColsOf(s: SparkSession, root: String, v: Long,
+      prefix: String): Seq[String] = {
+    val cm = colmapOf(fsOf(s, root), root, v)
+    manifestFieldsOf(s, root, v)
+      .filter(_.startsWith(prefix)).map(_.stripPrefix(prefix))
+      .filterNot(cm.retired.contains).map(cm.logical)
   }
 
   /** Column names of version `v`'s manifest VIEW without building the
@@ -1836,13 +1814,10 @@ object SnapshotTable {
   private def manifestFieldsOf(s: SparkSession, root: String,
       v: Long): Seq[String] = {
     val fs = fsOf(s, root)
-    val own =
-      if (fs.exists(new Path(s"$root/v=$v/$manifestDir"))) {
-        val parts = parquetParts(fs, s"$root/v=$v/$manifestDir")
-        require(parts.nonEmpty,
-          s"no parquet part files under $root/v=$v/$manifestDir")
-        footerFieldNames(s, parts.head)
-      } else Nil
+    val dir = s"$root/v=$v/$manifestDir"
+    val parts = manifestParts(fs, dir)
+    require(parts.nonEmpty, s"no parquet part files under $dir")
+    val own = footerFieldNames(s, parts.head)
     deltaParent(fs, root, v) match {
       case Some(p) => (manifestFieldsOf(s, root, p) ++ own).distinct
       case None => own
@@ -1865,7 +1840,6 @@ object SnapshotTable {
     * expression would be the in-list anti-pattern. */
   val bloomProbeMaxKeys: Int = 256
 
-  /** Columns version `v`'s manifest carries a `bloom__c` filter for. */
   /** Logical columns a runtime (or static) point probe can prune on:
     * everything with range stats or a bloom filter in the manifest —
     * the DSv2 scan's `filterAttributes` vocabulary. */
@@ -1873,17 +1847,34 @@ object SnapshotTable {
       v: Long): Seq[String] =
     (statsColsOf(s, root, v) ++ bloomColsOf(s, root, v)).distinct
 
+  /** Columns version `v`'s manifest carries a `bloom__c` filter for. */
   private def bloomColsOf(s: SparkSession, root: String,
-      v: Long): Seq[String] = {
+      v: Long): Seq[String] = manifestColsOf(s, root, v, "bloom__")
+
+  /** The width in bits of the Bloom filters version `v`'s manifest
+    * view records on `bloomCols` (logical names): 64 × the words of the
+    * first non-NULL `bloom__c` of the first column, newest link first,
+    * read on the driver; [[defaultBloomBits]] when no column is given or
+    * no file records a filter. Commits that inherit Bloom columns write
+    * them at this width, the one their table was created with. */
+  private def bloomBitsOf(s: SparkSession, root: String, v: Long,
+      bloomCols: Seq[String]): Int = bloomCols.headOption.flatMap { c =>
     val fs = fsOf(s, root)
-    if (!hasStatsManifest(fs, root, v)) Nil
-    else {
-      val cm = colmapOf(fs, root, v)
-      manifestFieldsOf(s, root, v)
-        .filter(_.startsWith("bloom__")).map(_.stripPrefix("bloom__"))
-        .filterNot(cm.retired.contains).map(cm.logical)
-    }
-  }
+    val col = s"bloom__${colmapOf(fs, root, v).physical(c)}"
+    val requested = StructType(Seq(StructField(col, ArrayType(LongType))))
+    manifestChain(s, root, v).iterator
+      .flatMap(l => manifestParts(fs, l.dir))
+      .map { p =>
+        var words = -1
+        val r = openParquet(s, p)
+        try scanParquet(s, r, requested) { row =>
+          if (words <= 0 && !row.isNullAt(0))
+            words = row.getArray(0).numElements()
+        } finally r.close()
+        words
+      }
+      .find(_ > 0).map(_ * 64)
+  }.getOrElse(defaultBloomBits)
 
   /** The raw (un-modded) Bloom hashes of probe `values`, computed BY
     * SPARK on a `dt`-typed column — the one way to guarantee the probe
@@ -2156,17 +2147,21 @@ object SnapshotTable {
       s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
+  /** The columns every manifest row records: the file's root-relative
+    * name, its row count and its size in bytes. */
+  private val fileManifestSchema = StructType(Seq(
+    StructField("file", StringType), StructField("rows", LongType),
+    StructField("bytes", LongType)))
+
   /** Manifest rows for the new segment's files, built on the driver from
     * the segment listing (each file's `bytes`) and what the write
     * recorded of each file ([[writeSegment]]); no Spark job. Columns, in
     * order: `file`; per stats column `min__c`, `max__c`, `nulls__c` and,
     * for an integral column, `sum__c` as `decimal(38,0)`; `rows`;
     * `bytes`; `bloom__c` per Bloom column. A file with no rows records
-    * `rows = 0` with NULL stats and Bloom words; a listed file the write
-    * never saw (one the public [[commit]]'s `afterStage` hook added)
-    * records NULL rows, stats and Bloom words, as conservatively
-    * unprunable. Without stats columns `rows` stays NULL: such a
-    * manifest records file names and sizes only. */
+    * `rows = 0` with NULL stats and Bloom words. A listed file the write
+    * never saw is refused: nothing but the write puts a file in an
+    * unpublished segment. */
   private def segmentManifest(s: SparkSession, root: String,
       segName: String, written: StructType, statsCols: Seq[String],
       bloomCols: Seq[String],
@@ -2177,8 +2172,6 @@ object SnapshotTable {
     // at 800k files the difference between one parquet read and an
     // RPC storm. Recorded from the listing this commit already did.
     val parts = parquetParts(fsOf(s, root), s"$root/$segName")
-    val withStats = statsCols.nonEmpty && parts.nonEmpty
-    val withBloom = bloomCols.nonEmpty && parts.nonEmpty
     val types = statsCols.map(c => nullableDeep(written(c).dataType))
     val toScala = types.map(CatalystTypeConverters.createToScalaConverter)
     // nulls__ (round 20): per-file NULL counts make ORDER BY … LIMIT k
@@ -2187,34 +2180,32 @@ object SnapshotTable {
     // DECIMAL(38,0), wrap-free, so unfiltered SUM joins COUNT/MIN/MAX
     // in the metadata-only aggregate path; float/double sums are
     // order-sensitive and stay scan-served.
-    val statFields = if (!withStats) Nil else
-      statsCols.zip(types).flatMap { case (c, dt) =>
-        Seq(StructField(s"min__$c", dt), StructField(s"max__$c", dt),
-          StructField(s"nulls__$c", LongType)) ++
-          (if (integralType(dt))
-            Seq(StructField(s"sum__$c", DecimalType(38, 0)))
-          else Nil)
-      }
+    val statFields = statsCols.zip(types).flatMap { case (c, dt) =>
+      Seq(StructField(s"min__$c", dt), StructField(s"max__$c", dt),
+        StructField(s"nulls__$c", LongType)) ++
+        (if (integralType(dt))
+          Seq(StructField(s"sum__$c", DecimalType(38, 0)))
+        else Nil)
+    }
     val schema = StructType(
-      (StructField("file", StringType, nullable = withStats) +: statFields) ++
-      Seq(StructField("rows", LongType), StructField("bytes", LongType)) ++
-      (if (!withBloom) Nil else bloomCols.map(c =>
-        StructField(s"bloom__$c", ArrayType(LongType)))))
+      (fileManifestSchema.head +: statFields) ++ fileManifestSchema.tail ++
+      bloomCols.map(c => StructField(s"bloom__$c", ArrayType(LongType))))
     val rows = parts.map { st =>
-      val f = recorded.get(st.getPath.getName)
-      val live = f.filter(_.rows > 0)
-      val stats = if (!withStats) Nil else statsCols.indices.flatMap { i =>
+      val file = s"$segName/${st.getPath.getName}"
+      val f = recorded.getOrElse(st.getPath.getName,
+        throw new IllegalStateException(s"segment file $root/$file was " +
+          "not written by its commit's segment write"))
+      val live = Some(f).filter(_.rows > 0)
+      val stats = statsCols.indices.flatMap { i =>
         val cells = live.fold(Seq[Any](null, null, null))(r =>
           Seq(toScala(i)(r.min(i)), toScala(i)(r.max(i)), r.nulls(i)))
         cells ++ (if (!integralType(types(i))) Nil
           else Seq(live.flatMap(r => Option(r.sum(i)))
             .map(new java.math.BigDecimal(_)).orNull))
       }
-      val blooms = if (!withBloom) Nil else bloomCols.indices.map(j =>
+      val blooms = bloomCols.indices.map(j =>
         live.map(_.blooms(j).toSeq).orNull)
-      Row.fromSeq((s"$segName/${st.getPath.getName}" +: stats) ++
-        Seq(if (withStats) f.map(_.rows: Any).orNull else null, st.getLen) ++
-        blooms)
+      Row.fromSeq((file +: stats) ++ Seq(f.rows, st.getLen) ++ blooms)
     }
     FreshManifest(parts.map(st => s"$segName/${st.getPath.getName}"),
       schema, rows)
@@ -2296,13 +2287,12 @@ object SnapshotTable {
     * Full-image commit: the new image lands in ONE fresh segment and
     * the manifest references only it (the right shape for merges and
     * compaction, whose output genuinely replaces the table; appends
-    * must use [[commitAppend]], which costs O(delta)). `afterStage`
-    * runs against the still-unreferenced segment dir, so whatever it
-    * adds is atomic with the version. A lost race fails loudly at the
-    * base re-check, the rename landing check, or the exclusive marker
-    * create, and can never clobber the winner's files; a failed commit
-    * leaves at most an unreferenced segment and an invisible staging
-    * dir, both reclaimed by the age-gated sweeps.
+    * must use [[commitAppend]], which costs O(delta)); its manifest
+    * records each file's name, rows and bytes. A lost race fails loudly
+    * at the base re-check, the rename landing check, or the exclusive
+    * marker create, and can never clobber the winner's files; a failed
+    * commit leaves at most an unreferenced segment and an invisible
+    * staging dir, both reclaimed by the age-gated sweeps.
     *
     * `expectedBase` is the CAS form (metastore-CAS analog, closing the
     * read-then-commit race the loud-conflict protocol alone leaves: a
@@ -2313,10 +2303,9 @@ object SnapshotTable {
     * loudly when the table moved — never applies on a base the caller
     * didn't see. [[AnyBase]] (default) skips the check. */
   def commit(s: SparkSession, root: String, retain: Int = 2,
-      afterStage: String => Unit = _ => (),
       expectedBase: Long = AnyBase)(
       transform: Option[DataFrame] => DataFrame): Long =
-    commitCore(s, root, retain, Nil, carriedFrom = None, afterStage,
+    commitCore(s, root, retain, Nil, carriedFrom = None,
       casBase = expectedBase)(cur => transform(cur()))
 
   /** [[commit]] with a FILE-LEVEL MIN/MAX STATS MANIFEST on `statsCol`
@@ -2412,13 +2401,15 @@ object SnapshotTable {
     }
     val inherited = statsCols.getOrElse(
       base.map(v => statsColsOf(s, root, v)).getOrElse(Nil))
-    // bloom columns inherit like stats columns: an appended table keeps
-    // point-probe skipping without callers restating the layout
+    // bloom columns inherit like stats columns, at the table's width:
+    // an appended table keeps point-probe skipping without callers
+    // restating the layout
     val inheritedBloom =
       base.map(v => bloomColsOf(s, root, v)).getOrElse(Nil)
     commitCore(s, root, retain, inherited, carriedFrom = base,
-      casBase = expectedBase, txn = txn,
-      bloomCols = inheritedBloom)(_ => delta)
+      casBase = expectedBase, txn = txn, bloomCols = inheritedBloom,
+      bloomBits = base.fold(defaultBloomBits)(v =>
+        bloomBitsOf(s, root, v, inheritedBloom)))(_ => delta)
   }
 
   /** The CAS precondition both at plan time (here — fail before any
@@ -2559,7 +2550,8 @@ object SnapshotTable {
               keys.probe, mergeKey).collect().toSet
           commitCore(s, root, retain, statsCols, carriedFrom = Some(v),
             dropCarried = touched, casBase = expectedBase, txn = txn,
-            bloomCols = inheritedBloom) { _ =>
+            bloomCols = inheritedBloom,
+            bloomBits = bloomBitsOf(s, root, v, inheritedBloom)) { _ =>
             if (touched.isEmpty) resolve(None, batch)
             // rewritten files read VISIBLE (a DV-hidden cohabitant must
             // not resurrect into the fresh segment); their DV entries
@@ -2832,8 +2824,9 @@ object SnapshotTable {
             byBatchKeys(vis, batch, keys.probe, mergeKey)
               .drop("_graft_file"))
           commitCore(s, root, retain, statsCols, carriedFrom = Some(v),
-            casBase = expectedBase, txn = txn,
-            bloomCols = inheritedBloom, dvNew = dvEntries) { _ =>
+            casBase = expectedBase, txn = txn, bloomCols = inheritedBloom,
+            bloomBits = bloomBitsOf(s, root, v, inheritedBloom),
+            dvNew = dvEntries) { _ =>
             resolve(existing.filter(_ => anyHit), batch)
           }
         } catch {
@@ -2850,12 +2843,16 @@ object SnapshotTable {
   /** A merge-on-read commit's new deletion-vector entries: (file,
     * key value) rows under the PHYSICAL key name `key`, and how many
     * there are — counted by the caller on the persisted entry set. */
-  private final case class NewDvEntries(key: String, entries: DataFrame,
+  private[graft] final case class NewDvEntries(key: String, entries: DataFrame,
       count: Long)
 
-  private def commitCore(s: SparkSession, root: String, retain: Int,
-      statsCols: Seq[String], carriedFrom: Option[Long],
-      afterStage: String => Unit = _ => (),
+  /** The commit every data entry point runs. `beforePublish` runs once
+    * the new version is fully staged, just before it is published: a
+    * seam for tests of a failure between the segment write and the
+    * publish. */
+  private[graft] def commitCore(s: SparkSession, root: String,
+      retain: Int, statsCols: Seq[String], carriedFrom: Option[Long],
+      beforePublish: () => Unit = () => (),
       dropCarried: Set[String] = Set.empty,
       casBase: Long = AnyBase,
       txn: Option[(String, Long)] = None,
@@ -2944,22 +2941,14 @@ object SnapshotTable {
       val physImage = toPhysical(image, cm)
       val recorded = writeSegment(s, physImage, segAbs, usable,
         usableBloom, bloomBits)
-      // segment-enrichment hook — runs while the segment is still
-      // unreferenced, so whatever it adds is atomic with the version
-      afterStage(segAbs)
       val fresh = segmentManifest(s, root, segName, physImage.schema,
         usable, usableBloom, recorded)
       val freshFiles = fresh.files
       writeColmap(fs, stage, cm)
-      // the parquet stats manifest is written only when SOME file
-      // carries stats (fresh or inherited) — a stats-less table's
-      // version is fully served by the text sidecars. Where the
-      // version's manifest is exactly the fresh rows (a delta link, or
-      // a commit with no carried base) it is written on the driver; the
-      // every-K-th checkpoint, which unions the carried view, keeps its
-      // Spark write
-      val baseHasStats = carriedFrom.exists(v =>
-        hasStatsManifest(fs, root, v))
+      // every version writes its manifest. Where it is exactly the fresh
+      // rows (a delta link, or a commit with no carried base) it is
+      // written on the driver; the every-K-th checkpoint, which unions
+      // the carried view, keeps its Spark write.
       // DELTA commit (manifest tiering): a carried commit whose chain
       // stays under the checkpoint interval records only its own
       // delta — fresh manifest rows, fresh file names, removals, and
@@ -2971,8 +2960,7 @@ object SnapshotTable {
       val writeDelta = carriedFrom.exists(v =>
         chainDepth(fs, root, v) + 1 < checkpointInterval(s))
       if (writeDelta) {
-        if (usable.nonEmpty || usableBloom.nonEmpty || baseHasStats)
-          writeManifestOnDriver(s, s"$stage/$manifestDir", fresh)
+        writeManifestOnDriver(s, s"$stage/$manifestDir", fresh)
         writeText(fs, new Path(s"$stage/$filesNewSidecar"),
           freshFiles.mkString("\n"))
         if (dropCarried.nonEmpty)
@@ -2984,25 +2972,19 @@ object SnapshotTable {
         val carriedFiles = carriedFrom.map { v =>
           dataFiles(s, root, v).filterNot(dropCarried.contains)
         }.getOrElse(Seq.empty)
-        if (usable.nonEmpty || usableBloom.nonEmpty || baseHasStats) {
-          val carried = carriedFrom.map { v =>
-            if (hasStatsManifest(fs, root, v)) {
-              // exclude the DROPPED (merge-touched) files, never keep
-              // by isin over the kept set: the kept set is the WHOLE
-              // TABLE minus a few touched files — at 100 TB that would
-              // put ~800k string literals in the plan, while the
-              // touched list stays small by design
-              withoutFiles(manifestDf(s, root, v), dropCarried.toSeq.sorted)
-            } else fileOnlyManifest(s, carriedFiles)
-          }
-          carried match {
-            case None =>
-              writeManifestOnDriver(s, s"$stage/$manifestDir", fresh)
-            case Some(c) =>
-              c.unionByName(fresh.df(s), allowMissingColumns = true)
-                .coalesce(1).write.mode("overwrite")
-                .parquet(s"$stage/$manifestDir")
-          }
+        carriedFrom match {
+          case None =>
+            writeManifestOnDriver(s, s"$stage/$manifestDir", fresh)
+          case Some(v) =>
+            // exclude the DROPPED (merge-touched) files, never keep by
+            // isin over the kept set: the kept set is the WHOLE TABLE
+            // minus a few touched files — at 100 TB that would put
+            // ~800k string literals in the plan, while the touched list
+            // stays small by design
+            withoutFiles(manifestDf(s, root, v), dropCarried.toSeq.sorted)
+              .unionByName(fresh.df(s), allowMissingColumns = true)
+              .coalesce(1).write.mode("overwrite")
+              .parquet(s"$stage/$manifestDir")
         }
         writeText(fs, new Path(s"$stage/$filesSidecar"),
           (carriedFiles ++ freshFiles).mkString("\n"))
@@ -3057,6 +3039,7 @@ object SnapshotTable {
         case None => image.schema
       }
       writeText(fs, new Path(s"$stage/$schemaFile"), schema.toDDL)
+      beforePublish()
     } catch { case e: Throwable =>
       cleanup()
       // a base vacuumed under the build surfaces as FAILED_READ_FILE
@@ -3495,7 +3478,6 @@ object SnapshotTable {
     val v = latestVersion(s, root).getOrElse(
       throw new IllegalStateException(s"no committed version at $root"))
     val fs = fsOf(s, root)
-    if (!hasStatsManifest(fs, root, v)) return fullScan(s, root, v)
     val hasRange = statsColsOf(s, root, v).contains(c)
     val hasBloom = bloomColsOf(s, root, v).contains(c)
     if (!hasRange && !hasBloom) return fullScan(s, root, v)
@@ -3583,7 +3565,6 @@ object SnapshotTable {
     import org.apache.spark.sql.functions._
     val all = dataFiles(s, root, v)
     val fs = fsOf(s, root)
-    if (!hasStatsManifest(fs, root, v)) return (all, all.size)
     val statCols = statsColsOf(s, root, v).toSet
     val bloomCols = bloomColsOf(s, root, v).toSet
     val schema = schemaOfVersion(s, root, v)
@@ -3666,7 +3647,6 @@ object SnapshotTable {
   private def filesStatsForUncached(s: SparkSession, root: String,
       v: Long, files: Seq[String]): (Option[Long], Option[Long]) = {
     import org.apache.spark.sql.functions._
-    if (!hasStatsManifest(fsOf(s, root), root, v)) return (None, None)
     val m = manifestDf(s, root, v)
     val hasBytes = m.schema.fieldNames.contains("bytes")
     val hasRows = m.schema.fieldNames.contains("rows")
@@ -3691,7 +3671,7 @@ object SnapshotTable {
     * per-file exact ranges (recorded by Spark aggregation at commit
     * time — never parquet-footer-truncated, so strings are exact too).
     * Returns None unless the answer is provably EXACT:
-    *  - manifest-backed version with a stats manifest,
+    *  - every requested column has manifest stats,
     *  - NO deletion vectors (hidden rows falsify counts and can hide
     *    extrema),
     *  - every kept file records non-null `rows` (for count) and
@@ -3714,7 +3694,6 @@ object SnapshotTable {
       return Some((0L, minCols.map(_ -> (null: Any)).toMap,
         maxCols.map(_ -> (null: Any)).toMap,
         sumCols.map(_ -> (null: Any)).toMap))
-    if (!hasStatsManifest(fs, root, v)) return None
     val statCols = statsColsOf(s, root, v).toSet
     if (!(minCols ++ maxCols ++ sumCols).forall(statCols.contains))
       return None
@@ -3803,7 +3782,6 @@ object SnapshotTable {
   private[graft] def filesForLimit(s: SparkSession, root: String,
       v: Long, limit: Long): Option[Seq[String]] = {
     if (dvOf(s, root, v).isDefined) return None
-    if (!hasStatsManifest(fsOf(s, root), root, v)) return None
     val m = manifestDf(s, root, v)
     if (!m.schema.fieldNames.contains("rows")) return None
     val counts = m.select("file", "rows").collect()
@@ -3847,7 +3825,6 @@ object SnapshotTable {
       k: Long): Option[Seq[String]] = {
     val fs = fsOf(s, root)
     if (dvOf(s, root, v).isDefined) return None
-    if (!hasStatsManifest(fs, root, v)) return None
     if (!statsColsOf(s, root, v).contains(c)) return None
     val p = colmapOf(fs, root, v).physical(c)
     val m = manifestDf(s, root, v)
@@ -3996,9 +3973,10 @@ object SnapshotTable {
     val v = latestVersion(s, root).getOrElse(
       throw new IllegalStateException(
         s"clusterRewrite: no committed version at $root"))
+    val bloom = bloomColsOf(s, root, v)
     commitCore(s, root, retain,
-      (statsColsOf(s, root, v) ++ cols).distinct,
-      carriedFrom = None, bloomCols = bloomColsOf(s, root, v)) { cur =>
+      (statsColsOf(s, root, v) ++ cols).distinct, carriedFrom = None,
+      bloomCols = bloom, bloomBits = bloomBitsOf(s, root, v, bloom)) { cur =>
       val img = cur().getOrElse(throw new IllegalStateException(
         s"clusterRewrite: no committed version at $root"))
       if (cols.size == 1) clusterBy(img, cols.head, targetFiles)
@@ -4060,24 +4038,23 @@ object SnapshotTable {
     // file sizes come from the manifest's `bytes` column when recorded
     // (round-16 manifests carry it); only files predating the column
     // fall back to a per-file getFileStatus RPC
-    val recorded: Map[String, Long] =
-      if (!hasStatsManifest(fs, root, v)) Map.empty
-      else {
-        val m = manifestDf(s, root, v)
-        if (!m.schema.fieldNames.contains("bytes")) Map.empty
-        else m.select("file", "bytes").collect()
-          .filterNot(_.isNullAt(1))
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-      }
+    val recorded: Map[String, Long] = {
+      val m = manifestDf(s, root, v)
+      if (!m.schema.fieldNames.contains("bytes")) Map.empty
+      else m.select("file", "bytes").collect()
+        .filterNot(_.isNullAt(1))
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
     val small = dataFiles(s, root, v).filter { f =>
       recorded.getOrElse(f,
         fs.getFileStatus(new Path(s"$root/$f")).getLen) < minBytes
     }
     if (small.size <= 1) return v
     val schema = schemaOfVersion(s, root, v)
+    val bloom = bloomColsOf(s, root, v)
     commitCore(s, root, retain, statsColsOf(s, root, v),
-      carriedFrom = Some(v), dropCarried = small.toSet,
-      bloomCols = bloomColsOf(s, root, v)) { _ =>
+      carriedFrom = Some(v), dropCarried = small.toSet, bloomCols = bloom,
+      bloomBits = bloomBitsOf(s, root, v, bloom)) { _ =>
       // fragments re-pack VISIBLE (their DV entries fold physically
       // and drop from the carry with the files)
       readFilesVisible(s, root, v, small, schema)
@@ -4109,9 +4086,10 @@ object SnapshotTable {
         val files = dv.select("file").distinct().collect()
           .map(_.getString(0)).toSeq.sorted
         val schema = schemaOfVersion(s, root, v)
+        val bloom = bloomColsOf(s, root, v)
         commitCore(s, root, retain, statsColsOf(s, root, v),
           carriedFrom = Some(v), dropCarried = files.toSet,
-          bloomCols = bloomColsOf(s, root, v)) { _ =>
+          bloomCols = bloom, bloomBits = bloomBitsOf(s, root, v, bloom)) { _ =>
           readFilesVisible(s, root, v, files, schema)
             .coalesce(math.max(1, files.size))
         }
@@ -4147,7 +4125,6 @@ object SnapshotTable {
         .toBoolean) return
     inMaintenance.set(true)
     try {
-      val fs = fsOf(s, root)
       latestVersion(s, root).foreach { v =>
         val minBytes = s.conf
           .get("spark.graft.autoMaintain.minFileBytes",
@@ -4161,14 +4138,12 @@ object SnapshotTable {
         // unknown size only via the getFileStatus fallback inside
         // compactSmall — here they are simply skipped, keeping the
         // census RPC-free)
-        val fragments: Int =
-          if (!hasStatsManifest(fs, root, v)) 0
-          else {
-            val m = manifestDf(s, root, v)
-            if (!m.schema.fieldNames.contains("bytes")) 0
-            else m.where(org.apache.spark.sql.functions
-              .col("bytes") < minBytes).count().toInt
-          }
+        val fragments: Int = {
+          val m = manifestDf(s, root, v)
+          if (!m.schema.fieldNames.contains("bytes")) 0
+          else m.where(org.apache.spark.sql.functions
+            .col("bytes") < minBytes).count().toInt
+        }
         if (fragments > maxFrag) {
           compactSmall(s, root, minBytes,
             targetFiles = math.max(1, fragments / maxFrag), retain)
@@ -4179,17 +4154,15 @@ object SnapshotTable {
         latestVersion(s, root).foreach { v2 =>
           dvOf(s, root, v2).foreach { case (_, dv) =>
             val entries = dv.count()
-            val totalRows: Long =
-              if (!hasStatsManifest(fs, root, v2)) 0L
+            val totalRows: Long = {
+              val m = manifestDf(s, root, v2)
+              if (!m.schema.fieldNames.contains("rows")) 0L
               else {
-                val m = manifestDf(s, root, v2)
-                if (!m.schema.fieldNames.contains("rows")) 0L
-                else {
-                  val r = m.agg(org.apache.spark.sql.functions
-                    .sum("rows")).first()
-                  if (r.isNullAt(0)) 0L else r.getLong(0)
-                }
+                val r = m.agg(org.apache.spark.sql.functions
+                  .sum("rows")).first()
+                if (r.isNullAt(0)) 0L else r.getLong(0)
               }
+            }
             if (totalRows > 0 && entries > totalRows * dvRatio) {
               foldDeletionVectors(s, root, retain)
               ()

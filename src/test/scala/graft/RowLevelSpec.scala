@@ -375,7 +375,7 @@ class RowLevelSpec extends AnyFunSuite {
 
   test("CALL history (round 20): one metadata-only audit row per " +
       "committed version — manifest rows/bytes, DV presence, commit " +
-      "times monotone; stats-less versions answer NULL honestly") {
+      "times monotone; plain-commit versions report exact bytes/rows") {
     withWh { wh =>
       catalog("graft_hi", wh)
       val root = s"$wh/t_h"
@@ -405,23 +405,42 @@ class RowLevelSpec extends AnyFunSuite {
       assert(h.map(_.getInt(5)).toSeq.take(2) === Seq(0, 0))
       assert(h.last.getInt(5) >= 1,
         "the merge version must report its deletion-vector'd files")
-      // a chain that never recorded stats answers NULL, not a scan
+      // a plain commit declares no stats column, and its manifest still
+      // records every file's rows and bytes: exact, with no scan
       val bare = s"$wh/t_bare"
-      SnapshotTable.commit(spark, bare, 8)(_ => img(9L -> "z"))
+      SnapshotTable.commit(spark, bare, 8)(_ =>
+        img(9L -> "z", 8L -> "y").repartition(2))
       val hb = spark.sql("CALL graft_hi.history(table => 't_bare')")
         .collect()
-      assert(hb.length === 1 && hb.head.isNullAt(3) &&
-        hb.head.isNullAt(4) && hb.head.getInt(2) >= 1)
-      // MIXED manifest (review finding): a merge on the stats-less
-      // base writes stats for its fresh segment only — a partial sum
-      // must NOT be reported as a definite answer
-      SnapshotTable.commitMergeDV(spark, bare, img(9L -> "Z"), "k",
-        retain = 8)((_, b) => b)
-      val hm = spark.sql("CALL graft_hi.history(table => 't_bare')")
-        .collect().last
-      assert(hm.isNullAt(3) && hm.isNullAt(4),
-        s"partial stats must report NULL, got $hm")
-      assert(hm.getInt(5) >= 1)
+      val bareFiles = SnapshotTable.dataFiles(spark, bare,
+        SnapshotTable.latestVersion(spark, bare).get)
+      val bareBytes = bareFiles.map(f => new java.io.File(s"$bare/$f")
+        .length).sum
+      assert(hb.length === 1 && hb.head.getInt(2) === bareFiles.size)
+      assert(!hb.head.isNullAt(3) && hb.head.getLong(3) === bareBytes)
+      assert(!hb.head.isNullAt(4) && hb.head.getLong(4) === 2L)
+    }
+  }
+
+  test("a table made by SQL CREATE TABLE + INSERT answers count(*) " +
+      "from its manifest with no parquet scan, and CALL history " +
+      "reports its rows and bytes") {
+    withWh { wh =>
+      catalog("graft_pc", wh)
+      spark.sql("CREATE TABLE graft_pc.t (k BIGINT, v STRING) USING graft")
+      spark.sql("INSERT INTO graft_pc.t VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+      spark.sql("INSERT INTO graft_pc.t VALUES (4, 'd')")
+      val q = spark.sql("SELECT count(*) FROM graft_pc.t")
+      assert(q.collect().head.getLong(0) === 4L)
+      val plan = q.queryExecution.executedPlan.toString
+      assert(plan.contains("GraftMetaAggScan") &&
+        !plan.contains("GraftSnapshotScan"),
+        s"count(*) of a plain-commit table must answer from metadata:\n$plan")
+      // the default retention keeps the two INSERT versions
+      val h = spark.sql("CALL graft_pc.history(table => 't')").collect()
+      assert(h.forall(r => !r.isNullAt(3) && r.getLong(3) > 0L &&
+        !r.isNullAt(4)), h.mkString("\n"))
+      assert(h.map(_.getLong(4)).toSeq === Seq(3L, 4L))
     }
   }
 

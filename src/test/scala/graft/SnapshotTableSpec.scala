@@ -313,14 +313,15 @@ class SnapshotTableSpec extends AnyFunSuite {
       SnapshotTable.commit(spark, root)(st =>
         st.get.unionByName(img(2L -> "b")))
       assert(SnapshotTable.read(spark, root).get.count() === 2)
-      // a commit whose afterStage fails must clean BOTH its staging
-      // dir and its freshly written (unreferenced) data segment
+      // a commit that fails after its segment write and staging must
+      // clean BOTH its staging dir and its freshly written
+      // (unreferenced) data segment
       val segsBefore = new java.io.File(root).listFiles()
         .count(_.getName.startsWith("seg-"))
       intercept[RuntimeException] {
-        SnapshotTable.commit(spark, root, 2,
-          afterStage = _ => throw new RuntimeException("stats died"))(
-          st => st.get)
+        SnapshotTable.commitCore(spark, root, 2, Nil, carriedFrom = None,
+          beforePublish = () => throw new RuntimeException("stats died"))(
+          cur => cur().get)
       }
       val stages = new java.io.File(root).listFiles()
         .filter(_.getName.startsWith(".stage-"))
@@ -770,6 +771,45 @@ class SnapshotTableSpec extends AnyFunSuite {
     }
   }
 
+  test("a version without its _manifest is refused, naming the root " +
+      "and the version: read, readVersion, commitAppend, commitMerge, " +
+      "history and cloneTo throw and commit nothing") {
+    withRoot { root =>
+      val fs = fsFor(root)
+      SnapshotTable.commit(spark, root, retain = 10)(_ =>
+        img(1L -> "a", 2L -> "b"))
+      SnapshotTable.commitAppend(spark, root, img(3L -> "c"), retain = 10)
+      val v = SnapshotTable.latestVersion(spark, root).get
+      // the shape of a table written before every version carried one
+      assert(fs.delete(new org.apache.hadoop.fs.Path(s"$root/v=$v/_manifest"),
+        true))
+      val target = s"$root/clone"
+      def refused(what: String)(f: => Any): Unit = {
+        val e = intercept[IllegalStateException](f)
+        assert(e.getMessage.contains(s"$root/v=$v has no _manifest") &&
+          e.getMessage.contains("before every version carried a manifest"),
+          s"$what: ${e.getMessage}")
+        // the listing's FileNotFoundException stays the cause, so a
+        // version vacuumed under a racing commit still reads as a race
+        assert(e.getCause.isInstanceOf[java.io.FileNotFoundException], what)
+      }
+      refused("read")(SnapshotTable.read(spark, root))
+      refused("readVersion")(SnapshotTable.readVersion(spark, root, v))
+      refused("commitAppend")(
+        SnapshotTable.commitAppend(spark, root, img(4L -> "d")))
+      refused("commitMerge")(SnapshotTable.commitMerge(spark, root,
+        img(1L -> "z"), "k")((_, b) => b))
+      refused("history")(SnapshotTable.history(spark, root))
+      refused("cloneTo")(SnapshotTable.cloneTo(spark, root, target))
+      // nothing committed, no segment written, no clone planted
+      assert(SnapshotTable.committedVersions(spark, root).last === v)
+      assert(fs.listStatus(new org.apache.hadoop.fs.Path(root))
+        .count(_.getPath.getName.startsWith("seg-")) === 2)
+      // the clone is refused before any byte is copied
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(target)))
+    }
+  }
+
   test("every commit entry point writes the one version layout: " +
       "_COMMITTED, exactly one of _files/_parent, _schema.ddl, " +
       "_commit_ts and _retain") {
@@ -820,8 +860,18 @@ class SnapshotTableSpec extends AnyFunSuite {
           fs.exists(new org.apache.hadoop.fs.Path(s"$at/v=$v/$f"))
         assert(has("_files") != has("_parent"),
           s"$name: v=$v needs exactly one of _files/_parent")
-        Seq("_COMMITTED", "_schema.ddl", "_commit_ts", "_retain")
-          .foreach(f => assert(has(f), s"$name: v=$v lacks $f"))
+        Seq("_COMMITTED", "_schema.ddl", "_commit_ts", "_retain",
+          "_manifest").foreach(f => assert(has(f), s"$name: v=$v lacks $f"))
+        // the version's own manifest records name, rows and bytes, and
+        // a row count for every file the version added
+        val own = spark.read.parquet(s"$at/v=$v/_manifest")
+        Seq("file", "rows", "bytes").foreach(c => assert(
+          own.columns.contains(c), s"$name: v=$v's manifest lacks $c"))
+        val counted = own.where(col("rows").isNotNull)
+          .select("file").collect().map(_.getString(0)).toSet
+        val added = SnapshotTable.newFiles(spark, at, v)
+        assert(added.forall(counted), s"$name: v=$v added " +
+          s"${added.filterNot(counted)} with no row count")
       }
       assert(SnapshotTable.read(spark, clone).get.orderBy("k").collect()
         === SnapshotTable.read(spark, root).get.orderBy("k").collect())
@@ -2118,25 +2168,6 @@ class SnapshotTableSpec extends AnyFunSuite {
     }
   }
 
-  test("a stats-less delta append writes no parquet manifest (the " +
-      "text-sidecar-only contract survives tiering) and reads fine") {
-    withRoot { root =>
-      val fs = fsFor(root)
-      SnapshotTable.commit(spark, root, retain = 10)(_ => img(1L -> "a"))
-      SnapshotTable.commitAppend(spark, root, img(2L -> "b"),
-        retain = 10)
-      val v2 = SnapshotTable.latestVersion(spark, root).get
-      assert(fs.exists(new org.apache.hadoop.fs.Path(
-        s"$root/v=$v2/_parent")))
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(
-        s"$root/v=$v2/_manifest")),
-        "a stats-less chain must stay free of metadata Spark jobs")
-      assert(SnapshotTable.read(spark, root).get
-        .orderBy("k").collect().map(_.getString(1)).toSeq ===
-        Seq("a", "b"))
-    }
-  }
-
   test("checkpointInterval=1 disables tiering: every carried commit " +
       "writes a full sidecar (the pre-tiering layout, selectable)") {
     withRoot { root =>
@@ -2663,9 +2694,10 @@ class SnapshotTableSpec extends AnyFunSuite {
   private case class GenFile(file: String, rows: Option[Long],
       k: Option[(Long, Long)], n: Option[(Int, Int)],
       bloom: Option[Seq[Long]])
-  /** One generated version: fresh files, removed files, whether it
-    * writes a parquet manifest and with which optional columns (`n`'s
-    * stats as bigint once the column is widened). */
+  /** One generated version: fresh files, removed files, whether its
+    * manifest records stats or only `file`/`rows`/`bytes`, and with
+    * which optional columns (`n`'s stats as bigint once the column is
+    * widened). */
   private case class GenLink(fresh: Seq[GenFile], removed: Seq[String],
       stats: Boolean, withN: Boolean, nLong: Boolean, withBloom: Boolean)
   /** A generated table history: a pre-checkpoint history whose files
@@ -2710,10 +2742,8 @@ class SnapshotTableSpec extends AnyFunSuite {
       addAt <- Gen.choose(0, 8)
       widenAt <- Gen.choose(addAt, 10)
       depth <- Gen.choose(0, 7)
-      // a checkpoint with files; with no delta over it, it must carry
-      // the manifest (a stats-less table has no view to filter)
-      ckpt0 <- link("c", Nil, addAt == 0, widenAt == 0, merge = true)
-      ckpt = if (depth == 0) ckpt0.copy(stats = true) else ckpt0
+      // a checkpoint with files
+      ckpt <- link("c", Nil, addAt == 0, widenAt == 0, merge = true)
       deltas <- (1 to depth).foldLeft(Gen.const(List.empty[GenLink])) {
         (acc, i) => acc.flatMap { done =>
           val live = (ckpt +: done).foldLeft(Seq.empty[String])((l, d) =>
@@ -2747,7 +2777,8 @@ class SnapshotTableSpec extends AnyFunSuite {
     def stats(c: GenChain) = (c.ckpt +: c.deltas).filter(_.stats)
     Seq[(String, GenChain => Boolean)](
       "a removal" -> (_.deltas.exists(_.removed.nonEmpty)),
-      "a stats-less delta" -> (_.deltas.exists(!_.stats)),
+      "a delta whose manifest holds only file/rows/bytes" ->
+        (_.deltas.exists(l => !l.stats && l.fresh.nonEmpty)),
       "ADD COLUMN" -> (c => stats(c).exists(_.withN) &&
         stats(c).exists(!_.withN)),
       "a widened type" -> (c => stats(c).exists(_.nLong) &&
@@ -2767,10 +2798,10 @@ class SnapshotTableSpec extends AnyFunSuite {
         ()
       }
       // lay out every version's sidecars; collect each manifest's rows
-      // by schema variant (withN, nLong, withBloom) so one partitioned
-      // write per variant writes every link's manifest part
+      // by schema variant (stats, withN, nLong, withBloom) so one
+      // partitioned write per variant writes every link's manifest part
       val variants = scala.collection.mutable.Map.empty[
-        (Boolean, Boolean, Boolean), Vector[Row]]
+        (Boolean, Boolean, Boolean, Boolean), Vector[Row]]
         .withDefaultValue(Vector.empty)
       val tops = chains.zipWithIndex.map { case (c, ci) =>
         val root = s"$base/c$ci"
@@ -2790,32 +2821,54 @@ class SnapshotTableSpec extends AnyFunSuite {
           }
           def row(f: GenFile): Row = Row.fromSeq(
             Seq(s"c${ci}v$v", f.file, f.rows.getOrElse(null),
-              f.k.map(_._1).getOrElse(null), f.k.map(_._2).getOrElse(null)) ++
-            (if (!l.withN) Nil else Seq(f.n.map(_._1), f.n.map(_._2))
-              .map(_.map(x => if (l.nLong) x.toLong: Any else x).orNull)) ++
-            (if (l.withBloom) Seq(f.bloom.orNull) else Nil))
-          if (l.stats)
-            variants((l.withN, l.nLong, l.withBloom)) ++= l.fresh.map(row)
+              100L + f.file.length) ++
+            (if (!l.stats) Nil else
+              Seq(f.k.map(_._1).getOrElse(null),
+                f.k.map(_._2).getOrElse(null)) ++
+              (if (!l.withN) Nil else Seq(f.n.map(_._1), f.n.map(_._2))
+                .map(_.map(x => if (l.nLong) x.toLong: Any else x).orNull)) ++
+              (if (l.withBloom) Seq(f.bloom.orNull) else Nil)))
+          val variant =
+            if (l.stats) (true, l.withN, l.nLong, l.withBloom)
+            else (false, false, false, false)
+          variants(variant) ++= l.fresh.map(row)
         }
         (root, versions.size - 1L, live.toSet)
       }
-      variants.foreach { case ((withN, nLong, withBloom), rows) =>
+      val fileFields = Seq(StructField("file", StringType),
+        StructField("rows", LongType), StructField("bytes", LongType))
+      variants.foreach { case ((stats, withN, nLong, withBloom), rows) =>
         val nType = if (nLong) LongType else IntegerType
-        val schema = StructType(Seq(
-          StructField("d", StringType), StructField("file", StringType),
-          StructField("rows", LongType), StructField("min__k", LongType),
-          StructField("max__k", LongType)) ++
+        val schema = StructType((StructField("d", StringType) +: fileFields) ++
+          (if (!stats) Nil else Seq(StructField("min__k", LongType),
+            StructField("max__k", LongType))) ++
           (if (withN) Seq(StructField("min__n", nType),
             StructField("max__n", nType)) else Nil) ++
           (if (withBloom) Seq(StructField("bloom__k", ArrayType(LongType)))
            else Nil))
-        val out = s"$base/w-$withN-$nLong-$withBloom"
+        val out = s"$base/w-$stats-$withN-$nLong-$withBloom"
         spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
           .coalesce(1).write.partitionBy("d").parquet(out)
         rows.map(_.getString(0)).distinct.foreach { d =>
           val Array(ci, v) = d.stripPrefix("c").split("v")
           Files.move(Paths.get(s"$out/d=$d"),
             Paths.get(s"$base/c$ci/v=$v/_manifest"))
+        }
+      }
+      // a version with no fresh file still writes its manifest: one
+      // zero-row part
+      val empty = s"$base/empty"
+      spark.createDataFrame(java.util.Collections.emptyList[Row],
+        StructType(fileFields)).coalesce(1).write.parquet(empty)
+      val emptyPart = Files.list(Paths.get(empty)).toArray.map(_.toString)
+        .filter(_.endsWith(".parquet")).head
+      chains.zipWithIndex.foreach { case (c, ci) =>
+        (0 until c.old.size + 1 + c.deltas.size).foreach { v =>
+          val m = Paths.get(s"$base/c$ci/v=$v/_manifest")
+          if (!Files.exists(m)) {
+            Files.createDirectories(m)
+            Files.copy(Paths.get(emptyPart), m.resolve("part-0.parquet"))
+          }
         }
       }
       def range(c: String, lo: Any, hi: Any): Column =
@@ -2828,8 +2881,8 @@ class SnapshotTableSpec extends AnyFunSuite {
         val view = SnapshotTable.statsManifest(spark, root, top)
         val cols = view.schema.fieldNames.toSet
         val bloom = SnapshotTable.bloomHitExpr("k", c.hashes)
-        // "rows" and "none" are false on a file-only row (NULL rows), as
-        // an empty batch's candidate condition is on every row
+        // "rows" is false where a generated row's count is NULL, as an
+        // empty batch's candidate condition "none" is on every row
         val conds: Seq[(String, Column)] =
           Seq("rows" -> (col("rows") >= c.lo % 50), "none" -> lit(false)) ++
           (if (!cols("min__k")) Nil else Seq(
@@ -3077,9 +3130,8 @@ class SnapshotTableSpec extends AnyFunSuite {
       SnapshotTable.commitAppend(spark, root, kvFrame(rows.map {
         case (k, n, s) => (k + 500, n, s) }, 3).withColumnRenamed("k", "key"),
         retain = 10)
-      // appends and merges inherit the Bloom columns at the default width
-      check(root, Seq("k"), Seq("k"), SnapshotTable.defaultBloomBits,
-        what = "renamed column")
+      // appends and merges inherit the Bloom columns at the table's width
+      check(root, Seq("k"), Seq("k"), what = "renamed column")
     }
     withRoot { root =>
       SnapshotTable.commitWithSkipping(spark, root, Seq("k", "s"),
@@ -3088,8 +3140,41 @@ class SnapshotTableSpec extends AnyFunSuite {
       SnapshotTable.commitMerge(spark, root,
         kvFrame(Seq((37L, -1, "m"), (999L, -2, "new")), 1), "k",
         retain = 10)((_, b) => b)
-      check(root, Seq("k", "s"), Seq("k", "s"), SnapshotTable.defaultBloomBits,
-        what = "merge delta link")
+      check(root, Seq("k", "s"), Seq("k", "s"), what = "merge delta link")
+    }
+  }
+
+  test("commits that inherit Bloom columns write them at the table's " +
+      "width: append, merge, DV merge and DV fold keep a 4096-bit table " +
+      "at 64 words per file") {
+    withRoot { root =>
+      import spark.implicits._
+      def kv(ks: Seq[Long], tag: String) = ks.map(k => (k, s"$tag$k"))
+        .toDF("k", "v").repartition(2)
+      SnapshotTable.commitWithSkipping(spark, root, Seq("k"), Seq("k"),
+        bloomBits = 4096, retain = 10)(_ => kv(1L to 40L, "a"))
+      def words(what: String): Unit = {
+        val v = SnapshotTable.latestVersion(spark, root).get
+        val sizes = SnapshotTable.statsManifest(spark, root, v)
+          .where(col("bloom__k").isNotNull)
+          .select(size(col("bloom__k"))).as[Int].collect().toSet
+        assert(sizes === Set(64), s"$what: words per file $sizes")
+      }
+      words("create")
+      SnapshotTable.commitAppend(spark, root, kv(41L to 60L, "b"),
+        retain = 10)
+      words("commitAppend")
+      SnapshotTable.commitMerge(spark, root, kv(Seq(3L, 70L), "m"), "k",
+        retain = 10)((_, b) => b)
+      words("commitMerge")
+      SnapshotTable.commitMergeDV(spark, root, kv(Seq(5L, 71L), "d"), "k",
+        retain = 10)((_, b) => b)
+      words("commitMergeDV")
+      SnapshotTable.foldDeletionVectors(spark, root, retain = 10)
+      words("foldDeletionVectors")
+      // the narrower filters still answer every written key
+      val hit = SnapshotTable.readPrunedIn(spark, root, "k", Seq(3L, 71L))
+      assert(hit.df.where(col("k").isin(3L, 71L)).count() === 2)
     }
   }
 
