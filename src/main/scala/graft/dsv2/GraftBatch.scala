@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
-import graft.streaming.SnapshotTable
+import graft.streaming.{LakeManifest, SnapshotTable}
 
 /** NATIVE DSv2 batch read for the snapshot scan (round-19 verdict
   * item 2 — the round-18 door executed through `V1Scan` →
@@ -98,13 +98,15 @@ class GraftBatch(root: String, version: Long, required: StructType,
     val fullPhys = SnapshotTable.physSchema(
       SnapshotTable.schemaOfVersion(s, root, version), cm)
     val physReq = SnapshotTable.physSchema(required, cm)
-    val dv = SnapshotTable.dvOf(s, root, version)
+    val dv = SnapshotTable.dvKeyOf(s, root, version)
+    val dvDir = SnapshotTable.dvDirOf(root, version)
     val (dvByFile, dvShardFiles, dvSchema)
         : (Map[String, Set[Any]], Map[String, Seq[(String, Long)]],
            StructType) = dv match {
       case None => (Map.empty, Map.empty, new StructType())
-      case Some((key, entries)) =>
-        // SMALL vector sets driver-materialize for the broadcast
+      case Some(key) =>
+        // SMALL vector sets are read on the driver (the parts' footer
+        // row counts size them; no Spark job) for the broadcast
         // filter. ABOVE the cap (round-20 verdict item 2) the door
         // switches to the DISTRIBUTED plan instead of refusing: one
         // Spark job shards the entries by data file into a
@@ -113,7 +115,7 @@ class GraftBatch(root: String, version: Long, required: StructType,
         // ONLY ITS OWN file's shard executor-side — a per-file hash
         // anti-join whose build side never touches the driver. The
         // default cap is deliberately LOW: the broadcast path pays
-        // the driver collect + Set build PER QUERY (BENCH_LOG round
+        // the driver read + Set build PER QUERY (BENCH_LOG round
         // 20, 20M rows/16 files: 50k entries broadcast 2.9 s ≈
         // distributed 2.7 s; 500k: 7.1 vs 3.0; 6M: 77 vs 9.4 —
         // distributed dominates everywhere except trivially small
@@ -126,33 +128,26 @@ class GraftBatch(root: String, version: Long, required: StructType,
           throw new IllegalStateException(
             s"DV key '$key' not in physical schema at $root v=$version"))
           .dataType
-        val n = entries.count()
-        if (n <= maxEntries) {
-          val toInternal =
-            CatalystTypeConverters.createToCatalystConverter(keyType)
-          (entries.collect().toSeq
-            .groupBy(_.getString(0))
-            .map { case (f, rows) =>
-              (f, rows.map(r => toInternal(r.get(1))).toSet) },
+        if (LakeManifest.dvEntryCount(s, dvDir) <= maxEntries)
+          (LakeManifest.dvEntries(s, dvDir, keyType),
             Map.empty[String, Seq[(String, Long)]], new StructType())
-        } else {
+        else {
+          val entries = LakeManifest.readSidecarParquet(s, fs, dvDir)
           // memoized per (root, version): the shard layout is
-          // immutable once staged, and each query builds a fresh
-          // GraftBatch — without the memo every over-cap query
-          // repays the distinct-files job plus one listStatus per
-          // DV'd file at plan time
-          // bound check OUTSIDE computeIfAbsent: clear() inside the
-          // mapping function would lock bins under a held bin lock
+          // immutable once staged; without the memo every over-cap
+          // query repays the staging job and one listStatus per DV'd
+          // file at plan time. The bound check stays OUTSIDE
+          // computeIfAbsent: clear() inside the mapping function would
+          // lock bins under a held bin lock
           if (GraftBatch.shardMemo.size > 64)
             GraftBatch.shardMemo.clear()
           val shards = GraftBatch.shardMemo.computeIfAbsent(
             (root, version), { _ =>
               val staged =
                 GraftBatch.stageDvShards(s, root, version, entries)
-              // file names only (bounded by the file count, never
-              // the entry count) — entries stay distributed
-              val dvFiles = entries.select("file").distinct()
-                .collect().map(_.getString(0))
+              // file names only, read on the driver (bounded by the
+              // file count); the entries stay distributed
+              val dvFiles = LakeManifest.sidecarFiles(s, dvDir).toSeq
               val sfs = new HPath(staged)
                 .getFileSystem(s.sparkContext.hadoopConfiguration)
               dvFiles.map { f =>
@@ -177,7 +172,7 @@ class GraftBatch(root: String, version: Long, required: StructType,
     // masked files must surface the key column to evaluate the
     // tombstones; append it when the projection pruned it away
     val (dvKeyPhys, maskedSchema, keyAppended) = dv match {
-      case Some((key, _)) if masked.nonEmpty =>
+      case Some(key) if masked.nonEmpty =>
         if (physReq.fieldNames.contains(key)) (key, physReq, false)
         else (key, StructType(physReq.fields :+
           fullPhys.fields.find(_.name == key).get), true)

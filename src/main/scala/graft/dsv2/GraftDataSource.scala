@@ -713,8 +713,14 @@ class GraftScan(root: String, version: Long, required: StructType,
     * filters ([[filter]]) before partition planning. */
   @volatile private var kept: Seq[String] = kept0
 
-  override def toBatch: org.apache.spark.sql.connector.read.Batch =
+  /** One batch per scan, so its plan state (the deletion-vector read
+    * included) is built once per statement: Spark asks for `toBatch`
+    * more than once while it plans. The batch rebuilds its state when
+    * runtime filtering narrowed the kept set in between. */
+  private lazy val batch =
     new GraftBatch(root, version, required, () => kept, pushed)
+
+  override def toBatch: org.apache.spark.sql.connector.read.Batch = batch
 
   /** RUNTIME file pruning (round 19 — the DSv2
     * `SupportsRuntimeV2Filtering` seam, Spark's dynamic-partition-

@@ -214,8 +214,9 @@ private[dsv2] object GraftProcedures {
       val s = spark
       val r = root(input.getUTF8String(0).toString)
       val cur = SnapshotTable.latestVersion(s, r).get
-      val folded = SnapshotTable.dvOf(s, r, cur)
-        .map(_._2.select("file").distinct().count().toInt).getOrElse(0)
+      val folded = SnapshotTable.dvKeyOf(s, r, cur).fold(0)(_ =>
+        graft.streaming.LakeManifest.sidecarFiles(s,
+          SnapshotTable.dvDirOf(r, cur)).size)
       val v = SnapshotTable.foldDeletionVectors(s, r, tableRetain(r))
       result(out, v, folded)
     }

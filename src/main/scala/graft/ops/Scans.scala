@@ -902,7 +902,7 @@ object Scans {
       val root = sqlMaintRoot(s, d)
       val st = graft.streaming.SnapshotTable
       val v = st.latestVersion(s, root).get
-      val maintained = st.dvOf(s, root, v).isEmpty &&
+      val maintained = st.dvKeyOf(s, root, v).isEmpty &&
         st.fileCount(s, root, v) == 1 &&
         st.committedVersions(s, root).size == 2
       s.read.format("graft").load(root)
@@ -1081,8 +1081,9 @@ object Scans {
       val cv = st.latestVersion(s, root).get
       val cloned =
         st.dataFiles(s, root, cv) == st.dataFiles(s, src, sv) &&
-        st.dvOf(s, root, cv).nonEmpty &&
-        st.statsManifest(s, root, cv).columns.contains("min__user_id")
+        st.dvKeyOf(s, root, cv).nonEmpty &&
+        graft.streaming.LakeManifest.withView(s, root, cv)(
+          _.has("min__user_id"))
       st.read(s, root).get.select(imageCols: _*)
         .withColumn("cloned", lit(cloned))
         .orderBy("user_id")
@@ -1938,7 +1939,7 @@ object Scans {
     val root = s"$wh/t"
     val st = graft.streaming.SnapshotTable
     val cat = sqlCatalogFor(s, wh)
-    if (st.dvOf(s, root, st.latestVersion(s, root).get).nonEmpty) {
+    if (st.dvKeyOf(s, root, st.latestVersion(s, root).get).nonEmpty) {
       s.sql(s"CALL $cat.fold_dv(table => 't')").collect(); ()
     }
     if (st.fileCount(s, root, st.latestVersion(s, root).get) > 1) {

@@ -25,6 +25,17 @@ class ColumnMappingSpec extends AnyFunSuite {
     pairs.toDF("k", "v")
   }
 
+  /** Which of `_parent` (a delta) and `_files` (a checkpoint) the
+    * latest version of `root` carries. */
+  private def latestShape(root: String): String = {
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val v = SnapshotTable.latestVersion(spark, root).get
+    Seq("_parent", "_files").filter(f =>
+      fs.exists(new org.apache.hadoop.fs.Path(s"$root/v=$v/$f")))
+      .mkString(",")
+  }
+
   private def segDirs(root: String): Set[String] = {
     val p = new org.apache.hadoop.fs.Path(root)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -355,12 +366,16 @@ class ColumnMappingSpec extends AnyFunSuite {
       // add + drop inside the elements, also metadata-only
       SnapshotTable.addColumn(spark, root, "items.element.note",
         org.apache.spark.sql.types.StringType, retain = 6)
+      // the enclosing struct's type changed, but no stats column did:
+      // under the checkpoint interval the commit is a delta
+      assert(latestShape(root) === "_parent", "nested ADD COLUMN")
       val withNote = SnapshotTable.read(spark, root).get
       assert(withNote.selectExpr("items[0].note").collect()
         .forall(_.isNullAt(0)),
         "existing element rows must serve NULL for the added leaf")
       SnapshotTable.dropColumn(spark, root, "items.element.tag",
         retain = 6)
+      assert(latestShape(root) === "_parent", "nested DROP COLUMN")
       val dropped = SnapshotTable.read(spark, root).get
       val elemFields = dropped.schema("items").dataType
         .asInstanceOf[org.apache.spark.sql.types.ArrayType]
@@ -422,6 +437,11 @@ class ColumnMappingSpec extends AnyFunSuite {
 
       SnapshotTable.widenColumn(spark, root, "k",
         org.apache.spark.sql.types.LongType, retain = 6)
+      // a widening forces a checkpoint with the column's stats retyped
+      assert(latestShape(root) === "_files")
+      assert(SnapshotTable.statsManifest(spark, root,
+        SnapshotTable.latestVersion(spark, root).get).schema("min__k")
+        .dataType === org.apache.spark.sql.types.LongType)
       SnapshotTable.widenColumn(spark, root, "f",
         org.apache.spark.sql.types.DoubleType, retain = 6)
       assert(segDirs(root) === segsBefore,

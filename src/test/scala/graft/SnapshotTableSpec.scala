@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.SnapshotTable
+import graft.streaming.{LakeManifest, SnapshotTable}
 
 /** Snapshot-isolation guarantees of the versioned table surface:
   * pinned readers survive concurrent commits, lost races fail loudly,
@@ -2360,13 +2360,11 @@ class SnapshotTableSpec extends AnyFunSuite {
       def same(dir: String): Seq[String] = {
         val ps = parts(dir)
         assert(ps.nonEmpty, s"no parquet parts under $dir")
-        val paths = ps.map(_.getPath.toString)
         val (typed, jobs) = jobsOf(
-          SnapshotTable.readParquetTyped(spark, ps.head, paths).schema)
+          LakeManifest.readSidecarParquet(spark, fs, dir).schema)
         assert(jobs.isEmpty, s"typed read of $dir launched $jobs")
-        assert(typed === spark.read.parquet(paths: _*).schema, dir)
-        assert(SnapshotTable.footerFieldNames(spark, ps.head) ===
-          typed.fieldNames.toSeq, dir)
+        assert(typed === spark.read.parquet(ps.map(_.getPath.toString): _*)
+          .schema, dir)
         typed.fieldNames.toSeq
       }
       val manifest = same(s"$root/v=$vDv/_manifest")
@@ -2686,6 +2684,85 @@ class SnapshotTableSpec extends AnyFunSuite {
         assert(SnapshotTable.read(spark, root).get.count() === 45)
       }
     }
+    // a plain-commit chain that crosses a checkpoint and then holds one
+    // deletion-vector version: the checkpoint append runs only its
+    // segment write, cloneTo only its byte copy, and history, a
+    // type-widening commit and restore none (the checkpoint manifest,
+    // restore and cloneTo each ran one more, Spark-written, and
+    // history two aggregates and a distinct count per version)
+    val conf = "spark.graft.manifestCheckpointInterval"
+    val prior = spark.conf.getOption(conf)
+    spark.conf.set(conf, "3")
+    try withRoot { root =>
+      import spark.implicits._
+      def jobs[A](f: => A): Seq[String] = withoutAqe(jobsOf(f)._2)
+      def rows(ks: Seq[Long], v: String) =
+        ks.map(k => (k, v, k.toInt)).toDF("k", "v", "n")
+      SnapshotTable.commit(spark, root, retain = 10)(_ =>
+        rows(0L until 20L, "v").repartition(2))
+      Seq(20L, 21L).foreach(k =>
+        SnapshotTable.commitAppend(spark, root, rows(Seq(k), "a"),
+          retain = 10))
+      val checkpoint = jobs(SnapshotTable.commitAppend(spark, root,
+        rows(Seq(22L), "a"), retain = 10))
+      val fs = fsFor(root)
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/v=3/_parent")),
+        "v=3 must be a checkpoint")
+      SnapshotTable.commitMergeDV(spark, root, rows(Seq(5L), "d"), "k",
+        retain = 10)((_, b) => b)
+      val dvImage = SnapshotTable.readVersion(spark, root, 4L)
+        .collect().toSet
+      val history = jobs(SnapshotTable.history(spark, root))
+      val widen = jobs(SnapshotTable.widenColumn(spark, root, "n",
+        org.apache.spark.sql.types.LongType, retain = 10))
+      val restore = jobs(SnapshotTable.restore(spark, root, 4L, retain = 10))
+      withRoot { dst =>
+        val clone = jobs(SnapshotTable.cloneTo(spark, root, s"$dst/t",
+          retain = 10))
+        Seq(("CALL history", history, 0), ("checkpoint commitAppend",
+          checkpoint, 1), ("restore", restore, 0), ("cloneTo", clone, 1),
+          ("widenColumn", widen, 0)).foreach { case (what, names, n) =>
+          assert(names.size === n, s"$what: ${names.mkString("; ")}") }
+        // the restored and the cloned version serve v=4's image through
+        // their byte-copied deletion vectors
+        assert(SnapshotTable.read(spark, root).get.collect().toSet ===
+          dvImage)
+        assert(SnapshotTable.read(spark, s"$dst/t").get.collect().toSet ===
+          dvImage)
+        assert(SnapshotTable.history(spark, root).map(_.dvFiles) ===
+          Seq(0, 0, 0, 0, 1, 1, 1))
+      }
+    } finally prior.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
+  }
+
+  test("a pruned SELECT through the graft catalog on a deletion-vector " +
+      "version runs 2 Spark jobs: its scan reads the vectors once, on " +
+      "the driver") {
+    withRoot { wh =>
+      import spark.implicits._
+      val cat = "graft_pruned_jobs"
+      spark.conf.set(s"spark.sql.catalog.$cat", "graft.dsv2.GraftCatalog")
+      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      try {
+        val root = s"$wh/t"
+        SnapshotTable.commitWithStats(spark, root, "k", retain = 10)(_ =>
+          (0L until 40L).map(k => (k, k * 10)).toDF("k", "p")
+            .repartitionByRange(4, col("k")))
+        SnapshotTable.commitMergeDV(spark, root,
+          Seq((5L, 0L), (12L, 0L)).toDF("k", "p"), "k",
+          retain = 10)((_, b) => b)
+        assert(SnapshotTable.dvOf(spark, root, 1L).isDefined)
+        val (r, names) = jobsOf(spark.sql("SELECT count(*), sum(p) FROM " +
+          s"$cat.t WHERE k BETWEEN 3 AND 14").collect())
+        // the aggregate's two stage jobs; the scan's plan state read the
+        // vectors with a count and a collect, twice, before
+        assert(names.size === 2, names.mkString("; "))
+        assert(r.head.getLong(0) === 12L && r.head.getLong(1) === 850L)
+      } finally {
+        spark.conf.unset(s"spark.sql.catalog.$cat")
+        spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
+      }
+    }
   }
 
   /** One generated manifest row: a data file and what its link's
@@ -2762,6 +2839,79 @@ class SnapshotTableSpec extends AnyFunSuite {
     } yield GenChain(old, ckpt, deltas, lo, lo + w, ins, nLo, hashes)
   }
 
+  /** Version `v`'s manifest view as Spark reads it — the reference the
+    * driver reader is checked against: each chain link's manifest parts
+    * read by `spark.read.parquet`, minus the files newer links removed,
+    * unioned by name. */
+  private def sparkView(root: String,
+      v: Long): org.apache.spark.sql.DataFrame = {
+    import java.nio.file.{Files, Paths}
+    def lines(p: String): Seq[String] =
+      if (!Files.exists(Paths.get(p))) Nil
+      else new String(Files.readAllBytes(Paths.get(p)), "UTF-8")
+        .split("\n").toSeq.filter(_.nonEmpty)
+    // (version, files it removed), newest first
+    def chain(x: Long): List[(Long, Seq[String])] =
+      lines(s"$root/v=$x/_parent") match {
+        case Seq(p) => (x, lines(s"$root/v=$x/_removed")) ::
+          chain(p.trim.toLong)
+        case _ => List((x, Nil))
+      }
+    def rows(x: Long) = spark.read.parquet(new java.io.File(
+      s"$root/v=$x/_manifest").listFiles().map(_.toString)
+      .filter(_.endsWith(".parquet")).sorted.toSeq: _*)
+    val oldest :: newer = chain(v).reverse
+    newer.foldLeft(rows(oldest._1)) { case (older, (x, removed)) =>
+      (if (removed.isEmpty) older
+       else older.where(!col("file").isin(removed: _*)))
+        .unionByName(rows(x), allowMissingColumns = true)
+    }
+  }
+
+  /** The driver reader's answers on version `v` against Spark's
+    * aggregates over `view` ([[sparkView]]), under the same exactness
+    * gates: `metadataAggregates` COUNT and, where the view records
+    * stats on `k`, MIN/MAX/SUM; `filesStatsFor` on a random subset of
+    * the `live` files; and `history`'s rows and bytes of `v`. */
+  private def checkAggregates(what: String, root: String, v: Long,
+      view: org.apache.spark.sql.DataFrame, live: Set[String],
+      rnd: scala.util.Random): Unit = {
+    val stats = view.columns.contains("min__k")
+    def bad(c: String) = sum(when(col("rows").isNull ||
+      (col("rows") > 0 && col(c).isNull), 1L).otherwise(0L))
+    val a = view.agg(count(lit(1)), (Seq(count("rows"), sum("rows"),
+      count("bytes"), sum("bytes")) ++ (if (!stats) Nil else Seq(
+      min("min__k"), bad("min__k"), max("max__k"), bad("max__k"),
+      sum(col("sum__k")), bad("sum__k")))): _*).first()
+    val n = live.size.toLong
+    // complete-or-NULL: a sum counts only when every file records it
+    def tally(i: Int): Option[Long] =
+      if (a.getLong(i) != n) None
+      else Some(if (a.isNullAt(i + 1)) 0L else a.getLong(i + 1))
+    val ks = if (stats) Seq("k") else Nil
+    def nulls = ks.map(_ -> (null: Any)).toMap
+    val want =
+      if (n == 0) Some((0L, nulls, nulls, nulls))
+      else if (a.getLong(0) != n || tally(1).isEmpty ||
+        (stats && Seq(6, 8, 10).exists(a.getLong(_) != 0L))) None
+      else Some((tally(1).get,
+        ks.map(_ -> a.get(5)).toMap, ks.map(_ -> a.get(7)).toMap,
+        ks.map(_ -> Option(a.getDecimal(9)).map(_.longValueExact(): Any)
+          .orNull).toMap))
+    assert(SnapshotTable.metadataAggregates(spark, root, v,
+      wantCount = true, ks, ks, ks) === want, s"$what: metadataAggregates")
+    val subset = live.toSeq.sorted.filter(_ => rnd.nextBoolean())
+    val s = view.where(col("file").isin(subset: _*))
+      .agg(sum("bytes"), sum("rows")).first()
+    def opt(i: Int) = if (s.isNullAt(i)) None else Some(s.getLong(i))
+    assert(SnapshotTable.filesStatsFor(spark, root, v, subset) ===
+      ((opt(0), opt(1))), s"$what: filesStatsFor")
+    val h = SnapshotTable.history(spark, root).last
+    assert(h.version === v && h.files === live.size &&
+      h.bytes === tally(3) && h.rows === tally(1) && h.dvFiles === 0,
+      s"$what: history $h")
+  }
+
   test("manifestFiles equals the manifest view's filter on 120 random " +
       "chains: appends, merges with removals, stats-less links, ADD " +
       "COLUMN and a widened type mid-chain, NULL stats, Bloom columns, " +
@@ -2813,6 +2963,9 @@ class SnapshotTableSpec extends AnyFunSuite {
           val fullAt = v == 0 || v == c.old.size
           if (fullAt) live = Nil
           live = live.filterNot(l.removed.contains) ++ l.fresh.map(_.file)
+          // committed, so history reads every version
+          text(s"$dir/_COMMITTED", Nil)
+          text(s"$dir/_commit_ts", Seq(v.toString))
           if (fullAt) text(s"$dir/_files", live)
           else {
             text(s"$dir/_parent", Seq((v - 1).toString))
@@ -2824,7 +2977,9 @@ class SnapshotTableSpec extends AnyFunSuite {
               100L + f.file.length) ++
             (if (!l.stats) Nil else
               Seq(f.k.map(_._1).getOrElse(null),
-                f.k.map(_._2).getOrElse(null)) ++
+                f.k.map(_._2).getOrElse(null),
+                f.k.map(k => java.math.BigDecimal.valueOf(k._1 + k._2))
+                  .orNull) ++
               (if (!l.withN) Nil else Seq(f.n.map(_._1), f.n.map(_._2))
                 .map(_.map(x => if (l.nLong) x.toLong: Any else x).orNull)) ++
               (if (l.withBloom) Seq(f.bloom.orNull) else Nil)))
@@ -2841,7 +2996,8 @@ class SnapshotTableSpec extends AnyFunSuite {
         val nType = if (nLong) LongType else IntegerType
         val schema = StructType((StructField("d", StringType) +: fileFields) ++
           (if (!stats) Nil else Seq(StructField("min__k", LongType),
-            StructField("max__k", LongType))) ++
+            StructField("max__k", LongType),
+            StructField("sum__k", DecimalType(38, 0)))) ++
           (if (withN) Seq(StructField("min__n", nType),
             StructField("max__n", nType)) else Nil) ++
           (if (withBloom) Seq(StructField("bloom__k", ArrayType(LongType)))
@@ -2875,10 +3031,11 @@ class SnapshotTableSpec extends AnyFunSuite {
         col(s"min__$c").isNull || col(s"max__$c").isNull ||
           (col(s"max__$c") >= lit(lo) && col(s"min__$c") <= lit(hi))
       // one chain's check: the Spark filter over its view against the
-      // driver-side selection, for every condition its view can answer
+      // driver-side selection, for every condition its view can answer,
+      // and Spark's aggregates over the view against the driver reader's
       def check(ci: Int): Unit = {
         val (c, (root, top, live)) = (chains(ci), tops(ci))
-        val view = SnapshotTable.statsManifest(spark, root, top)
+        val view = sparkView(root, top)
         val cols = view.schema.fieldNames.toSet
         val bloom = SnapshotTable.bloomHitExpr("k", c.hashes)
         // "rows" is false where a generated row's count is NULL, as an
@@ -2901,12 +3058,22 @@ class SnapshotTableSpec extends AnyFunSuite {
         conds.zipWithIndex.foreach { case ((name, cond), i) =>
           val want = expect.filter(_.getBoolean(i + 1))
             .map(_.getString(0)).toSet
-          val got = SnapshotTable.manifestFiles(spark, root, top, cond)
+          val got = LakeManifest.manifestFiles(spark, root, top, cond)
           assert(got.distinct.size === got.size && got.toSet === want,
             s"seed $seed, chain $ci, $name: $c")
         }
-        assert(SnapshotTable.manifestFiles(spark, root, top, lit(true))
+        assert(LakeManifest.manifestFiles(spark, root, top, lit(true))
           .toSet === live, s"seed $seed, chain $ci: view != live files")
+        checkAggregates(s"seed $seed, chain $ci", root, top, view, live,
+          new scala.util.Random(seed + ci))
+        // a driver-written checkpoint of the view reads back as its rows
+        val ckpt = s"$base/ckpt/c$ci"
+        LakeManifest.writeCheckpoint(spark, root, top, ckpt)
+        val back = spark.read.parquet(ckpt)
+        assert(back.columns.toSeq === view.columns.toSeq &&
+          back.collect().map(_.toString).sorted.toSeq ===
+            view.collect().map(_.toString).sorted.toSeq,
+          s"seed $seed, chain $ci: checkpoint")
       }
       // four chains at a time: each check is a few small Spark jobs and
       // driver reads, and concurrent selections share the session
@@ -3196,27 +3363,31 @@ class SnapshotTableSpec extends AnyFunSuite {
       // the same rows written by Spark, as the checkpoint writes its part
       val driverDir = s"$root/v=$v/_manifest"
       val sparkDir = s"$root/spark_manifest"
-      SnapshotTable.readSidecarParquet(spark, fs, driverDir).coalesce(1)
+      LakeManifest.readSidecarParquet(spark, fs, driverDir).coalesce(1)
         .write.parquet(sparkDir)
-      val driver = SnapshotTable.readSidecarParquet(spark, fs, driverDir)
-      val viaSpark = SnapshotTable.readSidecarParquet(spark, fs, sparkDir)
+      val driver = LakeManifest.readSidecarParquet(spark, fs, driverDir)
+      val viaSpark = LakeManifest.readSidecarParquet(spark, fs, sparkDir)
       assert(driver.schema === viaSpark.schema)
       assert(driver.collect().toSeq === viaSpark.collect().toSeq)
       def parts(dir: String) = fs.listStatus(new org.apache.hadoop.fs.Path(
         dir)).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
       assert(parts(driverDir).map(_.getPath.getName).forall(n =>
         n.startsWith("part-") && n.endsWith(".parquet")))
-      assert(SnapshotTable.footerFieldNames(spark, parts(driverDir).head) ===
-        SnapshotTable.footerFieldNames(spark, parts(sparkDir).head))
-      // the view unions the Spark-written base part with the driver-
-      // written link, and the driver selection agrees with its filter
-      val view = SnapshotTable.statsManifest(spark, root, v)
-      assert(view.schema === SnapshotTable.statsManifest(spark, root,
-        v - 1).schema)
+      // Spark's union of the Spark-written base part with the driver-
+      // written link is the view the driver reads, and the driver
+      // selection agrees with its filter
+      val view = sparkView(root, v)
+      assert(view.schema === sparkView(root, v - 1).schema)
       assert(view.select("file").as[String].collect().sorted.toSeq ===
         SnapshotTable.dataFiles(spark, root, v).sorted)
+      val driverView = SnapshotTable.statsManifest(spark, root, v)
+      def typed(df: org.apache.spark.sql.DataFrame) =
+        df.schema.map(f => (f.name, f.dataType))
+      assert(typed(driverView) === typed(view) &&
+        driverView.collect().map(_.toString).sorted.toSeq ===
+          view.collect().map(_.toString).sorted.toSeq)
       val cond = col("max__k") >= lit(45L) || col("min__k") <= lit(3L)
-      assert(SnapshotTable.manifestFiles(spark, root, v, cond) ===
+      assert(LakeManifest.manifestFiles(spark, root, v, cond) ===
         view.where(cond).select("file").as[String].collect().sorted.toSeq)
     }
   }
